@@ -42,17 +42,38 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # inferred StructType per path is the metastore equivalent: METADATA
 # only, in-process only (dies with the interpreter), and every query
 # still computes its RESULT from the parquet bytes on every run.
+# Each entry is path -> (file signature, schema): a table rewritten in
+# the session gets a new signature and so a fresh inference, instead of
+# a stale schema whose by-name column matching would read NULLs.
 _SCHEMA_CACHE: dict = {}
+
+
+def _file_signature(path: str) -> tuple:
+    """((relpath, size, mtime_ns), ...) of every file under ``path`` (a
+    file or a table directory); ``os.stat`` only, no Spark job."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    sig = []
+    for root, _, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            sig.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(sig))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    schema = _SCHEMA_CACHE.get(path)
-    if schema is None:
+    sig = _file_signature(path)
+    cached = _SCHEMA_CACHE.get(path)
+    if cached is not None and cached[0] == sig:
+        schema = cached[1]
+    else:
         schema = spark.read.parquet(path).schema  # one footer job per path
-        _SCHEMA_CACHE[path] = schema
+        _SCHEMA_CACHE[path] = (sig, schema)
     df = spark.read.schema(schema).parquet(path)
     if name == "events":
         df = _normalize_events(df)

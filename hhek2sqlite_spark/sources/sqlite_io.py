@@ -8,11 +8,16 @@ The reference copies MDB<->SQLite row-at-a-time with string-built INSERTs
   query run on DataFrames; Parquet is the at-scale storage.
 - The *SQLite file* is a single-node interchange container by nature
   (one file, one writer). I/O therefore runs driver-side over the stdlib
-  ``sqlite3`` module, streamed via ``toLocalIterator`` (bounded memory)
-  with parameterized batched INSERTs inside one transaction per table
-  (the reference's T1 shape; its per-row-transaction T2 on Transaktioner
-  is a documented anti-pattern we do not replicate, SURVEY.md 2.11).
-  On a cluster with a JDBC SQLite driver on the classpath the same
+  ``sqlite3`` module and crosses into Spark in Arrow form, so no Python
+  worker runs at this edge: ``read_table`` turns the fetched rows into a
+  registry-typed ``pyarrow.Table`` and hands it to ``createDataFrame``
+  (a JVM local relation); ``write_table`` collects the whole table with
+  one ``toArrow`` and binds it with parameterized batched INSERTs inside
+  one transaction per table (the reference's T1 shape; its
+  per-row-transaction T2 on Transaktioner is a documented anti-pattern
+  we do not replicate, SURVEY.md 2.11). Both directions hold one table
+  in driver memory, the same envelope as the ``fetchall`` that reads
+  it. On a cluster with a JDBC SQLite driver on the classpath the same
   DataFrames go through ``df.write.jdbc`` unchanged; the hhek tables are
   dimension-sized, so driver-side I/O is not a scale bottleneck — the
   100 TB path is Parquet.
@@ -43,8 +48,12 @@ import os
 import sqlite3
 from datetime import datetime
 from decimal import Decimal
+from itertools import islice
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 from pyspark.sql.types import BooleanType, DecimalType
 
 from hhek2sqlite_spark.schema.registry import (
@@ -65,6 +74,10 @@ def _to_sqlite_value(v):
     if isinstance(v, bool):
         return int(v)
     if isinstance(v, datetime):
+        if v.tzinfo is not None:
+            # Arrow hands TimestampType back UTC-aware; store the naive
+            # local wall time a collected Row carries
+            v = v.astimezone().replace(tzinfo=None)
         return v.isoformat(sep=" ")
     return v
 
@@ -111,8 +124,8 @@ def _from_sqlite_value(v, dtype):
 
 def write_table(df: DataFrame, db_path: str, table: str, *, batch_size: int = 10_000) -> int:
     """CREATE (dialect DDL from the registry) + truncate-before-load (S6)
-    + batched parameterized inserts in one transaction (T1). Returns the
-    row count written."""
+    + batched parameterized inserts in one transaction (T1), fed by one
+    ``toArrow`` collect. Returns the row count written."""
     spec = HHEK_TABLES.get(table)
     # registry DDL requires EXACTLY the registry's column set; a table
     # from a self-describing source (Jet 3/4) that lacks columns — or
@@ -134,16 +147,10 @@ def write_table(df: DataFrame, db_path: str, table: str, *, batch_size: int = 10
         placeholders = ", ".join("?" for _ in cols)
         collist = ", ".join(f'"{c}"' for c in cols)
         sql = f'INSERT INTO "{table}" ({collist}) VALUES ({placeholders})'
+        data = df.select(*cols).toArrow()
+        rows = zip(*([_to_sqlite_value(v) for v in c.to_pylist()] for c in data.columns))
         n = 0
-        batch: list[tuple] = []
-        # stream partitions through the driver — bounded memory, no collect()
-        for row in df.select(*cols).toLocalIterator(prefetchPartitions=True):
-            batch.append(tuple(_to_sqlite_value(v) for v in row))
-            if len(batch) >= batch_size:
-                con.executemany(sql, batch)
-                n += len(batch)
-                batch.clear()
-        if batch:
+        while batch := list(islice(rows, batch_size)):
             con.executemany(sql, batch)
             n += len(batch)
         con.commit()
@@ -167,9 +174,13 @@ def read_table(spark: SparkSession, db_path: str, table: str) -> DataFrame:
         raw = con.execute(f'SELECT {collist} FROM "{table}"').fetchall()
     finally:
         con.close()
-    dtypes = [f.dataType for f in schema.fields]
-    rows = [tuple(_from_sqlite_value(v, t) for v, t in zip(r, dtypes)) for r in raw]
-    return spark.createDataFrame(rows, schema)
+    arrow_schema = to_arrow_schema(schema)
+    arrays = [
+        pa.array([_from_sqlite_value(r[i], f.dataType) for r in raw], type=arrow_schema.field(i).type)
+        for i, f in enumerate(schema.fields)
+    ]
+    # a non-nullable column holding NULL fails here, in the cast to schema
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema), schema)
 
 
 def write_database(
@@ -214,6 +225,27 @@ def read_database(spark: SparkSession, db_path: str) -> dict[str, DataFrame]:
     return {name: read_table(spark, db_path, name) for name in COPY_ORDER if name in present}
 
 
+def _parquet_files(path: str) -> list[str]:
+    """The parquet files of one table directory, leaving out the hidden
+    ``_``/``.`` files Spark leaves out."""
+    files = sorted(
+        os.path.join(path, f)
+        for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+    if not files:
+        raise FileNotFoundError(f"no parquet data files in {path}")
+    return files
+
+
+def _read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
+    """Read one table directory with the schema of its own footer, read on
+    the driver, instead of a schema-inference job. The file's schema, not
+    the registry's, so a superset table keeps its extra columns."""
+    schema = from_arrow_schema(pq.read_schema(_parquet_files(path)[0]))
+    return spark.read.schema(schema).parquet(path)
+
+
 def convert(
     spark: SparkSession,
     src: str,
@@ -231,6 +263,10 @@ def convert(
     - ``.db -> dir``  : SQLite -> Parquet (one subdir per table)
     - ``dir -> .db``  : Parquet -> SQLite
     - any combination of the three endpoint kinds works the same way
+
+    Returns the per-table row counts. A Parquet destination's counts come
+    from the footers of the files just written, so no Spark job recounts
+    the source.
     """
     from hhek2sqlite_spark.sources.jet2 import jet2_write_database
     from hhek2sqlite_spark.sources.mdb import mdb_read_database
@@ -250,7 +286,7 @@ def convert(
         tables = read_database(spark, src)
     else:
         tables = {
-            name: spark.read.parquet(os.path.join(src, name))
+            name: _read_parquet_table(spark, os.path.join(src, name))
             for name in COPY_ORDER
             if os.path.exists(os.path.join(src, name))
         }
@@ -269,6 +305,7 @@ def convert(
         return write_database(tables, dst, create_indexes=create_indexes)
     counts = {}
     for name, df in tables.items():
-        df.write.mode("overwrite").parquet(os.path.join(dst, name))
-        counts[name] = df.count()
+        path = os.path.join(dst, name)
+        df.write.mode("overwrite").parquet(path)
+        counts[name] = sum(pq.read_metadata(f).num_rows for f in _parquet_files(path))
     return counts

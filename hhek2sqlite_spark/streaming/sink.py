@@ -25,11 +25,13 @@ identity and replay-skipping only ever applies within the same logical
 stream.
 
 Scale notes: foreachBatch hands the driver a normal DataFrame; the
-SQLite interchange path streams it through ``toLocalIterator`` with
-bounded memory (same documented single-file envelope as
-sources/sqlite_io.py — SQLite is a single-writer store, so the sink is
-inherently driver-side; a cluster deployment would swap the JDBC url
-and keep the batch-id bookkeeping identical).
+sink streams it through ``toLocalIterator``, one partition at a time,
+so driver memory stays bounded by a partition rather than the batch
+(sources/sqlite_io.py, whose unit is a whole dimension-sized table,
+collects each table once in Arrow form instead). SQLite is a
+single-writer store, so the sink is inherently driver-side; a cluster
+deployment would swap the JDBC url and keep the batch-id bookkeeping
+identical.
 """
 
 from __future__ import annotations

@@ -4,8 +4,8 @@ The r14 semantic_dedup weak flag (a K x dim seed matrix collected to the
 driver, K growing with the corpus) survived three rounds because each
 operator's collect was audited individually and nothing audited the
 CLASS. This test generalizes the collect-spy pattern: every
-``.collect()`` / ``.toPandas()`` / ``.collectAsList()`` /
-``.toLocalIterator()`` call site in ``hhek2sqlite_spark/`` is
+``.collect()`` / ``.toPandas()`` / ``.toArrow()`` / ``.collectAsList()``
+/ ``.toLocalIterator()`` call site in ``hhek2sqlite_spark/`` is
 enumerated by AST (not substring — docstrings and comments don't count)
 and must appear on the allowlist below, each entry carrying the
 documented bound on what reaches the driver. A new collect site fails
@@ -19,7 +19,8 @@ The bound taxonomy:
 - ingest/sink edge: single-FILE formats (.mdb, .db) whose writers are
   inherently single-node; these materialize or stream rows at the
   edge by design and are not distributed-query paths. toLocalIterator
-  streams one partition at a time — bounded memory even there.
+  streams one partition at a time — bounded memory even there; toArrow
+  holds one whole table, columnar.
 - test harness: parity comparison at fixture scale, never shipped.
 """
 
@@ -30,7 +31,7 @@ import pathlib
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "hhek2sqlite_spark"
 
-METHODS = {"collect", "toPandas", "collectAsList", "toLocalIterator"}
+METHODS = {"collect", "toPandas", "toArrow", "collectAsList", "toLocalIterator"}
 
 # (relpath, enclosing-def chain, method) -> (site count, documented bound)
 ALLOWLIST: dict[tuple[str, str, str], tuple[int, str]] = {
@@ -122,11 +123,12 @@ ALLOWLIST: dict[tuple[str, str, str], tuple[int, str]] = {
         1,
         "ingest edge: same single-file .mdb writer, multi-table variant",
     ),
-    ("sources/sqlite_io.py", "write_table", "toLocalIterator"): (
+    ("sources/sqlite_io.py", "write_table", "toArrow"): (
         1,
-        "sink edge: single-file SQLite sink streams ONE partition at a "
-        "time (bounded driver memory), matching the reference's batched "
-        "INSERT loop",
+        "sink edge: the whole table collected once in columnar Arrow form "
+        "for the single-file SQLite sink — O(one hhek table), the same "
+        "scale read_table already holds with its fetchall; the hhek "
+        "tables are dimension-sized and the at-scale path is Parquet",
     ),
     ("streaming/sink.py", "write_batch_idempotent", "toLocalIterator"): (
         1,

@@ -118,3 +118,26 @@ def test_events_normalizer_accepts_all_known_layouts(spark):
         out = _normalize_events(layout)
         assert isinstance(out.schema["ts"].dataType, TimestampType)
         assert out.select(F.unix_micros("ts")).collect()[0][0] == us
+
+
+def test_schema_cache_sees_a_rewritten_table(spark, tmp_path, count_jobs):
+    """The session schema cache is keyed on the table files' (size,
+    mtime_ns): an unchanged table is served without a Spark job, and a
+    table rewritten with another schema in the same session is read with
+    the new one instead of a stale schema that would read NULLs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "region.parquet")
+    pq.write_table(pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"]}), path)
+    assert load_table(spark, str(tmp_path), "region").columns == ["r_regionkey", "r_name"]
+    df, jobs = count_jobs(lambda: load_table(spark, str(tmp_path), "region"))
+    assert jobs == 0
+    assert df.columns == ["r_regionkey", "r_name"]
+
+    pq.write_table(
+        pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"], "r_comment": ["x", "y"]}), path
+    )
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert sorted(r.r_comment for r in df.collect()) == ["x", "y"]

@@ -138,17 +138,184 @@ def test_convert_sqlite_to_parquet_and_back(spark, extra_tables, tmp_path):
     db1 = str(tmp_path / "src.db")
     pq = str(tmp_path / "pq")
     db2 = str(tmp_path / "dst.db")
+    import sqlite3
+
     sqlite_io.write_database(extra_tables, db1)
-    sqlite_io.convert(spark, db1, pq)
-    sqlite_io.convert(spark, pq, db2, create_indexes=True)
+    to_pq = sqlite_io.convert(spark, db1, pq)
+    to_db = sqlite_io.convert(spark, pq, db2, create_indexes=True)
+    con = sqlite3.connect(db1)
+    source = {n: con.execute(f'SELECT COUNT(*) FROM "{n}"').fetchone()[0] for n in extra_tables}
+    con.close()
+    # both directions report exactly the source's rows, table by table
+    assert to_pq == source and to_db == source
     back = sqlite_io.read_database(spark, db2)
     for name, original in extra_tables.items():
         assert hhek.tables_equivalent(original, back[name]).count() == 0, name
     # reverse direction creates the secondary indexes (SURVEY.md 2.12)
-    import sqlite3
-
     con = sqlite3.connect(db2)
     idx = {r[0] for r in con.execute("SELECT name FROM sqlite_master WHERE type='index'")}
     con.close()
     assert "Platser_idxNamn" in idx and "Personer_idxNamn" in idx
     assert len([i for i in idx if "_idx" in i]) == 15
+
+
+# One value per registry column kind; the second row of every table is
+# NULL wherever the column allows it.
+_KIND_VALUES = {
+    "counter": 1,
+    "int": 42,
+    "smallint": 7,
+    "money": D("12345678901.2345"),  # 15 significant digits
+    "float": 0.1,  # not exact in FloatType: the float32 value must survive REAL
+    "bool": True,
+    "memo": 'Anteckning "citat" O\'Brien å ä ö €',
+    "text": 'Fält "citat" O\'Brien å ä ö €',
+}
+
+
+def _all_kinds_rows(spec):
+    first, second = [], []
+    for c in spec.columns:
+        if c.sqlite_type_override == "INTEGER":
+            v = 1999  # Personer.Född: TEXT in Jet, INTEGER in SQLite
+        else:
+            v = _KIND_VALUES[c.logical]
+        first.append(v)
+        if c.nullable:
+            second.append(None)
+        elif c.logical == "counter":
+            second.append(2)
+        elif c.logical == "bool":
+            second.append(False)
+        else:
+            second.append("2")
+    return [tuple(first), tuple(second)]
+
+
+@pytest.fixture(scope="module")
+def all_kinds_tables(spark):
+    return {
+        name: spark.createDataFrame(_all_kinds_rows(spec), spec.spark_schema())
+        for name, spec in HHEK_TABLES.items()
+    }
+
+
+def test_every_column_kind_roundtrips(spark, all_kinds_tables, tmp_path):
+    kinds = {c.spark_type.typeName() for s in HHEK_TABLES.values() for c in s.columns}
+    assert kinds >= {"string", "long", "integer", "short", "decimal", "float", "boolean"}
+    db = str(tmp_path / "kinds.db")
+    sqlite_io.write_database(all_kinds_tables, db)
+    for name, original in all_kinds_tables.items():
+        back = sqlite_io.read_table(spark, db, name)
+        assert back.schema == HHEK_TABLES[name].spark_schema(), name
+        diff = hhek.tables_equivalent(original, back)
+        assert diff.count() == 0, f"{name} roundtrip mismatch: {diff.collect()[:5]}"
+    row = sqlite_io.read_table(spark, db, "LÅN").filter("`Löpnr` = 1").collect()[0]
+    assert row.Anteckningar == _KIND_VALUES["memo"]
+    assert row.TotLanebelopp == D("12345678901.2345")
+    assert row.FastRanta == pytest.approx(0.1, rel=1e-7)
+
+
+def test_empty_table_roundtrip(spark, tmp_path):
+    schema = HHEK_TABLES["Betalningar"].spark_schema()
+    empty = spark.createDataFrame([], schema)
+    db = str(tmp_path / "empty.db")
+    assert sqlite_io.write_database({"Betalningar": empty}, db) == {"Betalningar": 0}
+    back = sqlite_io.read_table(spark, db, "Betalningar")
+    assert back.schema == schema
+    assert back.count() == 0
+    # and through Parquet both ways: the empty table's single schema-only
+    # file gives both its footer count and its read schema
+    pq = str(tmp_path / "pq")
+    assert sqlite_io.convert(spark, db, pq) == {"Betalningar": 0}
+    db2 = str(tmp_path / "empty2.db")
+    assert sqlite_io.convert(spark, pq, db2) == {"Betalningar": 0}
+    assert sqlite_io.read_table(spark, db2, "Betalningar").count() == 0
+
+
+def test_null_in_non_nullable_column_raises(spark, tmp_path):
+    import sqlite3
+
+    db = str(tmp_path / "nullpk.db")
+    con = sqlite3.connect(db)
+    con.execute('CREATE TABLE "DtbVer" ("VerNum" TEXT, "Benämning" TEXT, "Losenord" TEXT)')
+    con.execute('INSERT INTO "DtbVer" VALUES (NULL, \'x\', \'y\')')
+    con.commit()
+    con.close()
+    with pytest.raises(ValueError):
+        sqlite_io.read_table(spark, db, "DtbVer")
+
+
+def test_generic_timestamp_and_date_columns_keep_their_text(spark, tmp_path):
+    """A non-registry table stores TimestampType as naive local wall time
+    (``isoformat(sep=' ')``) and DateType as ISO text, the strings a
+    collected Row produces."""
+    import datetime as dt
+    import sqlite3
+
+    df = spark.createDataFrame(
+        [
+            (1, dt.datetime(2021, 3, 14, 15, 9, 26, 535897), dt.date(2021, 3, 14)),
+            (2, dt.datetime(1999, 12, 31, 23, 59, 59), dt.date(1999, 12, 31)),
+            (3, None, None),
+        ],
+        "id int, ts timestamp, d date",
+    )
+    db = str(tmp_path / "generic.db")
+    assert sqlite_io.write_table(df, db, "Händelser") == 3
+    con = sqlite3.connect(db)
+    try:
+        rows = con.execute(
+            'SELECT id, ts, typeof(ts), d, typeof(d) FROM "Händelser" ORDER BY id'
+        ).fetchall()
+    finally:
+        con.close()
+    assert rows == [
+        (1, "2021-03-14 15:09:26.535897", "text", "2021-03-14", "text"),
+        (2, "1999-12-31 23:59:59", "text", "1999-12-31", "text"),
+        (3, None, "null", None, "null"),
+    ]
+
+
+def test_parquet_to_sqlite_keeps_superset_columns(spark, tmp_path):
+    """A registry-named Parquet table with an extra column is read with
+    its own footer schema, not the registry's, so the column survives."""
+    import sqlite3
+
+    pq = str(tmp_path / "pq")
+    spark.createDataFrame(
+        [(1, "A", 1999, "Man", "x")],
+        "`Löpnr` bigint, `Namn` string, `Född` int, `Kön` string, `Extra` string",
+    ).write.parquet(f"{pq}/Personer")
+    db = str(tmp_path / "sup.db")
+    assert sqlite_io.convert(spark, pq, db) == {"Personer": 1}
+    con = sqlite3.connect(db)
+    try:
+        cols = [r[1] for r in con.execute('PRAGMA table_info("Personer")')]
+        row = con.execute('SELECT "Löpnr", "Extra" FROM "Personer"').fetchone()
+    finally:
+        con.close()
+    assert cols == ["Löpnr", "Namn", "Född", "Kön", "Extra"]
+    assert row == (1, "x")
+
+
+def test_parquet_read_schema_matches_inference(spark, extra_tables, tmp_path):
+    pq = str(tmp_path / "pq")
+    db = str(tmp_path / "src.db")
+    sqlite_io.write_database(extra_tables, db)
+    sqlite_io.convert(spark, db, pq)
+    for name in extra_tables:
+        path = f"{pq}/{name}"
+        assert sqlite_io._read_parquet_table(spark, path).schema == spark.read.parquet(path).schema
+
+
+def test_convert_runs_one_job_per_table_each_way(spark, extra_tables, count_jobs, tmp_path):
+    db1 = str(tmp_path / "src.db")
+    pq = str(tmp_path / "pq")
+    db2 = str(tmp_path / "dst.db")
+    sqlite_io.write_database(extra_tables, db1)
+    n = len(extra_tables)
+    _, jobs = count_jobs(lambda: sqlite_io.convert(spark, db1, pq))
+    assert jobs == n  # one parquet write each; no recount
+    _, jobs = count_jobs(lambda: sqlite_io.convert(spark, pq, db2))
+    assert jobs == n  # one toArrow each; no schema inference
