@@ -1381,7 +1381,8 @@ def _cached_router(store: DataFrame) -> dict | None:
     exactly what the uncached judge re-derives with serial driver jobs
     on every call. Returns None whenever caching is not provably safe
     (non-file leaves, missing metadata row, seedless store, stat
-    failure); the caller then takes the uncached path unchanged."""
+    failure); the caller then takes the uncached path unchanged. Every
+    return is a copy, so a caller's edit never reaches the cache."""
     key = _store_file_signature(store)
     if key is None:
         return None
@@ -1393,7 +1394,7 @@ def _cached_router(store: DataFrame) -> dict | None:
         if ekey == key:
             try:
                 if eplan.sameResult(jplan):
-                    return ehint
+                    return dict(ehint)
             except Exception:
                 return None
     meta = read_semdedup_store_meta(store)
@@ -1419,7 +1420,7 @@ def _cached_router(store: DataFrame) -> dict | None:
         hint = {"meta": meta, "coarse": coarse, "seed_rows": None}
     _ROUTER_CACHE.append((key, jplan, hint))
     del _ROUTER_CACHE[:-_ROUTER_CACHE_MAX]
-    return hint
+    return dict(hint)
 
 
 def carry_store_router(derived: DataFrame, base: DataFrame) -> DataFrame:

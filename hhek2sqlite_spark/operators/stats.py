@@ -236,7 +236,7 @@ def bloom_sketch(
     if k > 7:
         raise ValueError(f"k {k} would overflow int64 in r*h2")
     # NULL items have no fingerprint: drop them rather than emit a
-    # NULL bit row (which the streaming sink's int() would crash on —
+    # NULL bit row (which the streaming sink's NOT NULL bit column rejects —
     # a poison batch that refails on every restart; review finding).
     # The SQL oracle applies the identical WHERE.
     staged = items.filter(F.col(item_col).isNotNull()).select(

@@ -42,8 +42,8 @@ follow the same layout: first fixed u32 = object id, first var column
 Scale note: .mdb is a single-file desktop format (GOTEST1 is 160 KB;
 real HHEK files are MBs) — this is an INGEST EDGE, not a distributed
 scan path. jet2_table() materializes rows driver-side once and hands
-Spark a DataFrame, the same envelope as the SQLite source
-(sources/sqlite_io.py); the 100 TB path starts after this boundary.
+them to Spark through the Arrow edge every container shares
+(sources/edge.py); the 100 TB path starts after this boundary.
 """
 
 from __future__ import annotations
@@ -51,6 +51,8 @@ from __future__ import annotations
 import os
 import struct
 from decimal import ROUND_HALF_UP, Decimal
+
+from hhek2sqlite_spark.sources.edge import df_to_rows, rows_to_df
 
 PAGE_SIZE = 2048
 CATALOG_TDEF = 3  # MSysObjects' own TDEF page — fixed by the engine
@@ -616,8 +618,7 @@ def _table_df(spark, f: "Jet2File", table: str):
         raise ValueError(f"no verified physical layout for table {table!r}")
     rows = f.read_rows(table, schema)
     st = _spark_schema_for(schema)
-    ordered = [tuple(r[fld.name] for fld in st.fields) for r in rows]
-    return spark.createDataFrame(ordered, st)
+    return rows_to_df(spark, [tuple(r[fld.name] for fld in st.fields) for r in rows], st)
 
 
 def jet2_table(spark, path: str, table: str):
@@ -980,12 +981,7 @@ def jet2_write_table(df, path: str, table: str) -> int:
     """Spark DataFrame -> one-table .mdb via the registered HHEK layout
     (driver-side materialization — same ingest-edge envelope as
     jet2_table). Returns rows written."""
-    schema = HHEK_SCHEMAS.get(table)
-    if schema is None:
-        raise ValueError(f"no verified physical layout for table {table!r}")
-    rows = [r.asDict() for r in df.collect()]
-    write_jet2(path, {table: (schema, rows)})
-    return len(rows)
+    return jet2_write_database({table: df}, path)[table]
 
 
 def jet2_write_database(tables: dict, path: str) -> dict:
@@ -999,7 +995,7 @@ def jet2_write_database(tables: dict, path: str) -> dict:
         schema = HHEK_SCHEMAS.get(name)
         if schema is None:
             raise ValueError(f"no verified physical layout for table {name!r}")
-        rows = [r.asDict() for r in df.collect()]
+        rows = [dict(zip(df.columns, r)) for r in df_to_rows(df)]
         payload[name] = (schema, rows)
         counts[name] = len(rows)
     write_jet2(path, payload)

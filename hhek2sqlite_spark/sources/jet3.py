@@ -61,6 +61,7 @@ import struct
 from datetime import datetime, timedelta
 from decimal import Decimal
 
+from hhek2sqlite_spark.sources.edge import rows_to_df
 from hhek2sqlite_spark.sources.jet2 import (
     _ACE_MAGIC,
     _JET3_MAGIC,
@@ -519,12 +520,11 @@ def jet3_table(spark, path: str, table: str):
     return _table_df(spark, f, table)
 
 
-def _table_df(spark, f: Jet3File, table: str):
-    t = f.tables[table]
-    st = _spark_schema_for(t)
+def _table_df(spark, f, table: str):
+    """One table of a parsed Jet 3 or Jet 4 file as a typed DataFrame."""
+    st = _spark_schema_for(f.tables[table])
     rows = f.read_rows(table)
-    ordered = [tuple(r[fld.name] for fld in st.fields) for r in rows]
-    return spark.createDataFrame(ordered, st)
+    return rows_to_df(spark, [tuple(r[fld.name] for fld in st.fields) for r in rows], st)
 
 
 def jet3_read_database(spark, path: str):

@@ -58,6 +58,7 @@ from hhek2sqlite_spark.sources.jet3 import (
     Jet3Table,
     _FIXED_WIDTHS,
     _decode_value as _decode_scalar_value,
+    _table_df,
 )
 
 PAGE_SIZE = 4096
@@ -441,16 +442,6 @@ class Jet4File:
 def jet4_table(spark, path: str, table: str):
     f = Jet4File(path)
     return _table_df(spark, f, table)
-
-
-def _table_df(spark, f: Jet4File, table: str):
-    from hhek2sqlite_spark.sources.jet3 import _spark_schema_for
-
-    t = f.tables[table]
-    st = _spark_schema_for(t)
-    rows = f.read_rows(table)
-    ordered = [tuple(r[fld.name] for fld in st.fields) for r in rows]
-    return spark.createDataFrame(ordered, st)
 
 
 def jet4_read_database(spark, path: str):

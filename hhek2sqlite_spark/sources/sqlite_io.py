@@ -8,19 +8,17 @@ The reference copies MDB<->SQLite row-at-a-time with string-built INSERTs
   query run on DataFrames; Parquet is the at-scale storage.
 - The *SQLite file* is a single-node interchange container by nature
   (one file, one writer). I/O therefore runs driver-side over the stdlib
-  ``sqlite3`` module and crosses into Spark in Arrow form, so no Python
-  worker runs at this edge: ``read_table`` turns the fetched rows into a
-  registry-typed ``pyarrow.Table`` and hands it to ``createDataFrame``
-  (a JVM local relation); ``write_table`` collects the whole table with
-  one ``toArrow`` and binds it with parameterized batched INSERTs inside
-  one transaction per table (the reference's T1 shape; its
-  per-row-transaction T2 on Transaktioner is a documented anti-pattern
-  we do not replicate, SURVEY.md 2.11). Both directions hold one table
-  in driver memory, the same envelope as the ``fetchall`` that reads
-  it. On a cluster with a JDBC SQLite driver on the classpath the same
-  DataFrames go through ``df.write.jdbc`` unchanged; the hhek tables are
-  dimension-sized, so driver-side I/O is not a scale bottleneck — the
-  100 TB path is Parquet.
+  ``sqlite3`` module and crosses into Spark through ``sources/edge.py``,
+  the Arrow pair every driver-side container shares, so no Python
+  worker runs here. ``read_table`` hands the fetched rows to
+  ``rows_to_df`` (a JVM local relation). ``write_table`` collects the
+  table once and binds it with batched parameterized INSERTs
+  (``insert_rows``, shared with the streaming sink) in one transaction
+  per table: the reference's T1 shape, not its per-row-transaction T2
+  on Transaktioner (SURVEY.md 2.11). Both directions hold one
+  dimension-sized table in driver memory; the 100 TB path is Parquet,
+  and on a cluster with a JDBC SQLite driver the same DataFrames go
+  through ``df.write.jdbc`` unchanged.
 - Escaping (the reference's toUtf8 quote-doubling, F2) disappears:
   parameter binding cannot corrupt quotes. Its *semantic* — data with
   quotes/non-ASCII survives — is asserted by roundtrip tests.
@@ -46,14 +44,13 @@ from __future__ import annotations
 
 import os
 import sqlite3
-from datetime import datetime
+from datetime import date, datetime
 from decimal import Decimal
 from itertools import islice
 
-import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import BooleanType, DecimalType
 
 from hhek2sqlite_spark.schema.registry import (
@@ -62,24 +59,38 @@ from hhek2sqlite_spark.schema.registry import (
     render_create_index,
     render_create_table,
 )
+from hhek2sqlite_spark.sources.edge import df_to_rows, rows_to_df
 
 _Q4 = Decimal("0.0001")
 
 
 def _to_sqlite_value(v):
-    if v is None:
-        return None
     if isinstance(v, Decimal):
         return format(v, "f")
     if isinstance(v, bool):
         return int(v)
     if isinstance(v, datetime):
-        if v.tzinfo is not None:
-            # Arrow hands TimestampType back UTC-aware; store the naive
-            # local wall time a collected Row carries
-            v = v.astimezone().replace(tzinfo=None)
         return v.isoformat(sep=" ")
+    if isinstance(v, date):
+        return v.isoformat()
     return v
+
+
+def insert_sql(table: str, cols) -> str:
+    collist = ", ".join(f'"{c}"' for c in cols)
+    placeholders = ", ".join("?" for _ in cols)
+    return f'INSERT INTO "{table}" ({collist}) VALUES ({placeholders})'
+
+
+def insert_rows(con: sqlite3.Connection, sql: str, df: DataFrame, batch_size: int) -> int:
+    """Bind every row of ``df`` (one edge collect) to ``sql`` with
+    ``executemany`` in ``batch_size`` chunks. Returns the rows SQLite
+    changed."""
+    rows = (tuple(map(_to_sqlite_value, r)) for r in df_to_rows(df))
+    n = 0
+    while batch := list(islice(rows, batch_size)):
+        n += con.executemany(sql, batch).rowcount
+    return n
 
 
 # generic Spark-dtype -> SQLite storage-class map for tables OUTSIDE the
@@ -125,7 +136,7 @@ def _from_sqlite_value(v, dtype):
 def write_table(df: DataFrame, db_path: str, table: str, *, batch_size: int = 10_000) -> int:
     """CREATE (dialect DDL from the registry) + truncate-before-load (S6)
     + batched parameterized inserts in one transaction (T1), fed by one
-    ``toArrow`` collect. Returns the row count written."""
+    edge collect. Returns the row count written."""
     spec = HHEK_TABLES.get(table)
     # registry DDL requires EXACTLY the registry's column set; a table
     # from a self-describing source (Jet 3/4) that lacks columns — or
@@ -144,15 +155,7 @@ def write_table(df: DataFrame, db_path: str, table: str, *, batch_size: int = 10
     try:
         con.execute(ddl.replace("CREATE TABLE", "CREATE TABLE IF NOT EXISTS"))
         con.execute(f'DELETE FROM "{table}"')
-        placeholders = ", ".join("?" for _ in cols)
-        collist = ", ".join(f'"{c}"' for c in cols)
-        sql = f'INSERT INTO "{table}" ({collist}) VALUES ({placeholders})'
-        data = df.select(*cols).toArrow()
-        rows = zip(*([_to_sqlite_value(v) for v in c.to_pylist()] for c in data.columns))
-        n = 0
-        while batch := list(islice(rows, batch_size)):
-            con.executemany(sql, batch)
-            n += len(batch)
+        n = insert_rows(con, insert_sql(table, cols), df.select(*cols), batch_size)
         con.commit()
         return n
     except Exception:
@@ -167,20 +170,14 @@ def read_table(spark: SparkSession, db_path: str, table: str) -> DataFrame:
     exact decimals restored)."""
     spec = HHEK_TABLES[table]
     schema = spec.spark_schema()
-    cols = [c.name for c in spec.columns]
+    collist = ", ".join(f'"{c.name}"' for c in spec.columns)
     con = sqlite3.connect(db_path)
     try:
-        collist = ", ".join(f'"{c}"' for c in cols)
         raw = con.execute(f'SELECT {collist} FROM "{table}"').fetchall()
     finally:
         con.close()
-    arrow_schema = to_arrow_schema(schema)
-    arrays = [
-        pa.array([_from_sqlite_value(r[i], f.dataType) for r in raw], type=arrow_schema.field(i).type)
-        for i, f in enumerate(schema.fields)
-    ]
-    # a non-nullable column holding NULL fails here, in the cast to schema
-    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema), schema)
+    dtypes = [f.dataType for f in schema.fields]
+    return rows_to_df(spark, [tuple(map(_from_sqlite_value, r, dtypes)) for r in raw], schema)
 
 
 def write_database(

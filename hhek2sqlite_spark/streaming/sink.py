@@ -24,26 +24,28 @@ and dies with the checkpoint, so a reset checkpoint gets a fresh
 identity and replay-skipping only ever applies within the same logical
 stream.
 
-Scale notes: foreachBatch hands the driver a normal DataFrame; the
-sink streams it through ``toLocalIterator``, one partition at a time,
-so driver memory stays bounded by a partition rather than the batch
-(sources/sqlite_io.py, whose unit is a whole dimension-sized table,
-collects each table once in Arrow form instead). SQLite is a
-single-writer store, so the sink is inherently driver-side; a cluster
-deployment would swap the JDBC url and keep the batch-id bookkeeping
-identical.
+Scale notes: foreachBatch hands the driver a normal DataFrame; every
+writer here collects its micro-batch once through the shared Arrow
+edge (sources/edge.py, one Spark job per batch however many
+partitions it has) and binds it with sources/sqlite_io.py's
+``insert_rows``, so sink tables and ``write_table`` store the same text
+for the same value. Driver memory is therefore bounded by one
+micro-batch, which the stream sets with ``maxFilesPerTrigger`` or
+``maxOffsetsPerTrigger``. SQLite is a single-writer store, so the sink
+is inherently driver-side; a cluster deployment would swap the JDBC url
+and keep the batch-id bookkeeping identical.
 """
 
 from __future__ import annotations
 
-import datetime
 import os
 import sqlite3
 import uuid
-from decimal import Decimal
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from hhek2sqlite_spark.sources.sqlite_io import insert_rows, insert_sql
 
 COMMITS_TABLE = "_stream_commits"
 
@@ -120,16 +122,48 @@ def _sqlite_type(dt: T.DataType) -> str:
     return "TEXT"  # strings, decimals (exact text), dates, timestamps
 
 
-def _to_sqlite(v):
-    if v is None:
-        return None
-    if isinstance(v, Decimal):
-        return format(v, "f")
-    if isinstance(v, bool):
-        return int(v)
-    if isinstance(v, (datetime.datetime, datetime.date)):
-        return v.isoformat()
-    return v
+def _write_once(
+    rows_df: DataFrame,
+    batch_id: int,
+    *,
+    db_path: str,
+    table: str,
+    app_id: str,
+    ddl: str,
+    sql: str,
+    batch_size: int = 10_000,
+) -> int:
+    """The exactly-once block every writer shares: create the sink
+    table, skip a batch already committed under ``(app_id, table,
+    batch_id)``, else insert ``rows_df``'s rows with ``sql`` and
+    record the commit. Returns the rows SQLite changed (0 on replay)."""
+    key = (app_id, table, batch_id)
+    con = sqlite3.connect(db_path)
+    try:
+        _ensure_commits_table(con)
+        con.execute(ddl)
+        seen = con.execute(
+            f'SELECT 1 FROM "{COMMITS_TABLE}"'
+            " WHERE app_id = ? AND sink_table = ? AND batch_id = ?",
+            key,
+        ).fetchone()
+        if seen:
+            return 0
+        n = insert_rows(con, sql, rows_df, batch_size)
+        con.execute(
+            f'INSERT INTO "{COMMITS_TABLE}" (app_id, sink_table, batch_id)'
+            " VALUES (?, ?, ?)",
+            key,
+        )
+        # ONE commit covers data + bookkeeping: replay after a crash
+        # between insert and commit sees neither and redoes both
+        con.commit()
+        return n
+    except Exception:
+        con.rollback()
+        raise
+    finally:
+        con.close()
 
 
 def write_batch_idempotent(
@@ -145,48 +179,18 @@ def write_batch_idempotent(
     (0 when ``(app_id, batch_id)`` was already committed — the replay
     path). ``app_id`` identifies the logical stream; the wrappers pass
     the checkpoint-scoped identity from ``_checkpoint_app_id``."""
-    schema = batch_df.schema
-    cols = [f.name for f in schema.fields]
-    con = sqlite3.connect(db_path)
-    try:
-        _ensure_commits_table(con)
-        coldefs = ", ".join(f'"{f.name}" {_sqlite_type(f.dataType)}' for f in schema.fields)
-        con.execute(f'CREATE TABLE IF NOT EXISTS "{table}" ({coldefs})')
-        seen = con.execute(
-            f'SELECT 1 FROM "{COMMITS_TABLE}"'
-            " WHERE app_id = ? AND sink_table = ? AND batch_id = ?",
-            (app_id, table, batch_id),
-        ).fetchone()
-        if seen:
-            return 0
-        placeholders = ", ".join("?" for _ in cols)
-        collist = ", ".join(f'"{c}"' for c in cols)
-        sql = f'INSERT INTO "{table}" ({collist}) VALUES ({placeholders})'
-        n = 0
-        batch: list[tuple] = []
-        for row in batch_df.toLocalIterator(prefetchPartitions=True):
-            batch.append(tuple(_to_sqlite(v) for v in row))
-            if len(batch) >= batch_size:
-                con.executemany(sql, batch)
-                n += len(batch)
-                batch.clear()
-        if batch:
-            con.executemany(sql, batch)
-            n += len(batch)
-        con.execute(
-            f'INSERT INTO "{COMMITS_TABLE}" (app_id, sink_table, batch_id)'
-            " VALUES (?, ?, ?)",
-            (app_id, table, batch_id),
-        )
-        # ONE commit covers data + bookkeeping: replay after a crash
-        # between insert and commit sees neither and redoes both
-        con.commit()
-        return n
-    except Exception:
-        con.rollback()
-        raise
-    finally:
-        con.close()
+    fields = batch_df.schema.fields
+    coldefs = ", ".join(f'"{f.name}" {_sqlite_type(f.dataType)}' for f in fields)
+    return _write_once(
+        batch_df,
+        batch_id,
+        db_path=db_path,
+        table=table,
+        app_id=app_id,
+        ddl=f'CREATE TABLE IF NOT EXISTS "{table}" ({coldefs})',
+        sql=insert_sql(table, [f.name for f in fields]),
+        batch_size=batch_size,
+    )
 
 
 def merge_counts_idempotent(
@@ -207,51 +211,27 @@ def merge_counts_idempotent(
     running totals live in the sink, each batch ships only its own
     group counts, and a crash replay is detected before it would
     double-add. Returns merged group-rows (0 on replay)."""
-    schema = partial_df.schema
-    con = sqlite3.connect(db_path)
-    try:
-        _ensure_commits_table(con)
-        keydefs = ", ".join(
-            f'"{f.name}" {_sqlite_type(f.dataType)}'
-            for f in schema.fields
-            if f.name in key_cols
-        )
-        pk = ", ".join(f'"{c}"' for c in key_cols)
-        con.execute(
+    keydefs = ", ".join(
+        f'"{f.name}" {_sqlite_type(f.dataType)}'
+        for f in partial_df.schema.fields
+        if f.name in key_cols
+    )
+    pk = ", ".join(f'"{c}"' for c in key_cols)
+    cols = [*key_cols, count_col]
+    return _write_once(
+        partial_df.select(*cols),
+        batch_id,
+        db_path=db_path,
+        table=table,
+        app_id=app_id,
+        ddl=(
             f'CREATE TABLE IF NOT EXISTS "{table}"'
             f' ({keydefs}, "{count_col}" INTEGER NOT NULL, PRIMARY KEY ({pk}))'
-        )
-        seen = con.execute(
-            f'SELECT 1 FROM "{COMMITS_TABLE}"'
-            " WHERE app_id = ? AND sink_table = ? AND batch_id = ?",
-            (app_id, table, batch_id),
-        ).fetchone()
-        if seen:
-            return 0
-        cols = [*key_cols, count_col]
-        collist = ", ".join(f'"{c}"' for c in cols)
-        placeholders = ", ".join("?" for _ in cols)
-        sql = (
-            f'INSERT INTO "{table}" ({collist}) VALUES ({placeholders})'
-            f' ON CONFLICT ({pk}) DO UPDATE SET'
-            f' "{count_col}" = "{count_col}" + excluded."{count_col}"'
-        )
-        n = 0
-        for row in partial_df.select(*cols).toLocalIterator(prefetchPartitions=True):
-            con.execute(sql, tuple(_to_sqlite(v) for v in row))
-            n += 1
-        con.execute(
-            f'INSERT INTO "{COMMITS_TABLE}" (app_id, sink_table, batch_id)'
-            " VALUES (?, ?, ?)",
-            (app_id, table, batch_id),
-        )
-        con.commit()
-        return n
-    except Exception:
-        con.rollback()
-        raise
-    finally:
-        con.close()
+        ),
+        sql=insert_sql(table, cols)
+        + f' ON CONFLICT ({pk}) DO UPDATE SET'
+        f' "{count_col}" = "{count_col}" + excluded."{count_col}"',
+    )
 
 
 def merge_bits_idempotent(
@@ -271,36 +251,31 @@ def merge_bits_idempotent(
     it makes replay DETECTION observable (monitoring) and keeps the
     contract uniform across sinks. Returns newly-set bits (0 on
     replay)."""
-    con = sqlite3.connect(db_path)
-    try:
-        _ensure_commits_table(con)
-        con.execute(
+    return _write_once(
+        partial_df.select(bit_col),
+        batch_id,
+        db_path=db_path,
+        table=table,
+        app_id=app_id,
+        ddl=(
             f'CREATE TABLE IF NOT EXISTS "{table}"'
             f' ("{bit_col}" INTEGER NOT NULL PRIMARY KEY)'
-        )
-        seen = con.execute(
-            f'SELECT 1 FROM "{COMMITS_TABLE}"'
-            " WHERE app_id = ? AND sink_table = ? AND batch_id = ?",
-            (app_id, table, batch_id),
-        ).fetchone()
-        if seen:
-            return 0
-        n = 0
-        sql = f'INSERT OR IGNORE INTO "{table}" ("{bit_col}") VALUES (?)'
-        for row in partial_df.toLocalIterator(prefetchPartitions=True):
-            n += con.execute(sql, (int(row[bit_col]),)).rowcount
-        con.execute(
-            f'INSERT INTO "{COMMITS_TABLE}" (app_id, sink_table, batch_id)'
-            " VALUES (?, ?, ?)",
-            (app_id, table, batch_id),
-        )
-        con.commit()
-        return n
-    except Exception:
-        con.rollback()
-        raise
-    finally:
-        con.close()
+        ),
+        sql=f'INSERT OR IGNORE INTO "{table}" ("{bit_col}") VALUES (?)',
+    )
+
+
+def _start(stream_df: DataFrame, checkpoint_dir: str, available_now: bool, handle):
+    """writeStream -> foreachBatch(``handle(batch_df, batch_id, app_id)``)
+    with the checkpoint-scoped stream identity; ``available_now=True``
+    drains everything currently in the source then stops."""
+    app_id = _checkpoint_app_id(checkpoint_dir)
+    writer = stream_df.writeStream.foreachBatch(
+        lambda batch_df, batch_id: handle(batch_df, batch_id, app_id)
+    ).option("checkpointLocation", checkpoint_dir)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def stream_bloom_bits(
@@ -322,20 +297,13 @@ def stream_bloom_bits(
     before paying the LEFT ANTI join on the corpus store)."""
     from hhek2sqlite_spark.operators.stats import bloom_sketch
 
-    app_id = _checkpoint_app_id(checkpoint_dir)
-
-    def _handle(batch_df: DataFrame, batch_id: int) -> None:
+    def _handle(batch_df: DataFrame, batch_id: int, app_id: str) -> None:
         partial = bloom_sketch(batch_df, item_col=item_col)
         merge_bits_idempotent(
             partial, batch_id, db_path=db_path, table=table, app_id=app_id
         )
 
-    writer = stream_df.writeStream.foreachBatch(_handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, checkpoint_dir, available_now, _handle)
 
 
 def stream_running_counts(
@@ -354,9 +322,7 @@ def stream_running_counts(
     is the shape that keeps executor state flat forever."""
     from pyspark.sql import functions as F
 
-    app_id = _checkpoint_app_id(checkpoint_dir)
-
-    def _handle(batch_df: DataFrame, batch_id: int) -> None:
+    def _handle(batch_df: DataFrame, batch_id: int, app_id: str) -> None:
         partial = batch_df.groupBy(*group_cols).agg(F.count(F.lit(1)).alias("n"))
         merge_counts_idempotent(
             partial,
@@ -367,12 +333,7 @@ def stream_running_counts(
             app_id=app_id,
         )
 
-    writer = stream_df.writeStream.foreachBatch(_handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, checkpoint_dir, available_now, _handle)
 
 
 def stream_to_sqlite(
@@ -387,16 +348,9 @@ def stream_to_sqlite(
     drains everything currently in the source then stops (the batch-mode
     run of a streaming pipeline); pass False for a continuous run."""
 
-    app_id = _checkpoint_app_id(checkpoint_dir)
-
-    def _handle(batch_df: DataFrame, batch_id: int) -> None:
+    def _handle(batch_df: DataFrame, batch_id: int, app_id: str) -> None:
         write_batch_idempotent(
             batch_df, batch_id, db_path=db_path, table=table, app_id=app_id
         )
 
-    writer = stream_df.writeStream.foreachBatch(_handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, checkpoint_dir, available_now, _handle)

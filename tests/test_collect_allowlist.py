@@ -16,11 +16,10 @@ The bound taxonomy:
 - O(1)/O(k) control plane: convergence scalars, caller-fixed model
   state, partition/stratum counts — driver state independent of the
   data volume (or bounded by a caller-fixed constant).
-- ingest/sink edge: single-FILE formats (.mdb, .db) whose writers are
-  inherently single-node; these materialize or stream rows at the
-  edge by design and are not distributed-query paths. toLocalIterator
-  streams one partition at a time — bounded memory even there; toArrow
-  holds one whole table, columnar.
+- container edge: single-FILE formats (.mdb, .db) whose writers are
+  inherently single-node; all of them cross back to driver rows through
+  one shared ``toArrow`` (sources/edge.py), which holds one whole table
+  or one streaming micro-batch, columnar, in a single Spark job.
 - test harness: parity comparison at fixture scale, never shipped.
 """
 
@@ -114,36 +113,14 @@ ALLOWLIST: dict[tuple[str, str, str], tuple[int, str]] = {
         "O(#hive-partition VALUES): control-plane row counts for file "
         "sizing, one row per partition value not per data row",
     ),
-    ("sources/jet2.py", "jet2_write_table", "collect"): (
+    ("sources/edge.py", "df_to_rows", "toArrow"): (
         1,
-        "ingest edge: single-file .mdb writer is inherently single-node "
-        "(Jet 2 page format); the reference's data model is MB-scale",
-    ),
-    ("sources/jet2.py", "jet2_write_database", "collect"): (
-        1,
-        "ingest edge: same single-file .mdb writer, multi-table variant",
-    ),
-    ("sources/sqlite_io.py", "write_table", "toArrow"): (
-        1,
-        "sink edge: the whole table collected once in columnar Arrow form "
-        "for the single-file SQLite sink — O(one hhek table), the same "
-        "scale read_table already holds with its fetchall; the hhek "
-        "tables are dimension-sized and the at-scale path is Parquet",
-    ),
-    ("streaming/sink.py", "write_batch_idempotent", "toLocalIterator"): (
-        1,
-        "sink edge: micro-batch-sized stream into the exactly-once "
-        "SQLite sink, one partition at a time",
-    ),
-    ("streaming/sink.py", "merge_counts_idempotent", "toLocalIterator"): (
-        1,
-        "sink edge: micro-batch-sized upsert stream, one partition at a "
-        "time",
-    ),
-    ("streaming/sink.py", "merge_bits_idempotent", "toLocalIterator"): (
-        1,
-        "sink edge: fixed-width sketch state (Bloom bits), micro-batch "
-        "sized",
+        "container edge: the one DataFrame -> driver rows crossing of every "
+        "single-file writer (SQLite write_table, the Jet .mdb writer, the "
+        "streaming SQLite sink) — O(one hhek table) for the writers, the "
+        "scale read_table already holds with its fetchall, and O(one "
+        "micro-batch) for the sink, sized by the stream's "
+        "maxFilesPerTrigger/maxOffsetsPerTrigger",
     ),
     ("testing/parity.py", "run_parity", "toPandas"): (
         1,

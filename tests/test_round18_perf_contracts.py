@@ -84,7 +84,39 @@ def test_router_cache_invalidates_on_rebuild_at_same_path(spark, tmp_path):
         similarity.semantic_dedup_incremental_from_store(s2, batch)
     )
     assert d2 == d2_cold  # rebuilt store judged with the REBUILT router
-    assert d1 != d2 or True  # corpora differ; equality would be a fluke
+    assert d1 != d2  # else a stale router could pass unnoticed
+
+
+def test_router_cache_hands_out_copies(spark, tmp_path):
+    """Editing a hint _cached_router returned must not reach the session
+    cache: the next call, and the next judge, still get the original."""
+    _clear_router_cache()
+    base = spark.createDataFrame(_rows(80, 6, seed=5), BATCH_SCHEMA)
+    batch = spark.createDataFrame(_rows(12, 6, seed=9, id_offset=1000), BATCH_SCHEMA)
+    reopened = similarity.materialize_semdedup_store(
+        similarity.build_semdedup_store(base, seed_stride=4, coarse_k=4),
+        str(tmp_path / "store_pq"),
+    )
+    def same(hint, want):  # the values are the cached objects themselves
+        return hint.keys() == want.keys() and all(hint[k] is want[k] for k in want)
+
+    built = similarity._cached_router(reopened)
+    original = dict(built)
+    assert original["coarse"] is not None
+    built["coarse"] = None
+    hit = similarity._cached_router(reopened)
+    assert same(hit, original)
+    hit["meta"] = None
+    assert same(similarity._cached_router(reopened), original)
+    judged = _decisions(
+        similarity.semantic_dedup_incremental_from_store(reopened, batch)
+    )
+    _clear_router_cache()
+    cold = _decisions(
+        similarity.semantic_dedup_incremental_from_store(reopened, batch)
+    )
+    assert judged == cold
+    _clear_router_cache()
 
 
 def test_router_cache_ignores_filtered_store_relations(spark, tmp_path):

@@ -14,6 +14,7 @@ from hhek2sqlite_spark.plans import hhek
 from hhek2sqlite_spark.schema.fixtures import golden_tables
 from hhek2sqlite_spark.schema.registry import HHEK_TABLES
 from hhek2sqlite_spark.sources import sqlite_io
+from hhek2sqlite_spark.streaming import sink
 
 D = Decimal
 
@@ -246,10 +247,20 @@ def test_null_in_non_nullable_column_raises(spark, tmp_path):
         sqlite_io.read_table(spark, db, "DtbVer")
 
 
-def test_generic_timestamp_and_date_columns_keep_their_text(spark, tmp_path):
-    """A non-registry table stores TimestampType as naive local wall time
-    (``isoformat(sep=' ')``) and DateType as ISO text, the strings a
-    collected Row produces."""
+@pytest.mark.parametrize(
+    "write",
+    [
+        pytest.param(sqlite_io.write_table, id="write_table"),
+        pytest.param(
+            lambda df, db, table: sink.write_batch_idempotent(df, 0, db_path=db, table=table),
+            id="write_batch_idempotent",
+        ),
+    ],
+)
+def test_generic_timestamp_and_date_columns_keep_their_text(spark, tmp_path, write):
+    """A non-registry table and a streaming sink table both store
+    TimestampType as naive local wall time (``isoformat(sep=' ')``) and
+    DateType as ISO text, the strings a collected Row produces."""
     import datetime as dt
     import sqlite3
 
@@ -262,7 +273,7 @@ def test_generic_timestamp_and_date_columns_keep_their_text(spark, tmp_path):
         "id int, ts timestamp, d date",
     )
     db = str(tmp_path / "generic.db")
-    assert sqlite_io.write_table(df, db, "Händelser") == 3
+    assert write(df, db, "Händelser") == 3
     con = sqlite3.connect(db)
     try:
         rows = con.execute(
