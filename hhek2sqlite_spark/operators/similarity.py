@@ -1897,6 +1897,20 @@ def _judge_batch_against_store(
     return bq, assigned_batch, judged
 
 
+def _release_assignment(assigned_batch: DataFrame) -> None:
+    """Free the batch assignment's eager checkpoint once ``judged`` has
+    been checkpointed from it: nothing reads it after that, and left to
+    ContextCleaner GC it outlives the append (one per streaming
+    micro-batch). Only a bare checkpoint, an analyzed plan that is one
+    ``LogicalRDD``, is released, so a plan reaching the store's own
+    checkpoint is never walked."""
+    from .util import release_local_checkpoints
+
+    plan = assigned_batch._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        release_local_checkpoints(assigned_batch)
+
+
 def semantic_dedup_incremental_from_store(
     store: DataFrame,
     batch: DataFrame,
@@ -2088,6 +2102,7 @@ def append_to_semdedup_store(
     # an assignment⋈decisions join (and its broadcast job) that every
     # later scan of the extended store re-ran
     judged = judged.localCheckpoint(eager=True)
+    _release_assignment(assigned_batch)
     decisions = judged.select("vec_id", "cell", "admitted")
     admitted = judged.filter(F.col("admitted") == 1).select(
         "vec_id",

@@ -10,6 +10,7 @@ SQL oracle — the driver records a rows-only check for them, by design.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,7 +31,7 @@ from hhek2sqlite_spark.operators.text import (
     rolling_fingerprint,
     source_stats,
 )
-from hhek2sqlite_spark.sources.parquet import load_table
+from hhek2sqlite_spark.sources.parquet import _file_signature, load_table
 from hhek2sqlite_spark.streaming import events as ev
 
 # shared SQL fragments -------------------------------------------------------
@@ -1071,25 +1072,38 @@ SELECT q_id, vec_id, sim_e6, CAST(rnk AS INTEGER) AS rank FROM ranked WHERE rnk 
 
 _IVF_CELLS = 16
 
-# Trained coarse-quantizer centroids memoized per (sf_dir, n_cells):
-# quantizer training is OFFLINE/AMORTIZED work at any real scale — an
-# index is trained once and served for millions of queries — so it must
-# not sit on the query path (round 4 retrained it on every execution:
-# hash-init + 2 Lloyd passes = 3 full corpus scans per query, 5.4s vs a
-# 0.017s oracle). The memo is driver-side model state (n_cells x dim
-# floats), the same envelope train_ivf_centroids already defines.
-_IVF_CENTROIDS: dict[tuple[str, int], list[list[float]]] = {}
+# Trained coarse-quantizer centroids memoized per (embeddings file,
+# n_cells), see _ivf_slot: quantizer training is OFFLINE/AMORTIZED work
+# at any real scale — an index is trained once and served for millions
+# of queries — so it must not sit on the query path (round 4 retrained it
+# on every execution: hash-init + 2 Lloyd passes = 3 full corpus scans
+# per query, 5.4s vs a 0.017s oracle). The memo is driver-side model
+# state (n_cells x dim floats), the same envelope train_ivf_centroids
+# already defines.
+_IVF_CENTROIDS: dict[tuple[str, int], tuple[tuple, list[list[float]]]] = {}
+
+
+def _ivf_slot(spark: SparkSession, sf_dir: str, n_cells: int) -> tuple:
+    """``(slot, key)`` of the IVF serving state for ``sf_dir``: both memos
+    hold one ``(key, value)`` entry per slot ``(embeddings path,
+    n_cells)``, valid while ``key`` matches — the session's
+    applicationId plus the content signature of ``embeddings.parquet``,
+    so a rewritten file or a new session never serves stale state."""
+    path = os.path.join(sf_dir, "embeddings.parquet")
+    key = (spark.sparkContext.applicationId, _file_signature(path))
+    return (path, n_cells), key
 
 
 def _ivf_centroids(
     spark: SparkSession, sf_dir: str, n_cells: int = _IVF_CELLS
 ) -> list[list[float]]:
-    key = (sf_dir, n_cells)
-    if key not in _IVF_CENTROIDS:
-        _IVF_CENTROIDS[key] = similarity.train_ivf_centroids(
+    slot, key = _ivf_slot(spark, sf_dir, n_cells)
+    hit = _IVF_CENTROIDS.get(slot)
+    if hit is None or hit[0] != key:
+        hit = _IVF_CENTROIDS[slot] = (key, similarity.train_ivf_centroids(
             spread(load_table(spark, sf_dir, "embeddings")), n_cells=n_cells
-        )
-    return _IVF_CENTROIDS[key]
+        ))
+    return hit[1]
 
 
 # The built index (inverted-list cell assignment) is likewise amortized
@@ -1098,21 +1112,24 @@ def _ivf_centroids(
 # query path must not recompute it. Spark-side it is a cached DataFrame
 # (executor memory, distributed — NOT driver state), keyed like the
 # centroids.
-_IVF_INDEX: dict[tuple[str, int], DataFrame] = {}
+_IVF_INDEX: dict[tuple[str, int], tuple[tuple, DataFrame]] = {}
 
 
 def _ivf_index(
     spark: SparkSession, sf_dir: str, n_cells: int = _IVF_CELLS
 ) -> DataFrame:
-    key = (sf_dir, n_cells)
-    if key not in _IVF_INDEX:
+    slot, key = _ivf_slot(spark, sf_dir, n_cells)
+    hit = _IVF_INDEX.get(slot)
+    if hit is None or hit[0] != key:
+        if hit is not None and hit[0][0] == key[0]:
+            hit[1].unpersist()  # a stopped session freed its cache already
         idx = similarity.build_ivf_index(
             spread(load_table(spark, sf_dir, "embeddings")),
             centroids=_ivf_centroids(spark, sf_dir, n_cells),
         ).cache()
         idx.count()  # materialize the build once, eagerly
-        _IVF_INDEX[key] = idx
-    return _IVF_INDEX[key]
+        hit = _IVF_INDEX[slot] = (key, idx)
+    return hit[1]
 
 
 def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -73,6 +73,23 @@ _JET_VERSION_NAMES = {
     0x03: "ACE 14 (Access 2010+)",
 }
 
+
+def mdb_vintage(data: bytes) -> tuple[str, int]:
+    """The one version decision for every .mdb reader and dispatcher:
+    ``(vintage, version byte)`` from a file's first bytes. The vintage
+    is 'jet2' (no magic string), 'jet3' (Jet magic, version 0x00),
+    'jet4' (Jet magic, version 0x01) or 'ace' (ACE magic, or Jet magic
+    with any other version byte); the version byte is -1 when the file
+    ends before offset 0x14."""
+    magic = data[4:20]
+    ver = data[0x14] if len(data) > 0x14 else -1
+    if magic == _ACE_MAGIC:
+        return "ace", ver
+    if magic != _JET3_MAGIC:
+        return "jet2", ver
+    return {0x00: "jet3", 0x01: "jet4"}.get(ver, "ace"), ver
+
+
 # Tag marking an LVAL (long-value / memo) page: stored where data pages
 # keep their owning-TDEF page number, exactly as the public mdbtools
 # docs describe for Jet 3 LVAL pages. Never collides with a real page
@@ -277,13 +294,20 @@ HHEK_SCHEMAS = {
 }
 
 
-def _decode_memo(slot: bytes, lval_fetch=None) -> str:
+def _cp1252(raw: bytes) -> str:
+    """Jet 2 and Jet 3 text: one cp1252 byte per character."""
+    return raw.decode("cp1252")
+
+
+def _decode_memo(slot: bytes, lval_fetch=None, text=_cp1252) -> str:
     """Decode a MEMO var slot: empty slot -> "", else a 12-byte header
     (u32 len|flags, u32 lval (page<<8)|row, u32 reserved) followed by
     inline text or resolved through ``lval_fetch(page, row) -> bytes``.
-    Unknown flag combinations fail loudly — this header layout follows
-    the public mdbtools Jet 3 memo description and has no Jet 2.0
-    fixture to verify against (GOTEST1's only memo table is empty)."""
+    ``text`` decodes the assembled payload: cp1252 for Jet 2 and Jet 3,
+    ``jet4.decode_jet4_text`` for Jet 4 and ACE. Unknown flag
+    combinations fail loudly — this header layout follows the public
+    mdbtools Jet 3 memo description and has no Jet 2.0 fixture to
+    verify against (GOTEST1's only memo table is empty)."""
     if not slot:
         return ""
     if len(slot) < 12:
@@ -302,7 +326,7 @@ def _decode_memo(slot: bytes, lval_fetch=None) -> str:
                 f"inline memo header claims {length} bytes but slot holds "
                 f"{len(raw)}"
             )
-        return raw.decode("cp1252")
+        return text(raw)
     if flags == _MEMO_LVAL:
         if lval_fetch is None:
             raise ValueError(
@@ -315,7 +339,7 @@ def _decode_memo(slot: bytes, lval_fetch=None) -> str:
                 f"LVAL memo header claims {length} bytes but page row holds "
                 f"{len(raw)}"
             )
-        return raw.decode("cp1252")
+        return text(raw)
     if flags == 0:
         # multi-page chain: each chunk row = u32 LE next-(page<<8|row)
         # pointer (0 terminates) + data bytes
@@ -341,7 +365,7 @@ def _decode_memo(slot: bytes, lval_fetch=None) -> str:
                 f"LVAL chain header claims {length} bytes but the chain holds "
                 f"{len(raw)}"
             )
-        return raw.decode("cp1252")
+        return text(raw)
     raise ValueError(
         f"memo header flags 0x{flags:08x} unknown (inline=0x80000000, "
         "single-page LVAL=0x40000000, chain=0x00000000); other Jet "
@@ -470,14 +494,14 @@ class Jet2File:
         # common kind in the wild) announces itself with a magic string
         # this Jet 2.0 reader must refuse by name, not with a generic
         # decode error three layers down.
-        magic = self._data[4:20]
-        if magic in (_JET3_MAGIC, _ACE_MAGIC):
-            ver = self._data[0x14] if len(self._data) > 0x14 else -1
+        vintage, ver = mdb_vintage(self._data)
+        if vintage != "jet2":
+            magic = self._data[4:20]
             name = _JET_VERSION_NAMES.get(ver, f"unknown (version byte 0x{ver:02x})")
             hint = (
                 "readable natively via sources/jet3.Jet3File (use "
                 "sources.mdb.open_mdb to dispatch on version)"
-                if magic == _JET3_MAGIC and ver == 0x00
+                if vintage == "jet3"
                 else "use the documented jdbc:ucanaccess:// envelope "
                 "(sources/jdbc_io.py) or convert to Jet 3/2.0 first"
             )
@@ -526,7 +550,9 @@ class Jet2File:
     def _page(self, p: int) -> bytes:
         return self._data[p * PAGE_SIZE : (p + 1) * PAGE_SIZE]
 
-    def _raw_rows(self, tdef: int):
+    def _located_rows(self, tdef: int):
+        """Yield (page, row_slot, row bytes) for every live row of the
+        table whose TDEF is ``tdef``."""
         for p in self._pages_by_tdef.get(tdef, ()):
             pg = self._page(p)
             n = struct.unpack_from("<H", pg, 8)[0]
@@ -536,7 +562,10 @@ class Jet2File:
                 if raw_off & 0x8000 or off == 0:  # deleted / moved
                     continue
                 ln = struct.unpack_from("<H", pg, off)[0]
-                yield pg[off : off + ln]
+                yield p, i, pg[off : off + ln]
+
+    def _raw_rows(self, tdef: int):
+        return (row for _, _, row in self._located_rows(tdef))
 
     def row_count(self, table: str) -> int:
         return sum(1 for _ in self._raw_rows(self.tables[table]))
@@ -545,20 +574,10 @@ class Jet2File:
         """Like read_rows, but yields (page, row_slot, rowdict) — the
         (page<<8|row) coordinates index entries point at."""
         schema = schema or HHEK_SCHEMAS.get(table)
-        out = []
-        for p in self._pages_by_tdef.get(self.tables[table], ()):
-            pg = self._page(p)
-            n = struct.unpack_from("<H", pg, 8)[0]
-            for i in range(n):
-                raw_off = struct.unpack_from("<H", pg, 20 + 2 * i)[0]
-                off = raw_off & 0x0FFF
-                if raw_off & 0x8000 or off == 0:
-                    continue
-                ln = struct.unpack_from("<H", pg, off)[0]
-                out.append(
-                    (p, i, _decode_row(pg[off : off + ln], schema, self._lval_fetch))
-                )
-        return out
+        return [
+            (p, i, _decode_row(row, schema, self._lval_fetch))
+            for p, i, row in self._located_rows(self.tables[table])
+        ]
 
     def index_pages(self, table: str) -> dict[int, list[int]]:
         """{slot: [leaf page numbers]} of the table's 0x04 index pages

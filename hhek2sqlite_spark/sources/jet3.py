@@ -1,4 +1,15 @@
-"""Pure-Python reader for Jet 3 (Access 95/97) .mdb files.
+"""Pure-Python reader for Jet 3 (Access 95/97) .mdb files, and the one
+page reader Jet 3 and Jet 4 share.
+
+``JetPageFile`` below holds every job the two vintages have in common:
+the file load and page-size check, data pages grouped by owning TDEF,
+the self-describing catalog walk, the TDEF continuation chain, the
+offset-map slots, 0x4000 overflow pointers, LVAL rows and the
+per-column row loop. ``Jet3File`` and ``jet4.Jet4File`` subclass it and
+supply only their format values: page size, where a data page keeps
+its row count, the TDEF column-record parser, the row-trailer parser
+and the text decoders. The version decision (``jet2.mdb_vintage``) and
+the memo decoder (``jet2._decode_memo``) are shared with Jet 2.
 
 Why this exists: the reference reads its source through the Windows
 ODBC Access driver (/root/reference/hhek2sqlite.go:1265-1275), which
@@ -63,14 +74,13 @@ from decimal import Decimal
 
 from hhek2sqlite_spark.sources.edge import rows_to_df
 from hhek2sqlite_spark.sources.jet2 import (
-    _ACE_MAGIC,
-    _JET3_MAGIC,
     _JET_VERSION_NAMES,
     LVAL_TAG,
+    _cp1252,
     _decode_memo,
+    mdb_vintage,
 )
 
-PAGE_SIZE = 2048  # Jet 3 keeps 2 KiB pages; Jet 4 moved to 4 KiB
 CATALOG_TDEF = 2  # MSysObjects' TDEF page — fixed by the engine
 
 _PG_DATA = 0x01
@@ -140,154 +150,83 @@ class Jet3Table:
         return [c for c in self.columns if not c.is_fixed]
 
 
-def _parse_tdef(data: bytes, page: int, page_of) -> list[Jet3Column]:
-    """Parse one TDEF's column definitions (mdbtools Jet 3 layout:
-    fixed header through 0x2A, num_real_idx*8 index-rowcount bytes,
-    then num_cols 18-byte column records, then length-prefixed names).
-    Multi-page TDEFs (next_pg chains) are concatenated from offset 8
-    of each continuation page before parsing."""
-    pg = page_of(page)
-    if pg[0] != _PG_TDEF:
-        raise ValueError(f"page {page} is not a Jet 3 TDEF (type 0x02)")
-    buf = bytearray(pg)
-    next_pg = struct.unpack_from("<I", pg, 4)[0]
-    seen = {page}
-    while next_pg:
-        if next_pg in seen:
-            raise ValueError(f"TDEF page chain cycles at page {next_pg}")
-        seen.add(next_pg)
-        cont = page_of(next_pg)
-        if cont[0] != _PG_TDEF:
-            raise ValueError(
-                f"TDEF continuation page {next_pg} has type "
-                f"0x{cont[0]:02x}, expected 0x02"
-            )
-        buf += cont[8:]
-        next_pg = struct.unpack_from("<I", cont, 4)[0]
-    num_var_cols = struct.unpack_from("<H", buf, 0x17)[0]
-    num_cols = struct.unpack_from("<H", buf, 0x19)[0]
+def _column(name, col_type, col_num, offset_v, flags, offset_f, length):
+    """One parsed column record; types this reader cannot decode are
+    refused here, at TDEF parse, never decoded as garbage."""
+    if col_type not in _FIXED_WIDTHS and col_type not in (COL_TEXT, COL_MEMO):
+        raise ValueError(
+            f"column {name!r} has Jet type 0x{col_type:02x} "
+            "(binary/OLE/GUID are not decodable without a fixture "
+            "to verify against)"
+        )
+    return Jet3Column(name, col_type, col_num, offset_v, offset_f, length,
+                      bool(flags & 0x01))
+
+
+def _parse_tdef3(buf: bytes) -> tuple[list[Jet3Column], int]:
+    """A Jet 3 TDEF's columns and its var-column count field (mdbtools
+    Jet 3 layout: fixed header through 0x2A, num_real_idx*8
+    index-rowcount bytes, then num_cols 18-byte column records, then
+    u8-length-prefixed cp1252 names)."""
+    num_var_cols, num_cols = struct.unpack_from("<HH", buf, 0x17)
     num_real_idx = struct.unpack_from("<I", buf, 0x1F)[0]
     pos = 0x2B + 8 * num_real_idx
+    # col_type u8@0, col_num u16@1, offset_V u16@3, flags u8@13,
+    # offset_F u16@14, length u16@16
+    recs = [
+        struct.unpack_from("<BHH8xBHH", buf, pos + _COLDEF_LEN * i)
+        for i in range(num_cols)
+    ]
+    pos += _COLDEF_LEN * num_cols
     cols = []
-    raw = []
-    for _ in range(num_cols):
-        (col_type,) = struct.unpack_from("<B", buf, pos)
-        col_num = struct.unpack_from("<H", buf, pos + 1)[0]
-        offset_v = struct.unpack_from("<H", buf, pos + 3)[0]
-        flags = buf[pos + 13]
-        offset_f = struct.unpack_from("<H", buf, pos + 14)[0]
-        length = struct.unpack_from("<H", buf, pos + 16)[0]
-        raw.append((col_type, col_num, offset_v, bool(flags & 0x01),
-                    offset_f, length))
-        pos += _COLDEF_LEN
-    for col_type, col_num, offset_v, is_fixed, offset_f, length in raw:
+    for rec in recs:
         nlen = buf[pos]
         name = bytes(buf[pos + 1 : pos + 1 + nlen]).decode("cp1252")
         pos += 1 + nlen
-        if col_type not in _FIXED_WIDTHS and col_type not in (
-            COL_TEXT,
-            COL_MEMO,
-        ):
+        col = _column(name, *rec)
+        want = _FIXED_WIDTHS.get(col.col_type)
+        if col.is_fixed and want and col.length != want:
             raise ValueError(
-                f"column {name!r} has Jet type 0x{col_type:02x} "
-                "(binary/OLE/GUID are not decodable without a fixture "
-                "to verify against)"
+                f"column {name!r} type 0x{col.col_type:02x} declares "
+                f"length {col.length}, expected {want}"
             )
-        if is_fixed and col_type in _FIXED_WIDTHS:
-            want = _FIXED_WIDTHS[col_type]
-            if want and length != want:
-                raise ValueError(
-                    f"column {name!r} type 0x{col_type:02x} declares "
-                    f"length {length}, expected {want}"
-                )
-        cols.append(
-            Jet3Column(name, col_type, col_num, offset_v, offset_f,
-                       length, is_fixed)
-        )
-    if sum(1 for c in cols if not c.is_fixed) != num_var_cols:
+        cols.append(col)
+    return cols, num_var_cols
+
+
+def _var_bounds3(buf: bytes, end: int, n_var: int) -> list[int]:
+    """The n_var+1 var-column bounds of a Jet 3 row whose null bitmap
+    starts at ``end``. Read backward: u8 var count, the long-row jump
+    table, then one-byte row-relative offsets stored modulo 256 (the
+    same jump-window scheme as jet2.py long rows — that code was
+    adapted FROM this Jet 3 description)."""
+    if buf[end - 1] != n_var:
         raise ValueError(
-            f"TDEF page {page}: var-column count field {num_var_cols} "
-            "disagrees with the column records"
+            f"row trailer var count {buf[end - 1]} != TDEF's {n_var}"
         )
-    return cols
-
-
-def _decode_row3(buf: bytes, table: Jet3Table, lval_fetch):
-    """Decode one Jet 3 row (no length prefix; extent-sliced by the
-    caller from the page offset map)."""
-    num_cols = buf[0]
-    if num_cols != len(table.columns):
-        # Jet supports rows written under an older TDEF revision; with
-        # no real fixture exhibiting that, refuse rather than misalign.
+    end -= 1
+    num_jumps = (len(buf) - 1) // 256
+    jumps = [buf[end - 1 - i] for i in range(num_jumps)]
+    end -= num_jumps
+    bounds = []
+    jumps_used = 0
+    for i in range(n_var + 1):
+        while jumps_used < num_jumps and jumps[jumps_used] == i:
+            jumps_used += 1
+        bounds.append(buf[end - 1 - i] + 256 * jumps_used)
+    if bounds[-1] != end - (n_var + 1) or any(
+        bounds[i] > bounds[i + 1] for i in range(n_var)
+    ):
         raise ValueError(
-            f"row declares {num_cols} columns, TDEF has "
-            f"{len(table.columns)} — schema-evolution rows are not "
-            "decodable without a fixture"
+            "row var-offset table inconsistent with trailer "
+            "position — unknown Jet 3 row variant"
         )
-    end = len(buf)
-    mask_len = (num_cols + 7) // 8
-    mask_bytes = buf[end - mask_len : end]  # byte j covers cols 8j..8j+7
-    end -= mask_len
-    var_cols = table.var_columns
-    bounds = None
-    n_var = 0
-    if var_cols:
-        # fixed-only tables carry NO var trailer (mdbtools: the var_len
-        # byte, jump table and offsets exist only when num_var_cols > 0)
-        n_var = buf[end - 1]
-        if n_var != len(var_cols):
-            raise ValueError(
-                f"row trailer var count {n_var} != TDEF's {len(var_cols)}"
-            )
-        end -= 1
-        # same modulo-256 jump-window scheme as jet2.py long rows (that
-        # code was adapted FROM this Jet 3 description)
-        num_jumps = (len(buf) - 1) // 256
-        jumps = [buf[end - 1 - i] for i in range(num_jumps)]
-        end -= num_jumps
-        raw_bounds = [buf[end - 1 - i] for i in range(n_var + 1)]
-        bounds = []
-        jumps_used = 0
-        for i, rb in enumerate(raw_bounds):
-            while jumps_used < num_jumps and jumps[jumps_used] == i:
-                jumps_used += 1
-            bounds.append(rb + 256 * jumps_used)
-        if bounds[-1] != end - (n_var + 1) or any(
-            bounds[i] > bounds[i + 1] for i in range(n_var)
-        ):
-            raise ValueError(
-                "row var-offset table inconsistent with trailer "
-                "position — unknown Jet 3 row variant"
-            )
-    out = {}
-    for col in table.columns:
-        present = bool(mask_bytes[col.col_num // 8] >> (col.col_num % 8) & 1)
-        if col.col_type == COL_BOOL:
-            out[col.name] = present  # Booleans live IN the bitmap
-            continue
-        if col.is_fixed:
-            start = 1 + col.offset_f
-            raw = buf[start : start + col.length]
-            if len(raw) != col.length:
-                raise ValueError(
-                    f"fixed column {col.name!r} extends past the row"
-                )
-        else:
-            v = col.offset_v
-            if v >= n_var:
-                raise ValueError(
-                    f"var column {col.name!r} offset index {v} out of "
-                    f"range ({n_var} var slots)"
-                )
-            raw = buf[bounds[v] : bounds[v + 1]]
-        if not present:
-            out[col.name] = None
-            continue
-        out[col.name] = _decode_value(col, raw, lval_fetch)
-    return out
+    return bounds
 
 
-def _decode_value(col: Jet3Column, raw: bytes, lval_fetch):
+def _decode_value(col: Jet3Column, raw: bytes):
+    """A present fixed-width value (Booleans, text and memos are
+    decoded by the row loop)."""
     t = col.col_type
     if t == COL_BYTE:
         return raw[0]
@@ -311,64 +250,46 @@ def _decode_value(col: Jet3Column, raw: bytes, lval_fetch):
         return _ACCESS_EPOCH + timedelta(days=whole) + timedelta(
             seconds=round(frac * 86400)
         )
-    if t == COL_TEXT:
-        if col.is_fixed:
-            # fixed-width text pads with NULs to col.length
-            return raw.rstrip(b"\x00").decode("cp1252")
-        return raw.decode("cp1252")
-    if t == COL_MEMO:
-        return _decode_memo(raw, lval_fetch)
-    raise ValueError(f"unhandled Jet 3 column type 0x{t:02x}")
+    raise ValueError(f"unhandled Jet column type 0x{t:02x}")
 
 
-class Jet3File:
-    """One parsed Jet 3 .mdb: self-describing catalog + typed tables."""
+class JetPageFile:
+    """One parsed Jet 3 or Jet 4/ACE .mdb: self-describing catalog +
+    typed tables. A subclass sets the format values and accepts or
+    refuses the file's vintage in ``_check_vintage``:
+
+    - ``PAGE_SIZE``;
+    - ``ROW_COUNT_AT``: offset of a data page's u16 row count; the
+      offset map starts 2 bytes later;
+    - ``ROW_PREFIX``: width of a row's leading column count, which is
+      also where its fixed columns start;
+    - ``_parse_tdef(buf) -> (columns, var-column count field)``;
+    - ``_var_bounds(buf, end, n_var)``: the row's var-column bounds from
+      the trailer that ends where the null bitmap starts;
+    - ``_text`` (var text and memo payloads) and ``_fixed_text``."""
 
     def __init__(self, path: str):
         with open(path, "rb") as fh:
             self._data = fh.read()
-        magic = self._data[4:20]
-        if magic == _ACE_MAGIC or (
-            magic == _JET3_MAGIC
-            and len(self._data) > 0x14
-            and self._data[0x14] != 0x00
-        ):
-            ver = self._data[0x14] if len(self._data) > 0x14 else -1
-            name = _JET_VERSION_NAMES.get(
-                ver, f"unknown (version byte 0x{ver:02x})"
-            )
+        self.vintage, self.version_byte = mdb_vintage(self._data)
+        self._check_vintage(path)
+        if len(self._data) % self.PAGE_SIZE:
             raise ValueError(
-                f"{path}: this is a {name} database; this reader "
-                "supports Jet 3 (Access 95/97) only — Jet 4/ACE moved "
-                "to 4096-byte pages and UCS-2 text and needs the "
-                "documented jdbc:ucanaccess:// envelope "
-                "(sources/jdbc_io.py) or a one-time conversion."
-            )
-        if magic != _JET3_MAGIC:
-            raise ValueError(
-                f"{path}: no 'Standard Jet DB' header — not a Jet 3 "
-                "file (a Jet 2.0/Access 2.0 file is read by "
-                "sources/jet2.Jet2File; use sources.mdb.open_mdb to "
-                "dispatch on version automatically)"
-            )
-        if len(self._data) % PAGE_SIZE:
-            raise ValueError(
-                f"{path}: not a whole number of {PAGE_SIZE}B pages"
+                f"{path}: not a whole number of {self.PAGE_SIZE}B pages"
             )
         # group data pages by owning TDEF, exactly like the Jet 2 reader
         # (a full-file page scan replaces walking the usage maps — same
         # result for well-formed files, no free/used map parsing needed)
         self._pages_by_tdef: dict[int, list[int]] = {}
-        for p in range(len(self._data) // PAGE_SIZE):
+        for p in range(len(self._data) // self.PAGE_SIZE):
             pg = self._page(p)
             if pg[0] == _PG_DATA:
                 owner = struct.unpack_from("<I", pg, 4)[0]
                 self._pages_by_tdef.setdefault(owner, []).append(p)
         # the catalog describes itself: parse MSysObjects' TDEF first,
         # then read its rows to find every user table
-        cat_cols = _parse_tdef(self._data, CATALOG_TDEF, self._page)
-        catalog = Jet3Table("MSysObjects", CATALOG_TDEF, cat_cols)
-        have = {c.name for c in cat_cols}
+        catalog = self._table("MSysObjects", CATALOG_TDEF)
+        have = {c.name for c in catalog.columns}
         for need in ("Id", "Name", "Type"):
             if need not in have:
                 raise ValueError(
@@ -383,25 +304,53 @@ class Jet3File:
             if obj_type != 1 or name is None or name.startswith("MSys"):
                 continue  # 1 = table; others are queries/forms/etc.
             tdef_page = obj_id & 0x00FFFFFF  # low 3 bytes = page
-            self.tables[name] = Jet3Table(
-                name, tdef_page, _parse_tdef(self._data, tdef_page, self._page)
+            self.tables[name] = self._table(name, tdef_page)
+
+    def _table(self, name: str, page: int) -> Jet3Table:
+        """Parse the TDEF at ``page``. Multi-page TDEFs (next_pg chains)
+        are concatenated from offset 8 of each continuation page before
+        the format's column records are read."""
+        pg = self._page(page)
+        if pg[0] != _PG_TDEF:
+            raise ValueError(f"page {page} is not a TDEF page (type 0x02)")
+        buf = bytearray(pg)
+        next_pg = struct.unpack_from("<I", pg, 4)[0]
+        seen = {page}
+        while next_pg:
+            if next_pg in seen:
+                raise ValueError(f"TDEF page chain cycles at page {next_pg}")
+            seen.add(next_pg)
+            cont = self._page(next_pg)
+            if cont[0] != _PG_TDEF:
+                raise ValueError(
+                    f"TDEF continuation page {next_pg} has type "
+                    f"0x{cont[0]:02x}, expected 0x02"
+                )
+            buf += cont[8:]
+            next_pg = struct.unpack_from("<I", cont, 4)[0]
+        cols, num_var_cols = self._parse_tdef(buf)
+        if sum(1 for c in cols if not c.is_fixed) != num_var_cols:
+            raise ValueError(
+                f"TDEF page {page}: var-column count field {num_var_cols} "
+                "disagrees with the column records"
             )
+        return Jet3Table(name, page, cols)
 
     def _page(self, p: int) -> bytes:
-        if p >= len(self._data) // PAGE_SIZE:
+        if p >= len(self._data) // self.PAGE_SIZE:
             raise ValueError(f"page {p} beyond file end")
-        return self._data[p * PAGE_SIZE : (p + 1) * PAGE_SIZE]
+        return self._data[p * self.PAGE_SIZE : (p + 1) * self.PAGE_SIZE]
 
     def _slot_entries(self, pg: bytes):
         """Yield (raw_off, start, end) for EVERY offset-map slot on a
         data page, deleted/lookup slots included — liveness and flag
-        handling belong to the caller. Jet 3 rows have no length
-        prefix: each row ends where the previous offset-map entry
-        begins (row 0 ends at the page end)."""
-        n = struct.unpack_from("<H", pg, 8)[0]
-        prev = PAGE_SIZE
+        handling belong to the caller. Rows have no length prefix: each
+        row ends where the previous offset-map entry begins (row 0 ends
+        at the page end)."""
+        n = struct.unpack_from("<H", pg, self.ROW_COUNT_AT)[0]
+        prev = self.PAGE_SIZE
         for i in range(n):
-            raw_off = struct.unpack_from("<H", pg, 0x0A + 2 * i)[0]
+            raw_off = struct.unpack_from("<H", pg, self.ROW_COUNT_AT + 2 + 2 * i)[0]
             off = raw_off & _OFFSET_MASK
             end = prev
             prev = off if off else prev
@@ -479,15 +428,104 @@ class Jet3File:
                 return pg[off:end]
         raise ValueError(f"LVAL row {row} not found on page {page}")
 
+    def _decode_row(self, buf: bytes, table: Jet3Table) -> dict:
+        """Decode one row, extent-sliced by the caller from the page
+        offset map: the leading column count, then the backward
+        trailer — a null bitmap over ALL columns (bit SET = present;
+        Booleans live in it), before it the format's var-column
+        bounds — then each column's fixed or var slice."""
+        num_cols = int.from_bytes(buf[: self.ROW_PREFIX], "little")
+        if num_cols != len(table.columns):
+            # Jet supports rows written under an older TDEF revision; with
+            # no real fixture exhibiting that, refuse rather than misalign.
+            raise ValueError(
+                f"row declares {num_cols} columns, TDEF has "
+                f"{len(table.columns)} — schema-evolution rows are not "
+                "decodable without a fixture"
+            )
+        end = len(buf) - (num_cols + 7) // 8
+        mask = buf[end:]  # byte j covers cols 8j..8j+7
+        n_var = len(table.var_columns)
+        # fixed-only tables carry NO var trailer (mdbtools: the var
+        # count and offsets exist only when num_var_cols > 0)
+        bounds = self._var_bounds(buf, end, n_var) if n_var else []
+        out = {}
+        for col in table.columns:
+            present = bool(mask[col.col_num // 8] >> (col.col_num % 8) & 1)
+            if col.col_type == COL_BOOL:
+                out[col.name] = present  # Booleans live IN the bitmap
+                continue
+            if col.is_fixed:
+                start = self.ROW_PREFIX + col.offset_f
+                raw = buf[start : start + col.length]
+                if len(raw) != col.length:
+                    raise ValueError(
+                        f"fixed column {col.name!r} extends past the row"
+                    )
+            else:
+                v = col.offset_v
+                if v >= n_var:
+                    raise ValueError(
+                        f"var column {col.name!r} offset index {v} out of "
+                        f"range ({n_var} var slots)"
+                    )
+                raw = buf[bounds[v] : bounds[v + 1]]
+            if not present:
+                out[col.name] = None
+            elif col.col_type == COL_TEXT:
+                out[col.name] = (self._fixed_text if col.is_fixed else self._text)(raw)
+            elif col.col_type == COL_MEMO:
+                out[col.name] = _decode_memo(raw, self._lval_fetch, self._text)
+            else:
+                out[col.name] = _decode_value(col, raw)
+        return out
+
     def _rows_of(self, table: Jet3Table):
         for payload in self._row_payloads(table):
-            yield _decode_row3(payload, table, self._lval_fetch)
+            yield self._decode_row(payload, table)
 
     def read_rows(self, table: str):
         return list(self._rows_of(self.tables[table]))
 
     def row_count(self, table: str) -> int:
         return sum(1 for _ in self._row_payloads(self.tables[table]))
+
+
+class Jet3File(JetPageFile):
+    """One parsed Jet 3 .mdb."""
+
+    PAGE_SIZE = 2048  # Jet 4 moved to 4 KiB
+    ROW_COUNT_AT = 0x08
+    ROW_PREFIX = 1  # u8 column count
+    _parse_tdef = staticmethod(_parse_tdef3)
+    _var_bounds = staticmethod(_var_bounds3)
+    _text = staticmethod(_cp1252)
+
+    @staticmethod
+    def _fixed_text(raw: bytes) -> str:
+        # fixed-width text pads with NULs to the column length
+        return raw.rstrip(b"\x00").decode("cp1252")
+
+    def _check_vintage(self, path: str) -> None:
+        if self.vintage == "jet2":
+            raise ValueError(
+                f"{path}: no 'Standard Jet DB' header — not a Jet 3 "
+                "file (a Jet 2.0/Access 2.0 file is read by "
+                "sources/jet2.Jet2File; use sources.mdb.open_mdb to "
+                "dispatch on version automatically)"
+            )
+        if self.vintage != "jet3":
+            ver = self.version_byte
+            name = _JET_VERSION_NAMES.get(
+                ver, f"unknown (version byte 0x{ver:02x})"
+            )
+            raise ValueError(
+                f"{path}: this is a {name} database; this reader "
+                "supports Jet 3 (Access 95/97) only — Jet 4/ACE moved "
+                "to 4096-byte pages and UCS-2 text and needs the "
+                "documented jdbc:ucanaccess:// envelope "
+                "(sources/jdbc_io.py) or a one-time conversion."
+            )
 
 
 def _spark_schema_for(table: Jet3Table):
@@ -516,8 +554,7 @@ def _spark_schema_for(table: Jet3Table):
 def jet3_table(spark, path: str, table: str):
     """Read one table from a Jet 3 .mdb into a typed Spark DataFrame
     (driver-side materialization — ingest edge, see module docstring)."""
-    f = Jet3File(path)
-    return _table_df(spark, f, table)
+    return _table_df(spark, Jet3File(path), table)
 
 
 def _table_df(spark, f, table: str):

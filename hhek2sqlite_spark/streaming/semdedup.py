@@ -57,6 +57,7 @@ from ..operators.similarity import (
     ADOPT_FROM_STORE,
     SEMDEDUP_STORE_DDL,
     _judge_batch_against_store,
+    _release_assignment,
     _resolve_store_params,
     _store_hint,
     carry_store_router,
@@ -198,6 +199,7 @@ def judge_semdedup_batch(
     # ONE batch-sized eager checkpoint feeding both writes (they must
     # not re-run the judge — same reuse contract as append_to_semdedup_store)
     judged = judged.localCheckpoint(eager=True)
+    _release_assignment(assigned_batch)
     try:
         judged.select("vec_id", "cell", "admitted").write.mode(
             "overwrite"

@@ -736,3 +736,26 @@ def test_approx_quantiles_within_error_bound(spark, sf_dir):
             # +-1 row on top of the rank-error bound: ranks are discrete
             # and the target rank n*p/100 is generally fractional
             assert lo - n / acc - 1 <= target <= hi + n / acc + 1, (et, p, got)
+
+
+def test_similarity_ivf_rebuilds_when_embeddings_are_rewritten(spark, sf_dir, tmp_path):
+    """The IVF serving state (centroids + cached index) is keyed on the
+    content signature of embeddings.parquet, not its path: rewriting the
+    file in place with different vectors must serve the new data."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hhek2sqlite_spark.plans import extensions as ext
+
+    path = tmp_path / "embeddings.parquet"
+    shutil.copy(f"{sf_dir}/embeddings.parquet", path)
+    before = {tuple(r) for r in ext.q_similarity_ivf(spark, str(tmp_path)).collect()}
+    t = pq.read_table(path)
+    rev = pa.array(range(t.num_rows - 1, -1, -1))
+    pq.write_table(t.set_column(1, "embedding", t.column("embedding").take(rev)), path)
+    got = {tuple(r) for r in ext.q_similarity_ivf(spark, str(tmp_path)).collect()}
+    want = {tuple(r) for r in ext.q_similarity_topk(spark, str(tmp_path)).collect()}
+    assert got == want
+    assert got != before  # the rewrite changed the answer

@@ -173,3 +173,41 @@ def test_ace_2010_version_byte_accepted(tmp_path):
     f = open_mdb(p)
     assert f.vintage == "ace"
     assert f.row_count("Personer") == 3
+
+
+def _memo_chain(payload: bytes, split: int, claimed: int | None = None):
+    """A 12-byte chain memo header (flags 0x00) plus a dict-backed
+    lval_fetch holding ``payload`` as two chunks: (5, 0) -> (6, 1)."""
+    import struct
+
+    chunks = {
+        (5, 0): struct.pack("<I", (6 << 8) | 1) + payload[:split],
+        (6, 1): struct.pack("<I", 0) + payload[split:],
+    }
+    length = len(payload) if claimed is None else claimed
+    slot = struct.pack("<III", length, (5 << 8) | 0, 0)
+    return slot, lambda page, row: chunks[(page, row)]
+
+
+def test_memo_chain_decodes_as_jet4_text():
+    from hhek2sqlite_spark.sources.jet2 import _decode_memo
+    from hhek2sqlite_spark.sources.jet4 import decode_jet4_text
+
+    text = "kedja ☃ över två sidor"
+    ucs2 = text.encode("utf-16-le")
+    # split on an odd byte: a UCS-2 character straddles the chunks
+    slot, fetch = _memo_chain(ucs2, 11)
+    assert _decode_memo(slot, fetch, decode_jet4_text) == text
+    comp = b"\xff\xfe" + "räksmörgås €".encode("cp1252")
+    slot, fetch = _memo_chain(comp, 1)  # the 0xFF 0xFE prefix is split too
+    assert _decode_memo(slot, fetch, decode_jet4_text) == "räksmörgås €"
+
+
+def test_memo_chain_length_mismatch_raises():
+    from hhek2sqlite_spark.sources.jet2 import _decode_memo
+    from hhek2sqlite_spark.sources.jet4 import decode_jet4_text
+
+    ucs2 = "kedja".encode("utf-16-le")
+    slot, fetch = _memo_chain(ucs2, 4, claimed=len(ucs2) + 2)
+    with pytest.raises(ValueError, match="LVAL chain header claims 12 bytes"):
+        _decode_memo(slot, fetch, decode_jet4_text)
