@@ -52,7 +52,7 @@ import os
 import struct
 from decimal import ROUND_HALF_UP, Decimal
 
-from hhek2sqlite_spark.sources.edge import df_to_rows, rows_to_df
+from hhek2sqlite_spark.sources.edge import df_to_rows, per_table, rows_to_df
 
 PAGE_SIZE = 2048
 CATALOG_TDEF = 3  # MSysObjects' own TDEF page — fixed by the engine
@@ -1007,15 +1007,18 @@ def jet2_write_database(tables: dict, path: str) -> dict:
     """{name: DataFrame} -> one multi-table .mdb (the reverse half of
     the reference's ``konvertera -backa``). Money columns must arrive as
     exact Decimals (the SQLite reader re-quantizes; parquet carries
-    DecimalType natively). Returns {name: rows written}."""
-    payload = {}
-    counts = {}
-    for name, df in tables.items():
-        schema = HHEK_SCHEMAS.get(name)
-        if schema is None:
+    DecimalType natively). Every table is collected at once, one thread
+    each (``edge.per_table``), before the one file write. Returns
+    {name: rows written}."""
+    for name in tables:
+        if name not in HHEK_SCHEMAS:
             raise ValueError(f"no verified physical layout for table {name!r}")
-        rows = [dict(zip(df.columns, r)) for r in df_to_rows(df)]
-        payload[name] = (schema, rows)
-        counts[name] = len(rows)
+    names = list(tables)
+    spark = tables[names[0]].sparkSession if names else None
+    collected = per_table(spark, lambda name: df_to_rows(tables[name]), names)
+    payload = {
+        name: (HHEK_SCHEMAS[name], [dict(zip(tables[name].columns, r)) for r in rows])
+        for name, rows in zip(names, collected)
+    }
     write_jet2(path, payload)
-    return counts
+    return {name: len(rows) for name, (_, rows) in payload.items()}

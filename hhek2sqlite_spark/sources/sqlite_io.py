@@ -12,13 +12,17 @@ The reference copies MDB<->SQLite row-at-a-time with string-built INSERTs
   the Arrow pair every driver-side container shares, so no Python
   worker runs here. ``read_table`` hands the fetched rows to
   ``rows_to_df`` (a JVM local relation). ``write_table`` collects the
-  table once and binds it with batched parameterized INSERTs
+  table once, then binds it with batched parameterized INSERTs
   (``insert_rows``, shared with the streaming sink) in one transaction
   per table: the reference's T1 shape, not its per-row-transaction T2
-  on Transaktioner (SURVEY.md 2.11). Both directions hold one
-  dimension-sized table in driver memory; the 100 TB path is Parquet,
-  and on a cluster with a JDBC SQLite driver the same DataFrames go
-  through ``df.write.jdbc`` unchanged.
+  on Transaktioner (SURVEY.md 2.11). The collect runs before the
+  transaction opens, so no Spark job runs under SQLite's write lock.
+- ``convert`` runs every table's Spark work at once, one thread per
+  table (``edge.per_table``); the SQLite file still has one writer, the
+  calling thread, which stores the tables in copy order. Both
+  directions therefore hold one hhek database in driver memory; the
+  100 TB path is Parquet, and on a cluster with a JDBC SQLite driver
+  the same DataFrames go through ``df.write.jdbc`` unchanged.
 - Escaping (the reference's toUtf8 quote-doubling, F2) disappears:
   parameter binding cannot corrupt quotes. Its *semantic* — data with
   quotes/non-ASCII survives — is asserted by roundtrip tests.
@@ -44,9 +48,12 @@ from __future__ import annotations
 
 import os
 import sqlite3
+from contextlib import closing
 from datetime import date, datetime
 from decimal import Decimal
+from functools import partial
 from itertools import islice
+from typing import Callable
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -59,7 +66,7 @@ from hhek2sqlite_spark.schema.registry import (
     render_create_index,
     render_create_table,
 )
-from hhek2sqlite_spark.sources.edge import df_to_rows, rows_to_df
+from hhek2sqlite_spark.sources.edge import df_to_rows, per_table, rows_to_df
 
 _Q4 = Decimal("0.0001")
 
@@ -82,11 +89,11 @@ def insert_sql(table: str, cols) -> str:
     return f'INSERT INTO "{table}" ({collist}) VALUES ({placeholders})'
 
 
-def insert_rows(con: sqlite3.Connection, sql: str, df: DataFrame, batch_size: int) -> int:
-    """Bind every row of ``df`` (one edge collect) to ``sql`` with
+def insert_rows(con: sqlite3.Connection, sql: str, rows: list[tuple], batch_size: int) -> int:
+    """Bind ``rows`` (as ``df_to_rows`` collects them) to ``sql`` with
     ``executemany`` in ``batch_size`` chunks. Returns the rows SQLite
     changed."""
-    rows = (tuple(map(_to_sqlite_value, r)) for r in df_to_rows(df))
+    rows = (tuple(map(_to_sqlite_value, r)) for r in rows)
     n = 0
     while batch := list(islice(rows, batch_size)):
         n += con.executemany(sql, batch).rowcount
@@ -133,10 +140,9 @@ def _from_sqlite_value(v, dtype):
     return v
 
 
-def write_table(df: DataFrame, db_path: str, table: str, *, batch_size: int = 10_000) -> int:
-    """CREATE (dialect DDL from the registry) + truncate-before-load (S6)
-    + batched parameterized inserts in one transaction (T1), fed by one
-    edge collect. Returns the row count written."""
+def _collect_table(df: DataFrame, table: str) -> tuple[str, list[str], list[tuple]]:
+    """The Spark side of ``write_table``: the table's DDL, its column
+    order and its rows from one edge collect."""
     spec = HHEK_TABLES.get(table)
     # registry DDL requires EXACTLY the registry's column set; a table
     # from a self-describing source (Jet 3/4) that lacks columns — or
@@ -151,11 +157,20 @@ def write_table(df: DataFrame, db_path: str, table: str, *, batch_size: int = 10
     else:
         cols = list(df.columns)
         ddl = _generic_create_table(df, table)
+    return ddl, cols, df_to_rows(df.select(*cols))
+
+
+def _store_table(
+    db_path: str, table: str, ddl: str, cols: list[str], rows: list[tuple], *,
+    batch_size: int = 10_000,
+) -> int:
+    """The SQLite side of ``write_table``: create, truncate and insert in
+    one transaction. Returns the row count written."""
     con = sqlite3.connect(db_path)
     try:
         con.execute(ddl.replace("CREATE TABLE", "CREATE TABLE IF NOT EXISTS"))
         con.execute(f'DELETE FROM "{table}"')
-        n = insert_rows(con, insert_sql(table, cols), df.select(*cols), batch_size)
+        n = insert_rows(con, insert_sql(table, cols), rows, batch_size)
         con.commit()
         return n
     except Exception:
@@ -163,6 +178,14 @@ def write_table(df: DataFrame, db_path: str, table: str, *, batch_size: int = 10
         raise
     finally:
         con.close()
+
+
+def write_table(df: DataFrame, db_path: str, table: str, *, batch_size: int = 10_000) -> int:
+    """CREATE (dialect DDL from the registry) + truncate-before-load (S6)
+    + batched parameterized inserts in one transaction (T1), fed by one
+    edge collect that runs before the transaction opens. Returns the row
+    count written."""
+    return _store_table(db_path, table, *_collect_table(df, table), batch_size=batch_size)
 
 
 def read_table(spark: SparkSession, db_path: str, table: str) -> DataFrame:
@@ -180,6 +203,14 @@ def read_table(spark: SparkSession, db_path: str, table: str) -> DataFrame:
     return rows_to_df(spark, [tuple(map(_from_sqlite_value, r, dtypes)) for r in raw], schema)
 
 
+def _copy_order(names) -> list[str]:
+    """``names`` in the reference's fixed copy order; tables outside the
+    HHEK set (possible from a self-describing Jet 3 source) follow
+    alphabetically rather than being dropped."""
+    extras = sorted(n for n in names if n not in COPY_ORDER)
+    return [n for n in [*COPY_ORDER, *extras] if n in names]
+
+
 def write_database(
     tables: dict[str, DataFrame],
     db_path: str,
@@ -191,18 +222,39 @@ def write_database(
     (/root/reference/hhek2sqlite.go:1287-1296). ``overwrite`` is the S7
     destination reset; ``create_indexes`` mirrors the reverse-direction
     secondary-index DDL (forward creates none, SURVEY.md 2.12)."""
+    names = _copy_order(tables)
+    spark = tables[names[0]].sparkSession if names else None
+    return _write_database(
+        spark, names, tables.__getitem__, db_path,
+        overwrite=overwrite, create_indexes=create_indexes,
+    )
+
+
+def _write_database(
+    spark: SparkSession | None,
+    names: list[str],
+    load: Callable[[str], DataFrame],
+    db_path: str,
+    *,
+    overwrite: bool,
+    create_indexes: bool,
+) -> dict[str, int]:
+    """``write_database`` over ``load(name)`` for each of ``names``, in
+    copy order: every table's load and collect run at once, one thread
+    each, and the calling thread stores them in ``names`` order as they
+    arrive."""
     if overwrite and os.path.exists(db_path):
         os.remove(db_path)
     counts = {}
-    extras = sorted(n for n in tables if n not in COPY_ORDER)
-    for name in [*COPY_ORDER, *extras]:
-        if name in tables:
-            counts[name] = write_table(tables[name], db_path, name)
+    collected = per_table(spark, lambda name: _collect_table(load(name), name), names)
+    with closing(collected):
+        for name, (ddl, cols, rows) in zip(names, collected):
+            counts[name] = _store_table(db_path, name, ddl, cols, rows)
     if create_indexes:
         con = sqlite3.connect(db_path)
         try:
             for name in COPY_ORDER:
-                if name in tables:
+                if name in names:
                     for stmt in render_create_index(name, "sqlite"):
                         con.execute(stmt)
             con.commit()
@@ -211,7 +263,8 @@ def write_database(
     return counts
 
 
-def read_database(spark: SparkSession, db_path: str) -> dict[str, DataFrame]:
+def _hhek_tables_in(db_path: str) -> list[str]:
+    """The HHEK tables ``db_path`` holds, in copy order."""
     con = sqlite3.connect(db_path)
     try:
         present = {
@@ -219,7 +272,11 @@ def read_database(spark: SparkSession, db_path: str) -> dict[str, DataFrame]:
         }
     finally:
         con.close()
-    return {name: read_table(spark, db_path, name) for name in COPY_ORDER if name in present}
+    return [name for name in COPY_ORDER if name in present]
+
+
+def read_database(spark: SparkSession, db_path: str) -> dict[str, DataFrame]:
+    return {name: read_table(spark, db_path, name) for name in _hhek_tables_in(db_path)}
 
 
 def _parquet_files(path: str) -> list[str]:
@@ -243,6 +300,10 @@ def _read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(schema).parquet(path)
 
 
+def _read_parquet_dir(spark: SparkSession, src: str, name: str) -> DataFrame:
+    return _read_parquet_table(spark, os.path.join(src, name))
+
+
 def convert(
     spark: SparkSession,
     src: str,
@@ -261,6 +322,10 @@ def convert(
     - ``dir -> .db``  : Parquet -> SQLite
     - any combination of the three endpoint kinds works the same way
 
+    Every table's read and Spark job run at once, one thread per table
+    (``edge.per_table``); an SQLite destination is still written by the
+    calling thread alone, in copy order.
+
     Returns the per-table row counts. A Parquet destination's counts come
     from the footers of the files just written, so no Spark job recounts
     the source.
@@ -278,31 +343,28 @@ def convert(
 
     src_kind, dst_kind = _kind(src), _kind(dst)
     if src_kind == "mdb":
-        tables = mdb_read_database(spark, src)
+        frames = mdb_read_database(spark, src)  # one parse of the whole file
+        names, load = list(frames), frames.__getitem__
     elif src_kind == "sqlite":
-        tables = read_database(spark, src)
+        names, load = _hhek_tables_in(src), partial(read_table, spark, src)
     else:
-        tables = {
-            name: _read_parquet_table(spark, os.path.join(src, name))
-            for name in COPY_ORDER
-            if os.path.exists(os.path.join(src, name))
-        }
-    # stable reference copy order for the write side; tables outside
-    # the HHEK set (possible from a self-describing Jet 3 source)
-    # follow alphabetically rather than being dropped
-    extras = sorted(name for name in tables if name not in COPY_ORDER)
-    tables = {
-        name: tables[name]
-        for name in [*COPY_ORDER, *extras]
-        if name in tables
-    }
+        names = [name for name in COPY_ORDER if os.path.exists(os.path.join(src, name))]
+        load = partial(_read_parquet_dir, spark, src)
+    names = _copy_order(names)
     if dst_kind == "mdb":
-        return jet2_write_database(tables, dst)
+        return jet2_write_database({name: load(name) for name in names}, dst)
     if dst_kind == "sqlite":
-        return write_database(tables, dst, create_indexes=create_indexes)
-    counts = {}
-    for name, df in tables.items():
+        if src_kind == "sqlite":
+            # every read finishes before the destination is reset, so a
+            # file converted onto itself keeps its rows
+            load = {name: load(name) for name in names}.__getitem__
+        return _write_database(
+            spark, names, load, dst, overwrite=True, create_indexes=create_indexes
+        )
+
+    def to_parquet(name: str) -> int:
         path = os.path.join(dst, name)
-        df.write.mode("overwrite").parquet(path)
-        counts[name] = sum(pq.read_metadata(f).num_rows for f in _parquet_files(path))
-    return counts
+        load(name).write.mode("overwrite").parquet(path)
+        return sum(pq.read_metadata(f).num_rows for f in _parquet_files(path))
+
+    return dict(zip(names, per_table(spark, to_parquet, names)))

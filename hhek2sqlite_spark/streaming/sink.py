@@ -45,6 +45,7 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from hhek2sqlite_spark.sources.edge import df_to_rows
 from hhek2sqlite_spark.sources.sqlite_io import insert_rows, insert_sql
 
 COMMITS_TABLE = "_stream_commits"
@@ -149,7 +150,7 @@ def _write_once(
         ).fetchone()
         if seen:
             return 0
-        n = insert_rows(con, sql, rows_df, batch_size)
+        n = insert_rows(con, sql, df_to_rows(rows_df), batch_size)
         con.execute(
             f'INSERT INTO "{COMMITS_TABLE}" (app_id, sink_table, batch_id)'
             " VALUES (?, ?, ?)",

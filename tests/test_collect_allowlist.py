@@ -117,10 +117,10 @@ ALLOWLIST: dict[tuple[str, str, str], tuple[int, str]] = {
         1,
         "container edge: the one DataFrame -> driver rows crossing of every "
         "single-file writer (SQLite write_table, the Jet .mdb writer, the "
-        "streaming SQLite sink) — O(one hhek table) for the writers, the "
-        "scale read_table already holds with its fetchall, and O(one "
-        "micro-batch) for the sink, sized by the stream's "
-        "maxFilesPerTrigger/maxOffsetsPerTrigger",
+        "streaming SQLite sink) — O(one hhek database) for the writers, "
+        "which collect every table at once, the scale read_database "
+        "already holds as local relations, and O(one micro-batch) for the "
+        "sink, sized by the stream's maxFilesPerTrigger/maxOffsetsPerTrigger",
     ),
     ("testing/parity.py", "run_parity", "toPandas"): (
         1,

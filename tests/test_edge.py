@@ -10,7 +10,7 @@ import pytest
 
 from hhek2sqlite_spark.schema.fixtures import golden_tables
 from hhek2sqlite_spark.sources import jet2, jet3, jet4, sqlite_io
-from hhek2sqlite_spark.sources.edge import df_to_rows
+from hhek2sqlite_spark.sources.edge import df_to_rows, per_table
 from hhek2sqlite_spark.streaming import sink
 from tests.jet3_fixture import build_jet3
 from tests.jet4_fixture import build_jet4
@@ -96,3 +96,32 @@ def test_sink_writes_a_multi_partition_batch_in_one_job(spark, tmp_path, count_j
     )
     assert n == 30
     assert jobs == 1
+
+
+def test_jet2_writer_runs_one_job_per_table(spark, tmp_path, count_jobs):
+    tables = golden_tables(spark)
+    counts, jobs = count_jobs(
+        lambda: jet2.jet2_write_database(tables, str(tmp_path / "golden.mdb"))
+    )
+    assert list(counts) == list(tables)
+    assert jobs == len(tables)
+
+
+def test_per_table_yields_in_input_order_with_the_callers_job_group(spark):
+    """The slowest name comes first and still comes out first; every
+    thread sees the job description the caller set."""
+    sc = spark.sparkContext
+    names = ["c", "b", "a"]
+    delay = {"c": 0.3, "b": 0.15, "a": 0.0}
+
+    def fn(name):
+        time.sleep(delay[name])
+        return name, sc.getLocalProperty("spark.job.description")
+
+    sc.setJobGroup("per-table-test", "per-table description")
+    try:
+        got = list(per_table(spark, fn, names))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == [(n, "per-table description") for n in names]

@@ -6,13 +6,15 @@ string), Överföringar's NULL Kontrollnr survives, quotes and non-ASCII
 survive without escaping machinery.
 """
 
+import sqlite3
+import threading
 from decimal import Decimal
 
 import pytest
 
 from hhek2sqlite_spark.plans import hhek
 from hhek2sqlite_spark.schema.fixtures import golden_tables
-from hhek2sqlite_spark.schema.registry import HHEK_TABLES
+from hhek2sqlite_spark.schema.registry import COPY_ORDER, HHEK_TABLES
 from hhek2sqlite_spark.sources import sqlite_io
 from hhek2sqlite_spark.streaming import sink
 
@@ -330,3 +332,77 @@ def test_convert_runs_one_job_per_table_each_way(spark, extra_tables, count_jobs
     assert jobs == n  # one parquet write each; no recount
     _, jobs = count_jobs(lambda: sqlite_io.convert(spark, pq, db2))
     assert jobs == n  # one toArrow each; no schema inference
+
+
+def _table_order(db: str) -> list[str]:
+    con = sqlite3.connect(db)
+    try:
+        return [r[0] for r in con.execute("SELECT name FROM sqlite_master WHERE type='table'")]
+    finally:
+        con.close()
+
+
+def test_write_table_collects_before_taking_the_write_lock(spark, extra_tables, tmp_path, monkeypatch):
+    """The Spark job runs before the table's transaction opens: another
+    writer can take SQLite's write lock while the rows are collected."""
+    db = str(tmp_path / "lock.db")
+    sqlite_io.write_database({"Personer": extra_tables["Personer"]}, db)
+    collect = sqlite_io.df_to_rows
+    locked = []
+
+    def collect_while_another_writer_locks(df):
+        other = sqlite3.connect(db, timeout=0)
+        try:
+            other.execute("BEGIN IMMEDIATE")
+            other.rollback()
+            locked.append(False)
+        except sqlite3.OperationalError:
+            locked.append(True)
+        finally:
+            other.close()
+        return collect(df)
+
+    monkeypatch.setattr(sqlite_io, "df_to_rows", collect_while_another_writer_locks)
+    assert sqlite_io.write_table(extra_tables["Personer"], db, "Personer") == 3
+    assert locked == [False]
+
+
+def test_convert_to_sqlite_writes_tables_in_copy_order(spark, extra_tables, tmp_path):
+    db1 = str(tmp_path / "src.db")
+    pq = str(tmp_path / "pq")
+    db2 = str(tmp_path / "dst.db")
+    sqlite_io.write_database(extra_tables, db1)
+    sqlite_io.convert(spark, db1, pq)
+    sqlite_io.convert(spark, pq, db2)
+    assert _table_order(db2) == [n for n in COPY_ORDER if n in extra_tables]
+
+
+def test_write_database_puts_sorted_extras_after_copy_order(spark, extra_tables, tmp_path):
+    extra = spark.createDataFrame([(1, "x")], "id int, s string")
+    tables = {"Zeta": extra, "Alfa": extra, **extra_tables}
+    db = str(tmp_path / "extras.db")
+    counts = sqlite_io.write_database(tables, db)
+    want = [*(n for n in COPY_ORDER if n in extra_tables), "Alfa", "Zeta"]
+    assert list(counts) == want
+    assert _table_order(db) == want
+
+
+def test_convert_raises_a_tables_read_error_unwrapped(spark, extra_tables, tmp_path):
+    """A NULL in a non-nullable column fails that table's read on its
+    thread; convert raises the reader's own error once every thread
+    has finished."""
+    db = str(tmp_path / "bad.db")
+    sqlite_io.write_database(extra_tables, db)
+    con = sqlite3.connect(db)
+    con.execute('DROP TABLE "DtbVer"')  # its DDL has VerNum NOT NULL
+    con.execute('CREATE TABLE "DtbVer" ("VerNum" TEXT, "Benämning" TEXT, "Losenord" TEXT)')
+    con.execute('INSERT INTO "DtbVer" VALUES (NULL, \'x\', \'y\')')
+    con.commit()
+    con.close()
+    with pytest.raises(ValueError) as direct:
+        sqlite_io.read_table(spark, db, "DtbVer")
+    with pytest.raises(ValueError) as via_convert:
+        sqlite_io.convert(spark, db, str(tmp_path / "pq"))
+    assert type(via_convert.value) is type(direct.value)
+    assert str(via_convert.value) == str(direct.value)
+    assert not [t for t in threading.enumerate() if t.name.startswith("per_table")]
