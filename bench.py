@@ -1,12 +1,18 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"""Driver benchmark contract: runs every registered query at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) and prints ONE JSON
+line {"metric": ..., "value": total_sec, "unit": "sec",
+"queries": {name: sec}, "sf": ...}. The full per-query map and any
+errors go to $SPARK_GRAFT_DETAIL_OUT (default BENCH_DETAIL.json next to
+this file).
 
 Execution is forced with the noop sink (full computation, no driver
 collect) — the measured path is scan -> shuffle -> agg/join, the same
 thing a cluster run would spend its time on.
+
+This is one warm run and one timed run per query, nothing more. The
+repo's benchmark, with alternating pairs, medians and stated bounds, is
+``perfbench/`` (see ``BENCHMARK.json``).
 """
 
 from __future__ import annotations
@@ -14,8 +20,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import statistics
-import subprocess
 import sys
 import time
 
@@ -27,10 +31,10 @@ from hhek2sqlite_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Every registered query is benched (r4): the list derives from the
-# registry so a new operator automatically gains perf evidence. The
-# original 23-name headline subset is kept for round-over-round total
-# comparability — the JSON reports BOTH totals.
+# Every registered query is benched: the list derives from the registry
+# so a new operator automatically gains perf evidence. The original
+# 23-name headline subset is kept for comparability with earlier
+# readings — the JSON reports BOTH totals.
 HEADLINE_23 = (
     "balance_reconciliation",
     "pricing_summary",
@@ -57,14 +61,9 @@ HEADLINE_23 = (
     "small_qty_revenue",
 )
 
-# r18 (VERDICT r17 #1): ADDITIONS-ONLY expansion of the reported set.
-# The 23 legacy names above are untouched (same keys, same methodology,
-# headline23_total still their sum); these 15 are the most expensive
-# optimized query paths, which the r17 round-over-round lens could not
-# see because the stdout "queries" map only carried the legacy 23. They
-# were ALWAYS benched (BENCH_QUERIES derives from the registry); the
-# only change is that their timings now ride on the stdout JSON line so
-# the driver's PERF comparison measures them.
+# The most expensive optimized query paths. They are always benched
+# (BENCH_QUERIES derives from the registry); listing them here only puts
+# their timings on the stdout line next to the headline 23.
 HEADLINE_EXTRA = (
     "similarity_lsh",
     "similarity_lsh_highsim",
@@ -85,45 +84,15 @@ HEADLINE_EXTRA = (
 
 BENCH_QUERIES = tuple(sorted(QUERIES))
 
+# A run that starts with the 1-minute load average at or above this is
+# stamped "contended": its per-query timings share the cores with
+# someone else.
+QUIET_LOAD = 1.0
+
 
 def _sf_from_dir(path: str) -> float:
     m = re.search(r"sf([0-9.]+)", path)
     return float(m.group(1)) if m else -1.0
-
-
-def _floor_reference() -> dict[str, float]:
-    """Per-query quiet-box medians from PERF_FLOOR.json, for outlier
-    detection — only when that artifact was measured at the same sf_dir
-    this bench run uses."""
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "PERF_FLOOR.json")
-    try:
-        with open(path) as fh:
-            d = json.load(fh)
-    except (OSError, ValueError):
-        return {}
-    if d.get("sf_dir") != SF_DIR:
-        return {}
-    return {
-        name: rec["spark_sec"]
-        for name, rec in d.get("queries", {}).items()
-        if isinstance(rec, dict) and isinstance(rec.get("spark_sec"), (int, float))
-    }
-
-
-# this box's co-tenant load draws 2.5-5x outlier samples on minute
-# timescales (round-6: customer_upsert 0.34s->0.92s for identical code,
-# quiet-box 0.245s). Any query whose wall exceeds its quiet-box median
-# by more than this factor is re-sampled once and the MIN kept.
-OUTLIER_FACTOR = 2.5
-
-# round-8 suite-level drift guard (VERDICT r7: BENCH_r07 published from a
-# contended window drifted ALL 23 headline queries ~1.3x — under the
-# per-query 2.5x trigger, so n_resampled was 0 and the bogus total
-# shipped). If the headline-23 total exceeds this factor times its
-# PERF_FLOOR-predicted sum, the headline set is re-run once and
-# per-query minima are kept; the JSON records both totals so a reader
-# can see the guard fired.
-DRIFT_FACTOR = 1.25
 
 
 def _loadavg() -> list[float]:
@@ -135,140 +104,23 @@ def _loadavg() -> list[float]:
         return []
 
 
-# BASELINE.md quiet-window rule: perf numbers are comparable only when
-# the 15-min loadavg is < 1. The bench can't refuse to publish (the
-# driver records whatever this script prints, and a missing BENCH is
-# worse than a marked one), so it (a) WAITS a bounded time for the box
-# to go quiet, then (b) stamps the artifact "contended" when it still
-# isn't — downstream drift-guard comparisons must treat a contended
-# run as totals-only evidence. (VERDICT r9 task 7.)
-QUIET_LOAD = 1.0
-LOAD_WAIT_SECS = float(os.environ.get("SPARK_GRAFT_LOAD_WAIT", "600"))
-
-
-def _wait_for_quiet() -> float:
-    """Poll until the box is CURRENTLY quiet or the bounded wait
-    expires. Returns seconds actually waited.
-
-    Round-12 fix (VERDICT r11 task 6): the old gate demanded the
-    15-MIN average drop under QUIET_LOAD, which a 300s wait can rarely
-    deliver — the 15-min average remembers a departed co-tenant for
-    most of 15 minutes, so r10 AND r11 both waited the full budget and
-    then stamped "contended" on a box that was often already idle.
-    Current quiet is what the measurement needs: gate on the 1-MIN
-    average (plus a mild 5-min ceiling so we don't start in the first
-    seconds of a dip while a bursty co-tenant is merely between
-    spikes)."""
-    t0 = time.monotonic()
-    deadline = t0 + LOAD_WAIT_SECS
-    while time.monotonic() < deadline:
-        la = _loadavg()
-        if not la or (la[0] < QUIET_LOAD and la[1] < 3 * QUIET_LOAD):
-            break
-        time.sleep(15)
-    return round(time.monotonic() - t0, 1)
-
-
-def _paired_headline(spark) -> dict:
-    """--paired (VERDICT r14 #5): the canonical headline number as the
-    MEDIAN of 3 interleaved Spark/DuckDB passes — the same engine-A/B
-    protocol used for query-level plan decisions, promoted to the
-    suite level. Rationale: r14 published two quiet readings (13.63s
-    chain-interior vs 16.57s idle-start, x1.2 apart, zero code delta),
-    so loadavg gating alone is exhausted as a control; interleaving
-    both engines through the same minutes makes drift hit both alike,
-    and the recorded spread tells a reader whether a round-over-round
-    delta exceeds the window's own noise."""
-    import duckdb
-
-    from hhek2sqlite_spark.plans import ORACLE_SQL
-    from hhek2sqlite_spark.sources.parquet import TABLES
-
-    spark_totals: list[float] = []
-    oracle_totals: list[float] = []
-    per_query: dict[str, list[float]] = {n: [] for n in HEADLINE_23}
-    for _rep in range(3):
-        total = 0.0
-        for name in HEADLINE_23:
-            t0 = time.perf_counter()
-            with owned_result(QUERIES[name](spark, SF_DIR)) as df:
-                df.write.format("noop").mode("overwrite").save()
-                dt = time.perf_counter() - t0
-            per_query[name].append(dt)
-            total += dt
-        spark_totals.append(round(total, 4))
-        con = duckdb.connect()
-        con.execute(f"SET threads={os.cpu_count()}")
-        for t in TABLES:
-            path = os.path.join(SF_DIR, f"{t}.parquet")
-            if os.path.isdir(path):
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"read_parquet('{path}/*.parquet')"
-                )
-            elif os.path.exists(path):
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-                )
-        t0 = time.perf_counter()
-        for name in HEADLINE_23:
-            con.execute(ORACLE_SQL[name]).fetchall()
-        oracle_totals.append(round(time.perf_counter() - t0, 4))
-        con.close()
-    return {
-        "protocol": (
-            "3 interleaved Spark/DuckDB headline-23 passes in one session "
-            "(after the full-sweep warm); medians are the canonical numbers, "
-            "the totals lists are the spread"
-        ),
-        "spark_totals": spark_totals,
-        "oracle_totals": oracle_totals,
-        "headline23_paired_median": round(statistics.median(spark_totals), 4),
-        "oracle23_paired_median": round(statistics.median(oracle_totals), 4),
-        "queries_median": {
-            n: round(statistics.median(v), 4) for n, v in per_query.items()
-        },
-        "loadavg_at_paired": _loadavg(),
-    }
-
-
-def main() -> None:
-    load_waited = _wait_for_quiet()
-    spark = get_spark("hhek2sqlite_spark-bench")
-    spark.sparkContext.setLogLevel("ERROR")
+def main(spark) -> None:
     load_start = _loadavg()
-    # contended = the box was NOT currently quiet when the run began
-    # (1-min gate; the old 15-min-based stamp mislabeled already-idle
-    # boxes for up to 15 minutes after a co-tenant left). The 15-min
-    # value stays in loadavg_start for transparency, and the per-query
-    # drift re-sampling below still self-defends against co-tenants
-    # that ARRIVE mid-run.
     contended = bool(load_start) and load_start[0] >= QUIET_LOAD
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     for name in BENCH_QUERIES:
-        fn = QUERIES.get(name)
-        if fn is None:
-            continue
+        fn = QUERIES[name]
         # failure-isolated: one raising query must never kill the run —
-        # a partial bench beats a dead one (round 3 shipped no number
-        # because a single AnalysisException aborted the whole script)
+        # a partial bench beats a dead one
         try:
             with owned_result(fn(spark, SF_DIR)) as df:
                 df.write.format("noop").mode("overwrite").save()  # warm
-            # query CONSTRUCTION stays inside the timed window. NOTE a
-            # round-10 semantics change for checkpointing operators
-            # (tfidf_topk, boilerplate_shingles): in the persist() era
-            # the warm run populated the CacheManager and the timed
-            # re-construction served the shared relation FROM CACHE,
-            # so pre-round-10 per-query numbers exclude its
-            # materialization; with localCheckpoint(eager=True) the
-            # timed run re-materializes it inside the window. Do not
-            # compare r9-vs-r10 per-query timings for those operators —
-            # PERF_FLOOR was re-baselined in round 10 (see BASELINE.md)
+            # query CONSTRUCTION stays inside the timed window, so a
+            # checkpointing operator re-materializes its relation here.
             # owned_result frees the localCheckpoint block sets at exit
             # (after the timing capture): ContextCleaner reclamation is
-            # nondeterministic, and a 93-query x multi-rep sweep would
+            # nondeterministic, and a sweep of every query would
             # otherwise pool orphaned checkpoint blocks in executor memory
             t0 = time.perf_counter()
             with owned_result(fn(spark, SF_DIR)) as timed:
@@ -276,121 +128,20 @@ def main() -> None:
                 timings[name] = round(time.perf_counter() - t0, 4)
         except Exception as exc:  # noqa: BLE001
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-    # self-defense against co-tenant noise: re-sample outliers vs the
-    # quiet-box floor medians and keep the min (min is the right
-    # statistic here — noise only ever ADDS time)
-    floors = _floor_reference()
-    resampled: dict[str, list[float]] = {}
-    for name, wall in list(timings.items()):
-        ref = floors.get(name)
-        if ref and wall > OUTLIER_FACTOR * ref:
-            try:
-                t0 = time.perf_counter()
-                with owned_result(QUERIES[name](spark, SF_DIR)) as rerun:
-                    rerun.write.format("noop").mode("overwrite").save()
-                    second = round(time.perf_counter() - t0, 4)
-            except Exception:  # noqa: BLE001
-                continue
-            resampled[name] = [wall, second]
-            timings[name] = min(wall, second)
-    # a partial headline total would look FASTER than prior rounds — emit
-    # null + a completeness flag instead when any headline query errored
+    # a partial headline total would look FASTER than a complete one —
+    # emit null + a completeness flag instead when any headline query errored
     hl_complete = all(n in timings for n in HEADLINE_23)
     headline23_total = (
         round(sum(timings[n] for n in HEADLINE_23), 4) if hl_complete else None
     )
-    # suite-level drift guard: uniform co-tenant drift stays under the
-    # per-query outlier trigger but inflates the total — compare against
-    # the floor-predicted headline sum and re-run the headline set once
-    drift_guard: dict[str, object] = {"factor": DRIFT_FACTOR}
-    if hl_complete and floors and all(n in floors for n in HEADLINE_23):
-        predicted = round(sum(floors[n] for n in HEADLINE_23), 4)
-        drift_guard["predicted_headline23"] = predicted
-        drift_guard["first_headline23"] = headline23_total
-        if headline23_total > DRIFT_FACTOR * predicted:
-            for name in HEADLINE_23:
-                try:
-                    t0 = time.perf_counter()
-                    with owned_result(QUERIES[name](spark, SF_DIR)) as rerun:
-                        rerun.write.format("noop").mode("overwrite").save()
-                        second = round(time.perf_counter() - t0, 4)
-                except Exception:  # noqa: BLE001
-                    continue
-                timings[name] = min(timings[name], second)
-            headline23_total = round(sum(timings[n] for n in HEADLINE_23), 4)
-            drift_guard["reran"] = True
-            drift_guard["final_headline23"] = headline23_total
-        else:
-            drift_guard["reran"] = False
-    # --paired: the interleaved-median protocol AFTER the full sweep
-    # (which doubles as the warm pass); the paired median becomes the
-    # canonical headline number, the single-pass total stays for
-    # round-over-round comparability with r1-r14 artifacts
-    paired = None
-    if "--paired" in sys.argv and hl_complete:
-        paired = _paired_headline(spark)
     total = round(sum(timings.values()), 4)
+    detail_path = os.environ.get("SPARK_GRAFT_DETAIL_OUT") or os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
+    )
     # The driver keeps only the last ~2000 chars of stdout and parses the
-    # JSON line it finds there (BENCH_r05 had parsed:null because the full
-    # 83-query map pushed the line start out of that window). So: SHORT
-    # final stdout line — headline-23 timings only — and the complete
-    # per-query map + errors goes to BENCH_DETAIL.json next to this file.
-    detail = {
-        "metric": "headline_queries_total_wall",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": _sf_from_dir(SF_DIR),
-        "headline23_total": headline23_total,
-        "headline23_complete": hl_complete,
-        "n_queries": len(timings),
-        "outlier_resampled": resampled,
-        "drift_guard": drift_guard,
-        "loadavg_start": load_start,
-        "loadavg_end": _loadavg(),
-        "load_waited_sec": load_waited,
-        "contended": contended,
-    }
-    if paired is not None:
-        detail["paired"] = paired
-    if contended:
-        detail["contended_note"] = (
-            "published from a loaded window (15-min loadavg >= "
-            f"{QUIET_LOAD}); per-query timings are co-tenant-noise-bound — "
-            "treat as totals-only evidence per BASELINE.md"
-        )
-    if errors:
-        detail["errors"] = errors
-    # SPARK_GRAFT_DETAIL_OUT redirects the detail artifact so local
-    # sf0.01 iteration runs don't clobber the committed sf0.1
-    # BENCH_DETAIL.json. Without the env var, a COMMITTED (git-clean)
-    # BENCH_DETAIL.json is never overwritten implicitly (VERDICT r12:
-    # the driver's end-of-round bench clobbered the builder's committed
-    # quiet-window artifact) — the run diverts to BENCH_DETAIL_auto.json
-    # instead; superseding the canonical artifact takes an explicit
-    # SPARK_GRAFT_DETAIL_OUT=BENCH_DETAIL.json.
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    detail_path = os.environ.get("SPARK_GRAFT_DETAIL_OUT")
-    if not detail_path:
-        detail_path = os.path.join(repo_dir, "BENCH_DETAIL.json")
-        if os.path.exists(detail_path):
-            try:
-                clean = (
-                    subprocess.run(
-                        ["git", "status", "--porcelain", "BENCH_DETAIL.json"],
-                        cwd=repo_dir,
-                        capture_output=True,
-                        text=True,
-                        timeout=10,
-                    ).stdout.strip()
-                    == ""
-                )
-            except Exception:
-                clean = False  # no git -> behave as before
-            if clean:
-                detail_path = os.path.join(repo_dir, "BENCH_DETAIL_auto.json")
-    with open(detail_path, "w") as fh:
-        json.dump(detail, fh, indent=1)
+    # JSON line it finds there, so the final stdout line carries the
+    # headline timings only; the detail file gets the same object with
+    # the complete per-query map + errors.
     out = {
         "metric": "headline_queries_total_wall",
         "value": total,
@@ -405,20 +156,25 @@ def main() -> None:
         "headline23_complete": hl_complete,
         "n_queries": len(timings),
         "n_errors": len(errors),
-        "n_resampled": len(resampled),
-        "drift_reran": drift_guard.get("reran"),
+        # kept at fixed values so parsers of earlier lines see the
+        # same 16 keys; nothing resamples, reruns or waits any more
+        "n_resampled": 0,
+        "drift_reran": None,
         "loadavg_start": load_start,
-        "loadavg_end": detail["loadavg_end"],
-        "load_waited_sec": load_waited,
+        "loadavg_end": _loadavg(),
+        "load_waited_sec": 0.0,
         "contended": contended,
         "detail": os.path.basename(detail_path),
     }
-    if paired is not None:
-        out["headline23_paired_median"] = paired["headline23_paired_median"]
-        out["paired_spread"] = paired["spark_totals"]
+    with open(detail_path, "w") as fh:
+        json.dump({**out, "queries": timings, "errors": errors}, fh, indent=1)
     print(json.dumps(out))
-    spark.stop()
 
 
 if __name__ == "__main__":
-    main()
+    spark = get_spark("hhek2sqlite_spark-bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    try:
+        main(spark)
+    finally:
+        spark.stop()

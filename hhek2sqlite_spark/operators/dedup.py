@@ -587,9 +587,10 @@ def _closed_neighborhood(pairs: DataFrame):
     """The label-propagation loop's inputs (split out in r18 so the
     measurement harness can dump the LOOP-BODY physical plan — the r17
     before/after dumps showed only the post-localCheckpoint ExistingRDD
-    stub, VERDICT r17 #2; see scripts/explain_loop_r18.py): the cached
-    raw edge list, the cached CLOSED-neighborhood symmetric+self-edge
-    relation hash-laid-out on the neighbor key, and the cached round-1
+    stub, VERDICT r17 #2; see `git show
+    4035b00:scripts/explain_loop_r18.py`): the cached raw edge list,
+    the cached CLOSED-neighborhood symmetric+self-edge relation
+    hash-laid-out on the neighbor key, and the cached round-1
     labels (label_0(v) = v, so min over the closed neighborhood's
     labels == min over the neighbor ids — a plain groupBy, no join).
     Caller owns all three caches."""

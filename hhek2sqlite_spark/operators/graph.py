@@ -105,7 +105,8 @@ def _degree_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     groupBy + join + second repartition). Split out in r18 so the
     measurement harness can dump the LOOP-BODY physical plan — the r17
     before/after dumps showed only the post-localCheckpoint ExistingRDD
-    stub (VERDICT r17 #2); see scripts/explain_loop_r18.py."""
+    stub (VERDICT r17 #2); see
+    `git show 4035b00:scripts/explain_loop_r18.py`."""
     return (
         edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"))
         .repartition("e_src")

@@ -664,7 +664,8 @@ def vocab_growth(
     is |vocab x buckets-touched| rows — bounded-width, a fraction of
     the occurrence stream (unlike span_dedup's rejected corpus-sized
     checkpoint). Interleaved A/B at sf0.1 (6 rounds): 1.087 -> 1.020s
-    median, re-plan faster in 5/6 (scripts/ab_vocab_r18.py); at scale
+    median, re-plan faster in 5/6 (`git show
+    4035b00:scripts/ab_vocab_r18.py`); at scale
     the win is one occurrence-grain exchange instead of two. The final
     cumulative window runs over exactly ``n_buckets`` rows,
     driver-scale by construction. No UDFs, no collect."""

@@ -2805,9 +2805,9 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # joins THROUGH the 3-way union — the committed r16 plan held 15
     # parquet scans / 21 Exchanges, with the keepers aggregate and the
     # store distinct each rebuilt once per union branch
-    # (plans/r17/incremental_dedup_before.txt). The batch is
-    # batch-sized by definition (the operator's whole premise), so the
-    # materialization is tiny; release via owned_result.
+    # (git show 4035b00:plans/r17/incremental_dedup_before.txt). The
+    # batch is batch-sized by definition (the operator's whole
+    # premise), so the materialization is tiny; release via owned_result.
     batch = (
         base.unionByName(history_dups)
         .unionByName(batch_dups)
@@ -3542,11 +3542,12 @@ def q_sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     before fanning out to its THREE consumers (norms, both self-join
     sides). Lazily composed, Catalyst re-derived the whole
     scan→tf→df→prune pipeline once per reference — the committed plan
-    held 32 parquet scans and 108 Exchanges (plans/r17/
-    sparse_cosine_pairs_before.txt) and planning itself was a visible
-    cost. The checkpoint is the tfidf_topk precedent: the materialized
-    relation is the RARE-token subspace (per-token rows bounded by
-    max_df, stopword mass already dropped), so the intermediate is far
+    held 32 parquet scans and 108 Exchanges (`git show
+    4035b00:plans/r17/sparse_cosine_pairs_before.txt`) and planning
+    itself was a visible cost. The checkpoint is the tfidf_topk
+    precedent: the materialized relation is the RARE-token subspace
+    (per-token rows bounded by max_df, stopword mass already dropped),
+    so the intermediate is far
     smaller than the corpus — unlike span_dedup's rejected
     corpus-sized checkpoint. Release via owned_result (guide §3.3:
     truncate a plan whose width, not depth, is the problem)."""
@@ -4051,7 +4052,8 @@ def q_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     partner that must ride the join condition (as a WHERE it would
     turn the outer join inner).
 
-    Spark-first plan (round 16 re-plan, decompose_q13.py): count
+    Spark-first plan (round 16 re-plan, `git show
+    4035b00:scripts/decompose_q13.py`): count
     orders per custkey FIRST — the partial aggregate is map-side
     combinable, so the wide exchange carries ~|custkeys| x partitions
     partial-count rows instead of FULL ORDER ROWS — then LEFT join
@@ -4059,7 +4061,8 @@ def q_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     final distribution agg over the ~100-value count domain. The
     r15-r16 committed form (join-then-count) exchanged every order
     row through the join before counting; the interleaved A/B
-    measurement (Q13_DECOMP.json) read the pre-agg form 0.78 vs 0.65s
+    measurement (`git show 4035b00:Q13_DECOMP.json`) read the pre-agg
+    form 0.78 vs 0.65s
     at x1 (one extra stage at the job floor) but ALREADY ahead at x8
     (0.84 vs 0.87s) — and at 100 TB the delta is the whole fact
     exchange, so the floor-side 0.13s buys the scale-correct plan.

@@ -25,15 +25,15 @@ Also records, once per run: the per-table parquet row-group counts
 cores exist, while DuckDB parallelizes inside a row group — the main
 structural reason local ratios exceed cluster ratios).
 
-PAIRED protocol (round 16, VERDICT r15 #3 — bench.py --paired promoted
-to the full suite): the whole Spark suite and the whole DuckDB suite
-run as 3 INTERLEAVED passes (S,D,S,D,S,D) in one session. Per-query
-numbers are cross-pass medians; the per-pass suite totals are recorded
-as the spread, so a round-over-round total-ratio delta can be read
-against the window's own noise instead of a single sample (r14-r15
-showed +-1.2x window noise on single readings). Warm runs happen in
-pass 1 only — passes 2-3 re-run warm plans, exactly like bench
---paired.
+PAIRED protocol (round 16, VERDICT r15 #3 — the --paired mode of
+`git show 4035b00:bench.py` promoted to the full suite): the whole
+Spark suite and the whole DuckDB suite run as 3 INTERLEAVED passes
+(S,D,S,D,S,D) in one session. Per-query numbers are cross-pass
+medians; the per-pass suite totals are recorded as the spread, so a
+round-over-round total-ratio delta can be read against the window's
+own noise instead of a single sample (r14-r15 showed +-1.2x window
+noise on single readings). Warm runs happen in pass 1 only — passes
+2-3 re-run warm plans, exactly like that --paired mode.
 
 Output: PERF_FLOOR.json at the repo root (one pretty-printed object, so
 the judge can diff it round over round).

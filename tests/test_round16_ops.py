@@ -348,7 +348,8 @@ def test_owned_result_releases_on_exception(spark):
 
 
 def test_q13_pre_agg_plan_contract(spark):
-    """The r16 re-plan (decompose_q13.py): the per-custkey count
+    """The r16 re-plan (`git show 4035b00:scripts/decompose_q13.py`): the
+    per-custkey count
     aggregates BELOW the join — the plan must show an aggregate keyed
     on o_custkey (partial counts cross the exchange, not order rows)
     and the priority exclusion pushed into the orders scan."""
