@@ -12,15 +12,52 @@ below is a scale decision, not a test convenience:
   multimodal); the core uses none.
 - Decimal ops keep full precision (the reference's correctness bar is
   exact-decimal compare, /root/reference/db_test.go:262-267).
+
+Session start. A fresh driver JVM maps pre-parsed, pre-verified Spark,
+Catalyst, Hadoop and Parquet classes from one JDK 17 dynamic AppCDS
+(class-data sharing) archive instead of loading them from ~290 jars,
+which cuts both the gateway launch and the first job by ~40%. The
+archive is amortized state, like ``_IVF_INDEX``: one file in
+``${XDG_CACHE_HOME:-~/.cache}/hhek2sqlite_spark/cds/``, keyed on the
+``(path, size, mtime)`` of the ``java`` binary, the JDK's ``lib/modules``
+and every ``$SPARK_HOME/jars/*.jar``.
+
+- The first start of a key takes ``<key>.lock`` and runs with
+  ``-XX:ArchiveClassesAtExit``; the JVM writes the candidate at its own
+  exit, after Python has gone. A later start promotes it to
+  ``<key>.jsa`` once the lock's processes are dead and the candidate is
+  as long as its ``-Xlog:cds`` file says (a truncated archive crashes
+  the JVM that maps it), then deletes every other key's files.
+- Later starts pass ``-XX:SharedArchiveFile``; ``-Xshare:auto`` falls
+  back silently on a mismatch, so the start's log is read back and a
+  refused archive is deleted for the next start to recreate.
+- Skipped (a plain start) when a JVM is already up, the caller set
+  ``spark.driver.defaultJavaOptions``, ``$SPARK_CONF_DIR`` holds real
+  files (CDS refuses a non-empty directory on the classpath; a
+  templates-only conf dir is swapped for an empty one for the launch),
+  or the cache directory raises ``OSError``. ``CDS_STATE`` records the
+  case. Deleting the directory is always safe.
 """
 
 from __future__ import annotations
 
+import contextlib
+import hashlib
 import os
+import re
+import shutil
 
+from pyspark import SparkContext
+from pyspark.errors import PySparkRuntimeError
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+# How the driver JVM of the latest ``get_spark`` call started: "mapped",
+# "created", "refused" or "skipped:<reason>". A record, not an option.
+CDS_STATE = ""
+_REGION = re.compile(r"Shared file region \((\w+) *\) +\d+: +(\d+) bytes, .* file offset (0x[0-9a-f]+)")
 
 
 def get_spark(app_name: str = "hhek2sqlite_spark", *, shuffle_partitions: int | None = None) -> SparkSession:
@@ -63,11 +100,155 @@ def get_spark(app_name: str = "hhek2sqlite_spark", *, shuffle_partitions: int | 
     # (scripts/make_multirg.py) lowers maxPartitionBytes/openCostInBytes
     # so a many-small-files layout actually yields one task per file:
     #   SPARK_GRAFT_EXTRA_CONF="spark.sql.files.maxPartitionBytes=1048576,..."
-    extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
-    for kv in filter(None, extra.split(",")):
+    extra = {}
+    for kv in filter(None, os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(",")):
         k, _, v = kv.partition("=")
-        builder = builder.config(k.strip(), v.strip())
-    return builder.getOrCreate()
+        extra[k.strip()] = v.strip()
+    for k, v in extra.items():
+        builder = builder.config(k, v)
+    global CDS_STATE
+    jvm_up = SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ
+    CDS_STATE, opts, base = _cds_plan(jvm_up, extra)
+    if not opts:
+        return builder.getOrCreate()
+    # the launcher puts the conf dir first on the classpath; it holds
+    # nothing but templates (checked in _cds_plan), so an empty one stands in
+    conf_dir = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = os.path.join(os.path.dirname(base), "conf")
+    try:
+        spark = builder.config("spark.driver.defaultJavaOptions", opts).getOrCreate()
+    except PySparkRuntimeError:  # JAVA_GATEWAY_EXITED
+        if CDS_STATE != "mapped":
+            raise
+        # damaged past what -Xshare:auto checks (say, truncated after it
+        # was promoted): the JVM died mapping it, so drop it and start plain
+        _rm(base + ".jsa", f"{base}.{os.getpid()}.log")
+        CDS_STATE, opts = "refused", ""
+        spark = builder.config("spark.driver.defaultJavaOptions", "").getOrCreate()
+    finally:
+        if conf_dir is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = conf_dir
+    if opts:
+        CDS_STATE = _cds_started(CDS_STATE, base, SparkContext._gateway.proc.pid)
+    return spark
+
+
+def _cds_plan(jvm_up: bool, conf: dict) -> tuple[str, str, str]:
+    """How the next driver JVM starts -> (state, driver java options,
+    ``<cache dir>/<key>``); no options means a plain start."""
+    if jvm_up:
+        return "skipped:running-jvm", "", ""
+    if "spark.driver.defaultJavaOptions" in conf:
+        return "skipped:java-options", "", ""
+    spark_home = _find_spark_home()
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    with contextlib.suppress(OSError):
+        if any(not n.endswith(".template") for n in os.listdir(conf_dir)):
+            return "skipped:conf-dir", "", ""
+    cache = os.path.join(os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"), "hhek2sqlite_spark", "cds")
+    if not re.fullmatch(r"[\w./-]+", cache):  # goes unquoted into the java options
+        return "skipped:cache-path", "", ""
+    try:
+        os.makedirs(os.path.join(cache, "conf"), exist_ok=True)
+        base = os.path.join(cache, _cds_key(spark_home))
+        _promote(base)
+        log = f"-Xlog:cds=off -Xlog:cds+dynamic=off -Xlog:cds=info:file={base}.{os.getpid()}.log"
+        if not os.path.exists(base + ".jsa"):
+            try:
+                fd = os.open(base + ".lock", os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
+            except FileExistsError:
+                return "skipped:being-created", "", ""
+            with os.fdopen(fd, "w") as fh:
+                fh.write(str(os.getpid()))
+            if not os.path.exists(base + ".jsa"):  # not promoted meanwhile
+                return "created", f"{log} -XX:ArchiveClassesAtExit={base}.{os.getpid()}.jsa", base
+            os.remove(base + ".lock")
+        return "mapped", f"{log} -XX:SharedArchiveFile={base}.jsa", base
+    except OSError:
+        return "skipped:os-error", "", ""
+
+
+def _cds_key(spark_home: str) -> str:
+    java = os.path.join(os.environ["JAVA_HOME"], "bin", "java") if os.environ.get("JAVA_HOME") else shutil.which("java")
+    java = os.path.realpath(java or "java")
+    jars = sorted(os.path.join(spark_home, "jars", n) for n in os.listdir(os.path.join(spark_home, "jars")) if n.endswith(".jar"))
+    digest = hashlib.sha256()
+    for path in (java, os.path.join(os.path.dirname(os.path.dirname(java)), "lib", "modules"), *jars):
+        st = os.stat(path)
+        digest.update(f"{path}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    return digest.hexdigest()[:16]
+
+
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    try:  # an unreaped exited JVM is done writing
+        with open(f"/proc/{pid}/stat", encoding="ascii", errors="replace") as fh:
+            return fh.read().rpartition(")")[2].split()[0] != "Z"
+    except OSError:
+        return True
+
+
+def _complete(cand: str) -> bool:
+    """The candidate ``cand.jsa`` holds every region its ``-Xlog:cds``
+    file lists (each line is logged before its bytes are written)."""
+    try:
+        with open(cand + ".log", encoding="utf-8", errors="replace") as fh:
+            ends = {name: int(off, 16) + int(n) for name, n, off in _REGION.findall(fh.read())}
+        return set(ends) == {"rw", "ro", "bm"} and os.path.getsize(cand + ".jsa") >= max(ends.values())
+    except OSError:
+        return False
+
+
+def _promote(base: str) -> None:
+    """Settle a creation whose processes are gone: promote a complete
+    candidate to ``base.jsa`` and delete every other key's files, delete
+    an incomplete one, and clear the lock."""
+    try:
+        with open(base + ".lock", encoding="ascii") as fh:
+            pids = [int(p) for p in fh.read().split() if p.isdigit()]
+    except FileNotFoundError:
+        return
+    if any(_alive(p) for p in pids):
+        return
+    if pids:
+        cand = f"{base}.{pids[0]}"
+        if _complete(cand):  # a concurrent start may have promoted it already
+            with contextlib.suppress(FileNotFoundError):
+                os.replace(cand + ".jsa", base + ".jsa")
+            cache, key = os.path.split(base)
+            _rm(*(os.path.join(cache, n) for n in os.listdir(cache) if n != "conf" and not n.startswith(key + ".")))
+        _rm(cand + ".jsa", cand + ".log")
+    _rm(base + ".lock")
+
+
+def _cds_started(state: str, base: str, jvm_pid: int) -> str:
+    """Record the started JVM: a creator's pid joins the lock; a mapping
+    start reads its log back and deletes an archive the JVM refused."""
+    if state == "created":
+        with contextlib.suppress(OSError), open(base + ".lock", "a", encoding="ascii") as fh:
+            fh.write(f" {jvm_pid}")
+        return state
+    log, text = f"{base}.{os.getpid()}.log", ""
+    with contextlib.suppress(OSError), open(log, encoding="utf-8", errors="replace") as fh:
+        text = fh.read()
+    _rm(log)
+    if "Mapped dynamic region" in text:
+        return state
+    _rm(base + ".jsa")
+    return "refused"
+
+
+def _rm(*paths: str) -> None:
+    for path in paths:
+        with contextlib.suppress(OSError):
+            os.remove(path)
 
 
 def tune_existing(spark: SparkSession) -> SparkSession:
