@@ -37,10 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hhek2sqlite_spark.operators.text import fingerprint, let_once, normalized, tokens
-from hhek2sqlite_spark.operators.util import (
-    own_caches,
-    release_owned_caches,
-)
+from hhek2sqlite_spark.operators.util import release_local_checkpoints
 from hhek2sqlite_spark.operators.util import spread as _spread_impl
 
 # ---------------------------------------------------------------------------
@@ -199,10 +196,13 @@ def ngram_jaccard_pairs(
     den*shared >= num*(na+nb-shared)."""
     # ONE shuffle on the shingle: collect the (distinct, sorted) doc ids per
     # shingle, drop hot shingles by df, and drop the shingle string itself —
-    # everything downstream needs only the id arrays. Cached because both
-    # the pair expansion and the per-doc sizes read it; the cached set is a
-    # fraction of the raw shingle rows (rare shingles only, no strings).
-    buckets = rare_shingle_buckets(documents, n=n, max_df=max_df, id_col=id_col).cache()
+    # everything downstream needs only the id arrays. Checkpointed (lazily,
+    # at the first action) because both the pair expansion and the per-doc
+    # sizes read it; the stored set is a fraction of the raw shingle rows
+    # (rare shingles only, no strings), freed with the result's release.
+    buckets = rare_shingle_buckets(
+        documents, n=n, max_df=max_df, id_col=id_col
+    ).localCheckpoint(eager=False)
     sizes = (
         buckets.select(F.explode("ids").alias(id_col))
         .groupBy(id_col)
@@ -213,17 +213,14 @@ def ngram_jaccard_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("shared"))
     )
-    # own_caches (r18): the buckets cache is released with the result
-    # (owned_result / release_local_checkpoints), not left to GC
-    return own_caches(
+    return (
         shared.join(sizes.select(F.col(id_col).alias("id_a"), F.col("n_shingles").alias("na")), "id_a")
         .join(sizes.select(F.col(id_col).alias("id_b"), F.col("n_shingles").alias("nb")), "id_b")
         .filter(
             F.col("shared") * threshold_den
             >= F.lit(threshold_num) * (F.col("na") + F.col("nb") - F.col("shared"))
         )
-        .select("id_a", "id_b", "shared", "na", "nb"),
-        buckets,
+        .select("id_a", "id_b", "shared", "na", "nb")
     )
 
 
@@ -427,7 +424,11 @@ def minhash_lsh_pairs(
     similarity (count of equal components, an integer — est jaccard =
     est_matches / k). Returns (id_a, id_b, est_matches)."""
     rows = k // bands
-    sig = minhash_signatures(documents, k=k, n=n, id_col=id_col).cache()
+    # lazy checkpoint: the banding and both verify sides read one
+    # materialization, freed with the result's release
+    sig = minhash_signatures(documents, k=k, n=n, id_col=id_col).localCheckpoint(
+        eager=False
+    )
     # integer band keys (15 bits per row value, disjointly packed) instead
     # of hash(slice): engine-portable for the oracle, and the banding
     # shuffle carries one BIGINT per (doc, band) instead of a hash of an
@@ -477,8 +478,7 @@ def minhash_lsh_pairs(
 
     _est_matches = _est_matches.asNondeterministic()
 
-    # own_caches (r18): the signature cache is released with the result
-    return own_caches(
+    return (
         cand.join(sa, "id_a")
         .join(sb, "id_b")
         .select(
@@ -486,8 +486,7 @@ def minhash_lsh_pairs(
             "id_b",
             _est_matches(F.col("sig_a"), F.col("sig_b")).alias("est_matches"),
         )
-        .filter(F.col("est_matches") >= min_est_matches),
-        sig,
+        .filter(F.col("est_matches") >= min_est_matches)
     )
 
 
@@ -560,10 +559,12 @@ def star_connected_components(
             # previous round's — uncut, the lineage tree grows
             # geometrically and planning itself OOMs after ~8 rounds.
             # The checkpoint materializes the round AND truncates the
-            # plan to a leaf; old rounds' blocks are released by the
-            # context cleaner once unreferenced.
+            # plan to a leaf, so the previous round's blocks are dead
+            # once it exists: free them now, not at GC.
             new_e = nbr_links.union(self_links).distinct().localCheckpoint()
             cur = _fingerprint(new_e)
+            if e is not e0:
+                release_local_checkpoints(e)
             e = new_e
             if cur == prev:
                 roots = e.select(
@@ -581,6 +582,8 @@ def star_connected_components(
         )
     finally:
         e0.unpersist()
+        if e is not e0:  # the result is its own checkpoint by now
+            release_local_checkpoints(e)
 
 
 def _closed_neighborhood(pairs: DataFrame):
@@ -661,6 +664,11 @@ def neardup_clusters(pairs: DataFrame, *, max_iter: int = 25) -> DataFrame:
     so every per-round cache can be unpersisted before returning —
     repeated calls leak no storage.
 
+    ``pairs`` is CONSUMED: once the labels are materialized, every
+    local checkpoint in its plan (e.g. minhash_lsh_pairs' signatures)
+    is released, so ``pairs`` must not be executed afterwards. Release
+    the returned labels with ``release_local_checkpoints`` as usual.
+
     r17 re-plan (guide §2.4 — remove shuffles outright): the old round
     was THREE keyed exchanges (sym⋈labels on the neighbor key, groupBy
     for the neighbor min, left-join back onto labels for
@@ -698,11 +706,11 @@ def neardup_clusters(pairs: DataFrame, *, max_iter: int = 25) -> DataFrame:
         edges.unpersist()
         symp.unpersist()
         labels.unpersist()
-        # r18: the upstream pair generator (minhash_lsh_pairs) attaches
-        # its signature cache to ``pairs`` — the returned labels are
-        # checkpointed before this runs, so the pair pipeline's caches
-        # can be released here instead of leaking past the operator
-        release_owned_caches(pairs)
+        # the returned labels are a checkpoint that cuts the plan, so a
+        # caller's release can no longer reach the pair generator's
+        # checkpoints (minhash_lsh_pairs' signatures): free them here,
+        # after the labels are materialized
+        release_local_checkpoints(pairs)
 
 
 # ---------------------------------------------------------------------------
@@ -763,7 +771,7 @@ def simhash_pairs(
     """Near-dup candidates: equal 15-bit chunk (pigeonhole: hamming<=3
     over 4 chunks guarantees one equal chunk), verified by
     bit_count(xor) <= max_hamming."""
-    fps = simhash_fingerprints(documents, id_col).cache()
+    fps = simhash_fingerprints(documents, id_col).localCheckpoint(eager=False)
     chunk_mask = (1 << _SIMHASH_CHUNK_BITS) - 1
     chunked = fps.select(
         F.col(id_col),
@@ -792,12 +800,8 @@ def simhash_pairs(
         .distinct()
     )
     hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-    # own_caches (r18): the fingerprint cache is released with the result
-    return own_caches(
-        pairs.select("id_a", "id_b", hamming.alias("hamming")).filter(
-            F.col("hamming") <= max_hamming
-        ),
-        fps,
+    return pairs.select("id_a", "id_b", hamming.alias("hamming")).filter(
+        F.col("hamming") <= max_hamming
     )
 
 

@@ -487,19 +487,21 @@ def lsh_bucket_pairs(
     # doubled the dominant map stage.
     _band_payload = _band_payload.asNondeterministic()
 
-    # cache the N-row payload relation BEFORE the band explode (r17,
-    # guide §4.2/§2.4 — the minhash_signatures precedent): both self-join
-    # sides and nothing else re-derive it, so without the cache the
+    # materialize the N-row payload relation BEFORE the band explode
+    # (r17, guide §4.2/§2.4 — the minhash_signatures precedent): both
+    # self-join sides and the verify side read it, so without it the
     # 64-plane matmul ran once per side. Pre-explode placement keeps the
-    # cached footprint at N rows (vec_id, eq, keys, lo, hi — fixed
+    # stored footprint at N rows (vec_id, eq, keys, lo, hi — fixed
     # width); the cheap codegen explode replays per consumer. Interleaved
     # A/B at sf0.1 (6 rounds, drop-1 medians): plain 2.79s /
     # post-explode 2.71s / pre-explode 2.39s for similarity_lsh, 1.29 /
-    # 1.20 / 1.08 for the highsim point. Like the other operator-level
-    # caches, lifetime is construction-scoped (ContextCleaner reclaims
-    # once the result is dropped).
+    # 1.20 / 1.08 for the highsim point. A lazy local checkpoint (built
+    # by the first action) lives in the result's plan, so releasing the
+    # result or any frame derived from it frees the payload.
     payload = (
-        e.withColumn("eq", eq).withColumn("_p", _band_payload(F.col("eq"))).cache()
+        e.withColumn("eq", eq)
+        .withColumn("_p", _band_payload(F.col("eq")))
+        .localCheckpoint(eager=False)
     )
     hashed = payload.select(
         "vec_id",
@@ -542,7 +544,7 @@ def lsh_bucket_pairs(
     # round, so no half-to-even divergence). sim_e6 is therefore the
     # exact cosine of the quantized vectors — within 2e-6 of the float
     # cosine, and the SQL oracle computes the identical quantity.
-    # derive the verify-side vectors from the CACHED payload relation
+    # derive the verify-side vectors from the checkpointed payload relation
     # (identical eq values — same expression) instead of re-scanning and
     # re-quantizing per broadcast side
     eqn = payload.select(
@@ -591,13 +593,7 @@ def lsh_bucket_pairs(
     # repartition/explode lose size stats, so Catalyst won't pick the
     # broadcast on its own. At corpus scales where N no longer fits a
     # broadcast, drop the hint and these become plain shuffle equi-joins.
-    # own_caches (r18, VERDICT r17 #6): the payload cache's lifetime is
-    # now OWNED — released by owned_result/release_local_checkpoints
-    # when the result is dropped, instead of waiting on ContextCleaner
-    # GC (guide §5: unpersist when done).
-    from .util import own_caches
-
-    return own_caches(
+    return (
         candidates.join(F.broadcast(ea), "id_a")
         .join(F.broadcast(eb), "id_b")
         .select(
@@ -605,8 +601,7 @@ def lsh_bucket_pairs(
             "id_b",
             _sim_q(F.col("qa"), F.col("qb"), F.col("na"), F.col("nb")).alias("sim_e6"),
         )
-        .filter(F.col("sim_e6") >= min_sim_e6),
-        payload,
+        .filter(F.col("sim_e6") >= min_sim_e6)
     )
 
 

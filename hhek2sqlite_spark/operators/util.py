@@ -6,6 +6,8 @@ breaks hot-key skew that AQE's skew-join (which only splits oversized
 ``materialize_access_path`` is the engine's reading of the reference's
 15 secondary indexes (SURVEY.md 4.3): an index in a single-file database
 becomes a partition + sort layout decision in a columnar lake.
+``owned_result`` / ``release_local_checkpoints`` are the one release
+path for the relations operators materialize while building a result.
 """
 
 from __future__ import annotations
@@ -107,74 +109,26 @@ def materialize_access_path(
     writer.parquet(path)
 
 
-# construction-scoped CACHES owned by an operator's lazy result (round
-# 18, VERDICT r17 #6): operators that .cache() a shared relation and
-# return a LAZY plan over it (lsh_bucket_pairs' band payload,
-# minhash_lsh_pairs' signatures, simhash_pairs' fingerprints,
-# ngram_jaccard_pairs' buckets) cannot unpersist inside the operator —
-# the caller has not executed the plan yet. They attach the cached
-# DataFrame handles to the result via ``own_caches``;
-# ``release_local_checkpoints`` (hence ``owned_result``) unpersists
-# them deterministically at release time, so repeated calls leave the
-# CacheManager flat instead of relying on ContextCleaner GC — the same
-# round-10 argument that made checkpoint release explicit.
-_OWNED_CACHES_ATTR = "_hhek_owned_caches"
-
-
-def own_caches(result: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Attach construction-scoped cached relations to an operator's
-    result so the release path can unpersist them. The attribute lives
-    on the returned DataFrame OBJECT only (like the semdedup store
-    hint): an operator consuming the result internally must release the
-    caches itself once its own output is materialized (see
-    neardup_clusters)."""
-    existing = tuple(getattr(result, _OWNED_CACHES_ATTR, ()))
-    setattr(result, _OWNED_CACHES_ATTR, existing + tuple(cached))
-    return result
-
-
-def release_owned_caches(df: DataFrame) -> int:
-    """Unpersist every cache attached to ``df`` via ``own_caches`` and
-    return how many were released. The DataFrame must not be executed
-    afterwards unless recomputing the cached relations is acceptable
-    (unlike a freed localCheckpoint, an unpersisted cache silently
-    recomputes — correct, just no longer shared)."""
-    cached = tuple(getattr(df, _OWNED_CACHES_ATTR, ()))
-    if not cached:
-        return 0
-    released = 0
-    for c in cached:
-        try:
-            c.unpersist()
-            released += 1
-        except Exception:  # noqa: BLE001 - best-effort per cache
-            pass
-    try:
-        delattr(df, _OWNED_CACHES_ATTR)
-    except AttributeError:
-        pass
-    return released
-
-
 @contextmanager
 def owned_result(df: DataFrame):
-    """Owned-lifetime handle for the EAGER operators (round 16, VERDICT
-    r15 #5): ``semantic_dedup`` / ``semdedup_*`` / ``tfidf_topk`` and
-    friends materialize a shared relation via ``localCheckpoint`` at
-    construction, and until now relied on callers REMEMBERING to call
-    ``release_local_checkpoints`` once done — a library user looping an
-    operator interactively accumulated executor checkpoint storage
-    until they read the docstring. This closes the class:
+    """Owned-lifetime handle for an operator's result: every relation an
+    operator builds during construction (``semantic_dedup``'s
+    assignment, ``tfidf_topk``'s tf relation, the pair operators'
+    signatures, fingerprints, buckets and band payload) is a
+    ``localCheckpoint`` that lives in the result's plan, eager or lazy,
+    so one release frees them all:
 
         with owned_result(semantic_dedup(emb, ...)) as out:
             out.agg(...).collect()
         # blocks freed here, exception or not
 
-    The yielded DataFrame must not be executed after the block exits (a
-    local checkpoint is non-recomputable — Spark raises on access to
-    freed blocks). Nesting is safe: release is per-plan and idempotent.
-    test_round16_ops pins the flat-storage invariant by looping an
-    eager operator 10x under this manager."""
+    A frame derived from the result (``.select``, ``.filter``, a join)
+    still holds those checkpoints as plan leaves, so releasing it frees
+    the same block sets. The yielded DataFrame must not be executed
+    after the block exits (a local checkpoint is non-recomputable —
+    Spark raises on access to freed blocks). Nesting is safe: release is
+    per-plan and idempotent. test_round16_ops pins the flat-storage
+    invariant by looping an eager operator 10x under this manager."""
     try:
         yield df
     finally:
@@ -183,9 +137,12 @@ def owned_result(df: DataFrame):
 
 def release_local_checkpoints(df: DataFrame) -> int:
     """Deterministically unpersist the block sets behind every
-    ``localCheckpoint`` relation in ``df``'s plan. Call when done with a
-    result whose operator materialized a shared relation this way
-    (tfidf_topk, boilerplate_shingles, pagerank, minhash cluster tails).
+    ``localCheckpoint`` relation in ``df``'s plan: each is a
+    ``LogicalRDD`` leaf of the analyzed plan, so one read of its leaves
+    finds them all. This is the one release path for relations an
+    operator materializes while building its result; the only state
+    that outlives it is declared serving state (the IVF index behind
+    ``similarity_ivf``).
 
     Why explicit release exists at all: the checkpoint blocks are
     *supposed* to be reclaimed by Spark's ContextCleaner once the caller
@@ -200,33 +157,27 @@ def release_local_checkpoints(df: DataFrame) -> int:
     afterwards (a local checkpoint is non-recomputable by design —
     Spark raises on access to the freed blocks).
 
-    Returns the number of checkpointed RDDs unpersisted (caches
-    attached via ``own_caches`` are released too, but not counted —
-    callers pin the checkpoint count). Safe on any DataFrame: plans
-    without LogicalRDD nodes release nothing, and unpersist on a
-    non-persisted RDD is a no-op.
+    Returns the number of distinct checkpointed RDDs unpersisted. Safe
+    on any DataFrame: plans without LogicalRDD leaves release nothing,
+    and unpersist on a non-persisted RDD is a no-op.
     """
-    release_owned_caches(df)
     try:
-        root = df._jdf.queryExecution().analyzed()
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
     except Exception:  # Connect / non-classic sessions: nothing to walk
         return 0
     released: set[int] = set()
-    stack = [root]
-    while stack:
-        node = stack.pop()
-        if node.getClass().getSimpleName() == "LogicalRDD":
-            # the same checkpoint relation appears once PER REFERENCE in
-            # the tree (e.g. both sides of tfidf's self-join) — dedupe
-            # by RDD id so the count means "distinct block sets freed"
-            try:
-                rdd = node.rdd()
-                if rdd.id() not in released:
-                    rdd.unpersist(False)
-                    released.add(rdd.id())
-            except Exception:  # noqa: BLE001 - best-effort per node
-                pass
-        kids = node.children()
-        for i in range(kids.size()):
-            stack.append(kids.apply(i))
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "LogicalRDD":
+            continue
+        # the same checkpoint relation appears once PER REFERENCE in the
+        # plan (e.g. both sides of tfidf's self-join) — dedupe by RDD id
+        # so the count means "distinct block sets freed"
+        try:
+            rdd = leaf.rdd()
+            if rdd.id() not in released:
+                rdd.unpersist(False)
+                released.add(rdd.id())
+        except Exception:  # noqa: BLE001 - best-effort per leaf
+            pass
     return len(released)

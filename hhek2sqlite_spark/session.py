@@ -25,12 +25,15 @@ and every ``$SPARK_HOME/jars/*.jar``.
 - The first start of a key takes ``<key>.lock`` and runs with
   ``-XX:ArchiveClassesAtExit``; the JVM writes the candidate at its own
   exit, after Python has gone. A later start promotes it to
-  ``<key>.jsa`` once the lock's processes are dead and the candidate is
-  as long as its ``-Xlog:cds`` file says (a truncated archive crashes
-  the JVM that maps it), then deletes every other key's files.
-- Later starts pass ``-XX:SharedArchiveFile``; ``-Xshare:auto`` falls
-  back silently on a mismatch, so the start's log is read back and a
-  refused archive is deleted for the next start to recreate.
+  ``<key>.jsa`` (its ``-Xlog:cds`` file to ``<key>.log``) once the
+  lock's processes are dead and the candidate is as long as that log
+  says (a truncated archive crashes the JVM that maps it), then deletes
+  every other key's files.
+- Later starts re-check the archive against ``<key>.log`` (an archive
+  cut short after promotion is deleted and recreated; one without a log
+  is mapped as is) and pass ``-XX:SharedArchiveFile``; ``-Xshare:auto``
+  falls back silently on a mismatch, so the start's log is read back and
+  a refused archive is deleted for the next start to recreate.
 - Skipped (a plain start) when a JVM is already up, the caller set
   ``spark.driver.defaultJavaOptions``, ``$SPARK_CONF_DIR`` holds real
   files (CDS refuses a non-empty directory on the classpath; a
@@ -57,6 +60,29 @@ DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 # How the driver JVM of the latest ``get_spark`` call started: "mapped",
 # "created", "refused" or "skipped:<reason>". A record, not an option.
 CDS_STATE = ""
+
+# SQL confs both ``get_spark`` and ``tune_existing`` set; every value is
+# a scale decision (see the module docstring), not a test convenience.
+_SQL_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # let AQE coalesce/repartition stages that sit on top of a cached
+    # plan (the loop-scoped caches of neardup_clusters, pagerank and the
+    # IVF index); without this a cached plan pins its pre-AQE partition
+    # count for every consumer
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # runtime bloom-filter join pruning: a selective filter on one join
+    # side builds a bloom filter that prunes the other side's scan — at
+    # 100 TB this skips whole row groups of the fact table
+    "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+    "spark.sql.parquet.filterPushdown": "true",
+    # events.parquet stores TIMESTAMP(NANOS) which Spark's reader
+    # rejects; read as long and normalize in sources.parquet.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.session.timeZone": "UTC",
+}
 _REGION = re.compile(r"Shared file region \((\w+) *\) +\d+: +(\d+) bytes, .* file offset (0x[0-9a-f]+)")
 
 
@@ -72,24 +98,8 @@ def get_spark(app_name: str = "hhek2sqlite_spark", *, shuffle_partitions: int | 
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(parts))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # let AQE coalesce/repartition stages that sit on top of a cached
-        # plan (minhash/simhash cache their signature sets); without this
-        # a .cache() pins the pre-AQE partition count for every consumer
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # runtime bloom-filter join pruning: a selective filter on one
-        # join side builds a bloom filter that prunes the other side's
-        # scan — at 100 TB this skips whole row groups of the fact table
-        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+        .config(map=_SQL_CONF)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        # events.parquet stores TIMESTAMP(NANOS) which Spark's reader
-        # rejects; read as long and normalize in sources.parquet.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         # no \r-progress bars in captured stdout/stderr — bench artifacts
@@ -120,9 +130,9 @@ def get_spark(app_name: str = "hhek2sqlite_spark", *, shuffle_partitions: int | 
     except PySparkRuntimeError:  # JAVA_GATEWAY_EXITED
         if CDS_STATE != "mapped":
             raise
-        # damaged past what -Xshare:auto checks (say, truncated after it
-        # was promoted): the JVM died mapping it, so drop it and start plain
-        _rm(base + ".jsa", f"{base}.{os.getpid()}.log")
+        # damaged past what -Xshare:auto and <key>.log check: the JVM
+        # died mapping it, so drop it and start plain
+        _rm(base + ".jsa", base + ".log", f"{base}.{os.getpid()}.log")
         CDS_STATE, opts = "refused", ""
         spark = builder.config("spark.driver.defaultJavaOptions", "").getOrCreate()
     finally:
@@ -154,6 +164,8 @@ def _cds_plan(jvm_up: bool, conf: dict) -> tuple[str, str, str]:
         os.makedirs(os.path.join(cache, "conf"), exist_ok=True)
         base = os.path.join(cache, _cds_key(spark_home))
         _promote(base)
+        if os.path.exists(base + ".log") and not _complete(base):
+            _rm(base + ".jsa", base + ".log")  # cut short since promotion
         log = f"-Xlog:cds=off -Xlog:cds+dynamic=off -Xlog:cds=info:file={base}.{os.getpid()}.log"
         if not os.path.exists(base + ".jsa"):
             try:
@@ -222,6 +234,7 @@ def _promote(base: str) -> None:
         if _complete(cand):  # a concurrent start may have promoted it already
             with contextlib.suppress(FileNotFoundError):
                 os.replace(cand + ".jsa", base + ".jsa")
+                os.replace(cand + ".log", base + ".log")
             cache, key = os.path.split(base)
             _rm(*(os.path.join(cache, n) for n in os.listdir(cache) if n != "conf" and not n.startswith(key + ".")))
         _rm(cand + ".jsa", cand + ".log")
@@ -241,7 +254,7 @@ def _cds_started(state: str, base: str, jvm_pid: int) -> str:
     _rm(log)
     if "Mapped dynamic region" in text:
         return state
-    _rm(base + ".jsa")
+    _rm(base + ".jsa", base + ".log")
     return "refused"
 
 
@@ -258,21 +271,10 @@ def tune_existing(spark: SparkSession) -> SparkSession:
         cores = str(spark.sparkContext.defaultParallelism)
     except Exception:  # pragma: no cover
         cores = "32"
-    for k, v in (
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        # a vanilla session defaults to 200 shuffle partitions; on the
-        # driver's local session that is 200 tiny tasks per shuffle stage.
-        # Seed with the core count — AQE still coalesces below it.
-        ("spark.sql.shuffle.partitions", cores),
-        ("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"),
-        ("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)),
-        ("spark.sql.optimizer.runtime.bloomFilter.enabled", "true"),
-        ("spark.sql.parquet.filterPushdown", "true"),
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-    ):
+    # a vanilla session defaults to 200 shuffle partitions; on the
+    # driver's local session that is 200 tiny tasks per shuffle stage.
+    # Seed with the core count — AQE still coalesces below it.
+    for k, v in {"spark.sql.shuffle.partitions": cores, **_SQL_CONF}.items():
         try:
             spark.conf.set(k, v)
         except Exception:  # pragma: no cover - conf may be static in some harnesses

@@ -23,6 +23,22 @@ def sf_dir():
 
 
 @pytest.fixture
+def lifetime_state(spark):
+    """``lifetime_state()`` -> (persistent RDD ids, CacheManager entry
+    count): what a released result must leave as it found it.
+    ``cachedData`` is private, so it is read by reflection."""
+    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
+    field = cache_mgr.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+
+    def state():
+        rdds = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+        return rdds, field.get(cache_mgr).size()
+
+    return state
+
+
+@pytest.fixture
 def count_jobs(spark):
     """``count_jobs(fn)`` -> (fn's result, number of Spark jobs it ran)."""
     import uuid

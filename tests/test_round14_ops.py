@@ -300,9 +300,9 @@ def test_minhash_kernel_plan_is_single_arrow_node(spark):
     scan — no Generate (explode), no shingle-grain aggregate before
     the banding. Built from a FRESH in-memory corpus: the sf0.001
     parquet plan can be swapped for an InMemoryTableScan by another
-    test's session-lived minhash sig.cache() (the cache manager
-    matches plan fragments), and the cached plan's own Arrow node
-    then prints inside this plan's detail section."""
+    test's session-lived cache (the cache manager matches plan
+    fragments), and the cached plan's own Arrow node then prints
+    inside this plan's detail section."""
     from hhek2sqlite_spark.operators.dedup import minhash_signatures
 
     docs = spark.createDataFrame(

@@ -1,7 +1,7 @@
 """Round-17 optimization contracts: the plan shapes and new branches the
 optimization round introduced stay pinned.
 
-- lsh_bucket_pairs: ONE band-kernel evaluation (cached payload) and no
+- lsh_bucket_pairs: ONE band-kernel evaluation (checkpointed payload) and no
   optimizer-duplicated Arrow kernels — the r17 fix for the r16 plan
   that ran the 64-plane matmul twice per vector per join side.
 - q_incremental_dedup: the batch-grain checkpoint keeps the semi/anti
@@ -43,29 +43,30 @@ def _fresh_embeddings(spark, sf="/root/testdata/sf0.001"):
 
 
 def test_lsh_band_kernel_evaluated_once(spark):
-    """The band payload is cached at N-row grain and both self-join
-    sides plus the verify-side vector relation read the cache: the
-    plan outside the single InMemoryRelation build must contain NO
-    ArrowEvalPython (kernel runs once, at cache population), and the
-    cached relation must appear (InMemoryTableScan) at least twice —
-    one per join side."""
+    """The band payload is checkpointed at N-row grain and both
+    self-join sides plus the verify-side vector relation read the
+    checkpoint: the plan outside the payload build must contain NO
+    band-kernel ArrowEvalPython (kernel runs once, when the checkpoint
+    is populated), and the checkpointed relation must appear (Scan
+    ExistingRDD) in the plan the join sides read."""
+    from hhek2sqlite_spark.operators.util import release_local_checkpoints
+
     out = lsh_bucket_pairs(_fresh_embeddings(spark))
     plan = _plan_text(out)
     try:
-        assert "InMemoryTableScan" in plan, plan[:2000]
-        # exactly TWO distinct Arrow kernel node ids may exist: the band
-        # kernel (inside the cache build) and the sim verify kernel
-        # (above the candidate joins). The formatted dump repeats the
-        # cached subtree once per scan reference, so count DISTINCT node
-        # ids, not occurrences. The r16 regression shape — the optimizer
-        # duplicating a kernel per filter-pushdown copy — shows up as a
-        # third id (the committed before-plan held 6+).
+        assert "Scan ExistingRDD" in plan, plan[:2000]
+        # at most TWO distinct Arrow kernel node ids may exist: the band
+        # kernel and the sim verify kernel (above the candidate joins).
+        # Count DISTINCT node ids, not occurrences. The r16 regression
+        # shape — the optimizer duplicating a kernel per filter-pushdown
+        # copy — shows up as a third id (the committed before-plan held
+        # 6+).
         import re
 
         ids = set(re.findall(r"\((\d+)\) ArrowEvalPython", plan))
         assert len(ids) <= 2, f"duplicated Arrow kernel ids {ids}:\n{plan[:3000]}"
     finally:
-        spark.catalog.clearCache()
+        release_local_checkpoints(out)
 
 
 def test_incremental_dedup_plan_scans_batch_once(spark):

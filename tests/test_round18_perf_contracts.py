@@ -1,8 +1,10 @@
 """Round-18 optimization contracts: the session router cache for
-file-backed semdedup stores (correctness + invalidation), owned
-operator caches (CacheManager stays flat across repeated calls), the
-single-aggregate store metadata read, the keep_ccell store build, and
-the streaming handler's single-materialization writes."""
+file-backed semdedup stores (correctness + invalidation), the pair
+operators' construction-scoped checkpoints (released with the result,
+or with any frame derived from it: CacheManager and persistent RDDs
+stay flat), the single-aggregate store metadata read, the keep_ccell
+store build, and the streaming handler's single-materialization
+writes."""
 
 from __future__ import annotations
 
@@ -11,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hhek2sqlite_spark.operators import similarity
-from hhek2sqlite_spark.operators.util import owned_result, release_owned_caches
+from hhek2sqlite_spark.operators.util import owned_result
 
 BATCH_SCHEMA = "vec_id long, embedding array<double>"
 
@@ -222,7 +224,7 @@ def test_store_ccell_only_on_seed_rows_and_matches_route(spark):
             assert r["ccell"] is None
 
 
-# --- owned operator caches -----------------------------------------------------
+# --- construction-scoped checkpoints ------------------------------------------
 
 
 def test_lsh_payload_cache_released_by_owned_result(spark):
@@ -244,27 +246,65 @@ def test_lsh_payload_cache_released_by_owned_result(spark):
             assert cache_mgr.isEmpty(), "payload cache leaked past release"
 
 
-def test_minhash_pairs_cache_released_by_neardup_clusters(spark, sf_dir):
+def _pair_operators():
+    from hhek2sqlite_spark.operators import dedup
+
+    return {
+        "lsh_bucket_pairs": ("embeddings", similarity.lsh_bucket_pairs),
+        "minhash_lsh_pairs": ("documents", dedup.minhash_lsh_pairs),
+        "simhash_pairs": ("documents", dedup.simhash_pairs),
+        "ngram_jaccard_pairs": ("documents", dedup.ngram_jaccard_pairs),
+    }
+
+
+@pytest.mark.parametrize("op", sorted(_pair_operators()))
+def test_derived_frame_release_frees_operator_state(spark, sf_dir, lifetime_state, op):
+    """Releasing a frame DERIVED from a pair operator's result frees
+    what the operator materialized: its checkpoint is a leaf of the
+    derived plan too, so nothing stays in the CacheManager or among
+    the persistent RDDs."""
+    from hhek2sqlite_spark.sources.parquet import load_table
+
+    table, fn = _pair_operators()[op]
+    src = load_table(spark, sf_dir, table)
+    rdds, cached = lifetime_state()
+    with owned_result(fn(src).select("id_a")) as out:
+        out.count()
+    rdds_after, cached_after = lifetime_state()
+    assert cached_after == cached, "operator cache outlived release"
+    assert rdds_after <= rdds, "operator RDD outlived release"
+
+
+def test_minhash_pairs_cache_released_by_neardup_clusters(spark, sf_dir, lifetime_state):
     """neardup_clusters consumes the pair relation internally — it must
-    release the pair generator's signature cache before returning."""
+    release the pair generator's signature checkpoint before returning,
+    leaving only its own labels checkpoint for the caller to free."""
     from hhek2sqlite_spark.operators import dedup
     from hhek2sqlite_spark.operators.util import release_local_checkpoints
     from hhek2sqlite_spark.sources.parquet import load_table
 
     cache_mgr = spark._jsparkSession.sharedState().cacheManager()
     cache_was_empty = cache_mgr.isEmpty()
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    docs = load_table(spark, sf_dir, "documents")
+    rdds = lifetime_state()[0]
     out = dedup.neardup_clusters(dedup.minhash_lsh_pairs(docs))
     assert out.count() > 0
     if cache_was_empty:
         assert cache_mgr.isEmpty(), "signature cache leaked past the loop"
-    release_local_checkpoints(out)
+    assert release_local_checkpoints(out) == 1
+    assert lifetime_state()[0] <= rdds, "signature checkpoint leaked"
 
 
-def test_release_owned_caches_is_idempotent_and_counts(spark):
-    df = spark.range(10).cache()
-    from hhek2sqlite_spark.operators.util import own_caches
+def test_star_fallback_frees_its_round_checkpoints(spark, lifetime_state):
+    """A chain longer than max_iter takes the star fallback: each round
+    is a checkpoint cut from the previous one, so once the clusters are
+    released no round's blocks stay persisted."""
+    from hhek2sqlite_spark.operators import dedup
+    from hhek2sqlite_spark.operators.util import release_local_checkpoints
 
-    result = own_caches(spark.range(5), df)
-    assert release_owned_caches(result) == 1
-    assert release_owned_caches(result) == 0  # attribute consumed
+    chain = spark.createDataFrame([(i, i + 1) for i in range(40)], "id_a long, id_b long")
+    rdds = lifetime_state()[0]
+    out = dedup.neardup_clusters(chain, max_iter=2)
+    assert [r.cluster_id for r in out.select("cluster_id").distinct().collect()] == [0]
+    assert release_local_checkpoints(out) == 1
+    assert lifetime_state()[0] <= rdds, "star rounds outlived release"

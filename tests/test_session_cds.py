@@ -2,7 +2,9 @@
 
 The decision helper is tested on fake JDK/Spark/cache trees with no JVM;
 one subprocess test drives ``python -m hhek2sqlite_spark convert``
-through creation, mapping, a refused (garbage) archive and a truncated one.
+through creation, mapping (with and without the promoted log), a refused
+(garbage) archive and a truncated one. ``get_spark``'s and
+``tune_existing``'s conf sets are pinned on fake builders and sessions.
 """
 
 import os
@@ -10,6 +12,7 @@ import sqlite3
 import subprocess
 import sys
 import time
+import types
 
 import pytest
 
@@ -81,7 +84,30 @@ def test_a_complete_candidate_is_promoted_and_other_keys_deleted(cds):
     state, opts, _ = session._cds_plan(False, {})
     assert state == "mapped"
     assert opts.endswith(f"-XX:SharedArchiveFile={base}.jsa")
-    assert sorted(os.listdir(cache)) == sorted(["conf", os.path.basename(base) + ".jsa"])
+    key = os.path.basename(base)
+    assert sorted(os.listdir(cache)) == sorted(["conf", key + ".jsa", key + ".log"])
+    with open(base + ".log") as fh:
+        assert fh.read() == REGIONS  # the candidate's log, kept to re-check the archive
+
+
+def test_an_archive_cut_short_after_promotion_is_never_mapped(cds):
+    _, base = cds
+    _touch(base + ".jsa", b"\0" * (DUMP_END - 1))
+    _touch(base + ".log", REGIONS.encode())
+    state, opts, _ = session._cds_plan(False, {})
+    assert state == "created" and "SharedArchiveFile" not in opts
+    assert not os.path.exists(base + ".jsa") and not os.path.exists(base + ".log")
+
+
+def test_an_archive_without_a_log_is_mapped(cds):
+    _, base = cds
+    _touch(base + ".jsa", b"\0" * DUMP_END)
+    state, opts, _ = session._cds_plan(False, {})
+    assert state == "mapped" and opts.endswith(f"-XX:SharedArchiveFile={base}.jsa")
+    # a complete archive with its log maps too, and both stay
+    _touch(base + ".log", REGIONS.encode())
+    assert session._cds_plan(False, {})[0] == "mapped"
+    assert os.path.exists(base + ".jsa") and os.path.exists(base + ".log")
 
 
 def test_a_truncated_candidate_is_deleted_never_promoted(cds):
@@ -144,12 +170,81 @@ def test_a_refused_archive_is_deleted(cds):
     _, base = cds
     log = f"{base}.{os.getpid()}.log"
     _touch(base + ".jsa")
+    _touch(base + ".log")
     _touch(log, b"[0.016s][info][cds] Mapped dynamic region #0 at base 0x0 top 0x1 (ReadWrite)\n")
     assert session._cds_started("mapped", base, 1) == "mapped"
     assert os.path.exists(base + ".jsa") and not os.path.exists(log)
     _touch(log, b"[0.007s][info][cds] UseSharedSpaces: The shared archive file has a bad magic number.\n")
     assert session._cds_started("mapped", base, 1) == "refused"
-    assert not os.path.exists(base + ".jsa") and not os.path.exists(log)
+    assert not any(os.path.exists(p) for p in (base + ".jsa", base + ".log", log))
+
+
+# the SQL confs both entry points set, besides the shuffle partition count
+TUNED = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+    "spark.sql.parquet.filterPushdown": "true",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.session.timeZone": "UTC",
+}
+
+
+class _Recorder:
+    """Stands in for ``SparkSession.builder`` and for a session's
+    ``conf``: records every key set, returns itself from the builder."""
+
+    def __init__(self):
+        self.conf = {}
+
+    def appName(self, name):
+        self.conf["spark.app.name"] = name
+        return self
+
+    def master(self, master):
+        self.conf["spark.master"] = master
+        return self
+
+    def config(self, key=None, value=None, *, map=None):
+        self.conf.update(map or {key: value})
+        return self
+
+    def getOrCreate(self):
+        return self
+
+    set = config
+
+
+def test_get_spark_and_tune_existing_set_their_confs(monkeypatch):
+    rec = _Recorder()
+    monkeypatch.setattr(session, "SparkSession", types.SimpleNamespace(builder=rec))
+    monkeypatch.setattr(session, "DEFAULT_CPUS", "4")
+    monkeypatch.setattr(session, "_cds_plan", lambda jvm_up, extra: ("skipped:test", "", ""))
+    monkeypatch.delenv("SPARK_GRAFT_EXTRA_CONF", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert session.get_spark("app") is rec
+    assert rec.conf == {
+        **TUNED,
+        "spark.app.name": "app",
+        "spark.master": "local[4]",
+        "spark.sql.shuffle.partitions": "4",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.driver.memory": "8g",
+        "spark.ui.enabled": "false",
+        "spark.ui.showConsoleProgress": "false",
+    }
+
+    class Session:
+        conf = _Recorder()
+
+        class sparkContext:
+            defaultParallelism = 3
+
+    assert session.tune_existing(Session) is Session
+    assert Session.conf.conf == {**TUNED, "spark.sql.shuffle.partitions": "3"}
 
 
 # the CLI exactly as ``python -m hhek2sqlite_spark``, then the start's case on stderr
@@ -174,40 +269,51 @@ def test_cli_creates_maps_and_heals_the_archive(spark, tmp_path):
     env = dict(os.environ, XDG_CACHE_HOME=str(tmp_path / "xdg"), PYTHONPATH=REPO)
     cache = str(tmp_path / "xdg" / "hhek2sqlite_spark" / "cds")
 
-    def convert(crash=False):
+    def convert():
         proc = subprocess.run(
             [sys.executable, "-c", CLI, "convert", "--optin", src, "--optout", out],
             cwd=str(tmp_path), env=env, capture_output=True, text=True, timeout=600,
         )
         assert proc.returncode == 0, proc.stderr[-3000:]
-        lines = proc.stdout.splitlines()
-        if crash:  # the dead JVM's fatal-error banner precedes the CLI's lines
-            lines = lines[-len(expected) - 1:]
+        lines = proc.stdout.splitlines()  # the CLI's own lines, nothing else
         assert sorted(lines[:-1]) == expected
         assert lines[-1] == f"converted {len(names)} tables: {src} -> {out}"
         return proc.stderr.splitlines()[-1]
 
+    def await_creator():
+        (lock,) = [n for n in os.listdir(cache) if n.endswith(".lock")]
+        with open(os.path.join(cache, lock)) as fh:
+            pids = [int(p) for p in fh.read().split()]
+        assert len(pids) == 2
+        deadline = time.monotonic() + 300
+        while session._alive(pids[1]) and time.monotonic() < deadline:
+            time.sleep(1)
+
     assert convert() == "CDS_STATE=created"
-    (lock,) = [n for n in os.listdir(cache) if n.endswith(".lock")]
-    with open(os.path.join(cache, lock)) as fh:
-        pids = [int(p) for p in fh.read().split()]
-    assert len(pids) == 2
-    deadline = time.monotonic() + 300
-    while session._alive(pids[1]) and time.monotonic() < deadline:
-        time.sleep(1)
+    await_creator()
     assert convert() == "CDS_STATE=mapped"
     (archive,) = [n for n in os.listdir(cache) if n.endswith(".jsa")]
     path = os.path.join(cache, archive)
+    log = path[: -len(".jsa")] + ".log"
     with open(path, "rb") as fh:
         head = fh.read(os.path.getsize(path) // 2)
+    with open(log, "rb") as fh:
+        regions = fh.read()
+    # an archive promoted without its log still maps
+    os.remove(log)
+    assert convert() == "CDS_STATE=mapped"
     os.chmod(path, 0o644)
     with open(path, "wb") as fh:
         fh.write(os.urandom(4096))
     assert convert() == "CDS_STATE=refused"
     assert not os.path.exists(path)
-    # a truncated archive (never promoted, but damaged afterwards) kills
-    # the JVM that maps it; get_spark drops it and starts plain
+    # an archive cut short after promotion would kill the JVM that maps
+    # it; its log gives it away, so it is deleted and recreated unmapped
     with open(path, "wb") as fh:
         fh.write(head)
-    assert convert(crash=True) == "CDS_STATE=refused"
-    assert not os.path.exists(path)
+    with open(log, "wb") as fh:
+        fh.write(regions)
+    assert convert() == "CDS_STATE=created"
+    assert not os.path.exists(path) and not os.path.exists(log)
+    assert not [n for n in os.listdir(tmp_path) if n.startswith("hs_err_pid")]
+    await_creator()
