@@ -17,11 +17,16 @@ an explicit cast from float — left-to-right array fold in both engines.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from ..session import SESSION_MEMO, leaf_signature, plan_leaves
+from .util import release_local_checkpoints
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -151,7 +156,9 @@ def train_ivf_centroids(
         by_cell: dict[int, dict[int, float]] = {}
         for r in rows:
             by_cell.setdefault(r.cell, {})[r.dim] = r.m
-        dim = max(max(d) for d in by_cell.values()) + 1
+        # an empty corpus trains n_cells zero-length centroids, which
+        # index and serve nothing
+        dim = max((max(d) for d in by_cell.values()), default=-1) + 1
         # a cell can end up empty after reassignment — keep its previous
         # position implicitly by zeros (it will attract nothing)
         return [
@@ -1271,169 +1278,78 @@ class _AdoptFromStoreMeta:
 # supply the parameters the legacy caller contract required.
 ADOPT_FROM_STORE = _AdoptFromStoreMeta()
 
-# --- construction-scoped store hint (round 17, optimization round 1) ---------
+# --- the store router (round 17; one memoized derivation) -------------------
 #
-# build_semdedup_store already holds, at build time, everything a judge
-# call later re-derives from the store relation with DRIVER JOBS: the
-# metadata parameters (it wrote them) and the seed router state (the
-# coarse matrix / one-level seed rows it collected for the corpus
-# assignment). Carrying them on the returned DataFrame OBJECT (a plain
-# Python attribute — construction-scoped, exactly like the operator
-# localCheckpoint lifetimes; it does NOT survive a parquet round-trip,
-# where the judge falls back to the in-band metadata row + collects)
-# removes 2 serial driver jobs per judge call (metadata read + coarse
-# collect), and append_to_semdedup_store forwards it unchanged (the
-# appended rows are never seeds — frozen build-time structure), so a
-# multi-batch ingest SEQUENCE pays ZERO per-batch driver collects.
-# Values are identical by construction: the store's seed rows are the
-# build's q.filter(seed_pred) rows with eq/n persisted verbatim, and
-# both sides order by vec_id with the same LIMIT — parity-pinned by
-# test_round17_perf_contracts (hint path == stripped-hint path).
-#
-# The hint dict is FROZEN BY CONVENTION (ADVICE r17): nothing may
-# mutate its contents after construction — forwards hand out shallow
-# copies so sibling stores never alias one mutable dict. Retention
-# note: a one-level hint pins the K collected seed Rows (O(K x dim)
-# driver memory) for the lifetime of the store object — the same
-# bounded-K envelope the one-level tier's collect already requires,
-# now long-lived; two-level hints hold only the O(coarse_k) matrix.
-_SEMDEDUP_HINT_ATTR = "_hhek_semdedup_build_hint"
+# A judge call routes a batch against the store's build parameters (its
+# metadata row) and seed-router state: the coarse matrix (two-level) or
+# the seed rows (one-level). Deriving them from the relation costs two
+# serial driver jobs, the metadata read and the seed collect, so
+# _store_router derives them once per store version and records them in
+# SESSION_MEMO under the store's leaf signature (checked with sameResult:
+# a filtered relation over the same files can see another seed set).
+# build_semdedup_store, append_to_semdedup_store and the streaming tier's
+# open_semdedup_stream_store record the router they already know under
+# their result's key instead: appended rows are never seeds and never a
+# metadata row, so an extended store's router IS its base's. A store
+# without a metadata row is never memoized (its router depends on the
+# caller's coarse_k). One-level routers hold the K seed rows, the
+# bounded-K envelope the one-level tier already requires.
 
 
-def _store_hint(store: DataFrame) -> dict | None:
-    hint = getattr(store, _SEMDEDUP_HINT_ATTR, None)
-    if isinstance(hint, dict) and "meta" in hint:
-        return hint
-    return None
+class _StoreRouter(NamedTuple):
+    meta: dict | None
+    coarse: tuple | None  # (cq, cn, own_ids), two-level
+    seed_rows: list | None  # vec_id-ordered (vec_id, eq) rows, one-level
 
 
-# --- session-scoped router cache for FILE-BACKED stores (round 18) -----------
-#
-# VERDICT r17 #4: a parquet-backed store paid the metadata read and the
-# seed-router collect PER JUDGE CALL (the streaming tier reopens the
-# store every micro-batch; a pipeline looping
-# semantic_dedup_incremental_from_store over a materialized store pays
-# the same), even though the router is a pure function of the store's
-# bytes under the frozen-seed policy. This cache keys the derived
-# router on (application id, every leaf file's (path, size, mtime_ns),
-# EXACT logical-plan equality via sameResult) and holds it for the
-# SESSION only — a module list that dies with the process. It is
-# within-run state, never persisted, and never fires for the
-# in-process checkpoint-leaf stores the bench/registry queries build
-# (their plans have no file leaves — they carry the construction hint
-# instead, and every bench run re-derives its stores from parquet
-# inputs as before). Invalidation is by content signature + plan
-# identity: a rebuild at the same path rewrites files (new mtime_ns)
-# -> new key -> re-derive; an append adds files -> new key ->
-# re-derive (conservative — appended rows are never seeds, but
-# correctness here never rests on that policy); a FILTERED relation
-# over the same files fails sameResult -> no hit (a restriction can
-# change the visible seed set, so plan identity is part of the key,
-# not just the bytes).
-
-_ROUTER_CACHE: list = []  # [(key, analyzed_jplan, hint)]
-_ROUTER_CACHE_MAX = 8
-_ROUTER_FILES_CAP = 100_000
+def _record_router(store: DataFrame, router: _StoreRouter) -> None:
+    sig = leaf_signature(store)
+    if sig is not None and router.meta is not None:
+        plan = store._jdf.queryExecution().analyzed()
+        SESSION_MEMO.put(store.sparkSession, "semdedup.router", sig, router, plan)
 
 
-def _store_file_signature(store: DataFrame):
-    """(app_id, ((path, size, mtime_ns), ...)) when every plan leaf of
-    ``store`` is a local file-source relation; None otherwise (no
-    caching — e.g. checkpoint-leaf stores, non-local filesystems)."""
-    import os as _os
-    from urllib.parse import urlparse
-
-    try:
-        leaves = store._jdf.queryExecution().analyzed().collectLeaves()
-        for i in range(leaves.size()):
-            leaf = leaves.apply(i)
-            if leaf.getClass().getSimpleName() != "LogicalRelation":
-                return None
-            if "HadoopFsRelation" not in leaf.relation().getClass().getName():
-                return None
-        files = store.inputFiles()
-    except Exception:
-        return None
-    if not files or len(files) > _ROUTER_FILES_CAP:
-        return None
-    sig = []
-    for f in sorted(files):
-        u = urlparse(f)
-        if u.scheme not in ("", "file"):
-            return None
-        try:
-            st = _os.stat(u.path)
-        except OSError:
-            return None
-        sig.append((u.path, st.st_size, st.st_mtime_ns))
-    return (store.sparkSession.sparkContext.applicationId, tuple(sig))
-
-
-def _cached_router(store: DataFrame) -> dict | None:
-    """The judge-side router hint for a file-backed store, derived once
-    per (store version, plan) per session: the metadata dict plus the
-    seed-router state (coarse tuple two-level / seed rows one-level) —
-    exactly what the uncached judge re-derives with serial driver jobs
-    on every call. Returns None whenever caching is not provably safe
-    (non-file leaves, missing metadata row, seedless store, stat
-    failure); the caller then takes the uncached path unchanged. Every
-    return is a copy, so a caller's edit never reaches the cache."""
-    key = _store_file_signature(store)
-    if key is None:
-        return None
-    try:
-        jplan = store._jdf.queryExecution().analyzed()
-    except Exception:
-        return None
-    for ekey, eplan, ehint in _ROUTER_CACHE:
-        if ekey == key:
-            try:
-                if eplan.sameResult(jplan):
-                    return dict(ehint)
-            except Exception:
-                return None
+def _store_router(store: DataFrame, coarse_k=ADOPT_FROM_STORE) -> _StoreRouter:
+    """The store's router: the memo's entry, or one derivation from the
+    relation (metadata read, then the seed collect). ``coarse_k`` only
+    matters for a store without a metadata row, whose router is then
+    empty unless ``coarse_k`` is given (``_resolve_store_params`` raises
+    for it)."""
+    sig = leaf_signature(store)
+    if sig is not None:
+        plan = store._jdf.queryExecution().analyzed()
+        hit = SESSION_MEMO.get(store.sparkSession, "semdedup.router", sig, plan=plan)
+        if hit is not None:
+            return hit
     meta = read_semdedup_store_meta(store)
-    if meta is None:
-        return None
+    if meta is not None:
+        coarse_k = meta["coarse_k"]
+    elif coarse_k is ADOPT_FROM_STORE:
+        return _StoreRouter(None, None, None)
     seeds = store.filter(
         (F.col("vec_id") != STORE_META_VEC_ID) & (F.col("is_seed") == 1)
     )
-    if meta["coarse_k"] is None:
-        seed_rows = (
-            seeds.orderBy("vec_id").select("vec_id", "eq", "ccell").collect()
-        )
-        if not seed_rows or any(r["ccell"] is not None for r in seed_rows):
-            # seedless (bootstrap) or inconsistent (two-level ccell on a
-            # one-level-metadata store): leave it to the uncached judge,
-            # which bootstraps / raises exactly as before
-            return None
-        hint = {"meta": meta, "coarse": None, "seed_rows": seed_rows}
+    if coarse_k is not None:
+        router = _StoreRouter(meta, _collect_coarse(seeds, coarse_k), None)
     else:
-        coarse = _collect_coarse(seeds, meta["coarse_k"])
-        if coarse is None:
-            return None
-        hint = {"meta": meta, "coarse": coarse, "seed_rows": None}
-    _ROUTER_CACHE.append((key, jplan, hint))
-    del _ROUTER_CACHE[:-_ROUTER_CACHE_MAX]
-    return dict(hint)
-
-
-def carry_store_router(derived: DataFrame, base: DataFrame) -> DataFrame:
-    """Attach ``base``'s router hint (construction-scoped or session-
-    cached) to a relation DERIVED from base by unioning rows that are
-    never seeds and never metadata (the streaming tier's base + delta
-    view — store_rows_for_admitted pins both properties). The derived
-    store's metadata row and seed set then EQUAL base's by
-    construction, so the judge may route against base's state without
-    scanning the union. Returns ``derived`` (hint attached when
-    available; a shallow copy, so sibling relations never alias one
-    mutable dict)."""
-    hint = _store_hint(base)
-    if hint is None:
-        hint = _cached_router(base)
-    if hint is not None:
-        setattr(derived, _SEMDEDUP_HINT_ATTR, dict(hint))
-    return derived
+        # one-level tier: ALL store seeds driver-collected — the legacy
+        # bounded-K envelope (use only with a fenced seed set)
+        seed_rows = seeds.orderBy("vec_id").select("vec_id", "eq", "ccell").collect()
+        # a TWO-LEVEL store (ccell present) queried one-level would
+        # silently assign batch vectors by global argmax while the
+        # store's cells are route-local — missed rejections with no
+        # error. The seeds are already on the driver, so the check is
+        # free (with a consistent metadata row _resolve_store_params
+        # raises first; this is the backstop for pre-metadata stores)
+        if any(r["ccell"] is not None for r in seed_rows):
+            raise ValueError(
+                "semantic_dedup_incremental_from_store: store was built "
+                "two-level (seed ccell present) — pass the same coarse_k "
+                "it was built with, not None"
+            )
+        router = _StoreRouter(meta, None, seed_rows)
+    _record_router(store, router)
+    return router
 
 
 def _store_meta_df(
@@ -1630,40 +1546,34 @@ def build_semdedup_store(
     meta = _store_meta_df(
         q.sparkSession, seed_stride, seed_max_id, coarse_k, fine_salt
     )
-    # the hint rides on the returned DataFrame object (see
-    # _SEMDEDUP_HINT_ATTR): judge calls against THIS store skip the
-    # metadata-read and coarse-collect driver jobs; a parquet
-    # round-trip drops it and the in-band metadata row takes over
-    hint: dict = {
-        "meta": {
-            "format_version": SEMDEDUP_STORE_FORMAT_VERSION,
-            "seed_stride": seed_stride,
-            "seed_max_id": seed_max_id,
-            "coarse_k": coarse_k,
-            "fine_salt": fine_salt,
-            "quant_scale": _QUANT_SCALE,
-        },
-        "coarse": None,
-        "seed_rows": None,
+    # the seed rows / coarse tuple collected for the assignment are the
+    # store's router (r17): recorded under the store's key, judge calls
+    # against it skip the metadata-read and seed-collect driver jobs
+    meta_dict = {
+        "format_version": SEMDEDUP_STORE_FORMAT_VERSION,
+        "seed_stride": seed_stride,
+        "seed_max_id": seed_max_id,
+        "coarse_k": coarse_k,
+        "fine_salt": fine_salt,
+        "quant_scale": _QUANT_SCALE,
     }
     if coarse_k is None:
         assigned, seed_rows = _assign_one_level(
             q, seed_pred, checkpoint=False, return_seed_rows=True
         )
-        hint["seed_rows"] = seed_rows
+        router = _StoreRouter(meta_dict, None, seed_rows)
     else:
-        # the coarse tuple collected for the assignment doubles as the
-        # judge calls' router state (r17); each vector's coarse route
-        # rides through the fine cogroup as an output column (r18
-        # keep_ccell), so the old K-row seed-route join — and its
-        # broadcast job — is gone from the store plan (guide §2.4)
+        # each vector's coarse route rides through the fine cogroup as
+        # an output column (r18 keep_ccell), so the old K-row seed-route
+        # join — and its broadcast job — is gone from the store plan
+        # (guide §2.4)
         assigned, coarse_state = _assign_two_level(
             q, seed_pred, coarse_k, fine_salt,
             return_coarse_state=True, checkpoint=False, keep_ccell=True,
         )
-        hint["coarse"] = coarse_state
+        router = _StoreRouter(meta_dict, coarse_state, None)
     if assigned is None:
-        setattr(meta, _SEMDEDUP_HINT_ATTR, hint)
+        _record_router(meta, router)
         return meta
 
     out = assigned.withColumn(
@@ -1686,7 +1596,7 @@ def build_semdedup_store(
             .alias("ccell"),
         )
     store = data.unionByName(meta).localCheckpoint(eager=True)
-    setattr(store, _SEMDEDUP_HINT_ATTR, hint)
+    _record_router(store, router)
     return store
 
 
@@ -1704,31 +1614,26 @@ def _bootstrap_admit(bq: DataFrame) -> DataFrame:
 def _store_is_cell_partitioned(store: DataFrame) -> bool:
     """Detect whether ``store`` scans a file source PARTITIONED BY
     ``cell`` — the auto-enable signal for ``prune_store_cells`` (round
-    17, VERDICT r16 #3). Walks the analyzed plan's leaves via py4j and
-    looks for a HadoopFsRelation whose partition schema contains
-    ``cell``; any failure (non-file store, unioned/in-memory relation,
-    internal API drift) degrades to False — i.e. to the streamed-scan
-    default, never to a wrong answer (pruning is a performance path;
-    the cell filter it pushes is exact by construction either way)."""
-    try:
-        leaves = store._jdf.queryExecution().analyzed().collectLeaves()
-        for i in range(leaves.size()):
-            leaf = leaves.apply(i)
-            if leaf.getClass().getSimpleName() != "LogicalRelation":
-                continue
-            rel = leaf.relation()
-            if "HadoopFsRelation" not in rel.getClass().getName():
-                continue
-            if "cell" in list(rel.partitionSchema().fieldNames()):
-                return True
-        return False
-    except Exception:
-        return False
+    17, VERDICT r16 #3). Reads the analyzed plan's leaves and looks for
+    a HadoopFsRelation whose partition schema contains ``cell``; a store
+    without one (in-memory, or no readable plan) is False — i.e. the
+    streamed-scan default, never a wrong answer (pruning is a
+    performance path; the cell filter it pushes is exact by
+    construction either way)."""
+    for leaf in plan_leaves(store):
+        if (
+            leaf.getClass().getSimpleName() == "LogicalRelation"
+            and "HadoopFsRelation" in leaf.relation().getClass().getName()
+            and "cell" in list(leaf.relation().partitionSchema().fieldNames())
+        ):
+            return True
+    return False
 
 
 def _judge_batch_against_store(
     store: DataFrame,
     batch: DataFrame,
+    router: _StoreRouter,
     *,
     tau_e6: int,
     coarse_k: int | None,
@@ -1736,7 +1641,6 @@ def _judge_batch_against_store(
     broadcast_batch: bool,
     prune_store_cells: bool | None,
     prune_cell_cap: int,
-    hint: dict | None = None,
 ) -> tuple[DataFrame, DataFrame | None, DataFrame]:
     """Shared core of the store-path judge (round 17 refactor): returns
     ``(bq, assigned_batch, judged)`` where ``assigned_batch`` is None
@@ -1749,15 +1653,12 @@ def _judge_batch_against_store(
     re-joining them against the assignment to extract admitted rows
     (one eager checkpoint + one join + its broadcast job saved per
     append, and every later scan of the extended store reads a plain
-    filter instead of re-running that join). ``coarse_k``/``fine_salt``
-    arrive already resolved against the store metadata. ``hint`` is the
-    build-time router state riding on stores built in-process (see
-    ``_SEMDEDUP_HINT_ATTR``) — when present, the seed-router collects
-    below are skipped (the hint holds the identical rows/state the
-    collect would return). Both public wrappers
+    filter instead of re-running that join). ``router`` is the store's
+    (``_store_router``) and ``coarse_k``/``fine_salt`` arrive already
+    resolved against its metadata. Both public wrappers
     (``semantic_dedup_incremental_from_store``,
-    ``append_to_semdedup_store``) consume it; see the former for the
-    full semantics/scale contract."""
+    ``append_to_semdedup_store``) and the streaming handler call it;
+    see the first for the full semantics/scale contract."""
     nw = batch.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("ed")
     )
@@ -1772,50 +1673,16 @@ def _judge_batch_against_store(
     # keep it out of the seed set (is_seed = -1 already does) AND the
     # pair probe side
     data_store = store.filter(F.col("vec_id") != STORE_META_VEC_ID)
-    seeds = data_store.filter(F.col("is_seed") == 1)
     if coarse_k is None:
-        if hint is not None:
-            # build-time seed rows handed over in-process, or the
-            # session router cache's rows (r18): identical to the
-            # collect below by construction (the store's seed eq rows
-            # ARE the build's, persisted verbatim; a one-level build
-            # never writes ccell — build hints carry no ccell field and
-            # cached rows were verified all-NULL at cache build, so the
-            # two-level backstop cannot fire)
-            seed_rows = hint["seed_rows"] or []
-        else:
-            # one-level tier: ALL store seeds driver-collected — the
-            # legacy bounded-K envelope (use only with a fenced seed set)
-            seed_rows = (
-                seeds.orderBy("vec_id").select("vec_id", "eq", "ccell").collect()
-            )
-        if not seed_rows:
+        if not router.seed_rows:
             return bq, None, _bootstrap_admit(bq)
-        # a TWO-LEVEL store (ccell present) queried one-level would
-        # silently assign batch vectors by global argmax while the
-        # store's cells are route-local — missed rejections with no
-        # error. The seeds are already on the driver, so the check is
-        # free. (With a metadata row this is unreachable —
-        # _resolve_store_params raises first; kept as the backstop for
-        # pre-metadata stores, where it was the only guard. Hint rows
-        # carry no ccell field — built one-level, ccell is NULL by
-        # construction.)
-        if hint is None and any(r["ccell"] is not None for r in seed_rows):
-            raise ValueError(
-                "semantic_dedup_incremental_from_store: store was built "
-                "two-level (seed ccell present) — pass the same coarse_k "
-                "it was built with, not None"
-            )
-        assigned_batch = _one_level_assign(bq, seed_rows)
+        assigned_batch = _one_level_assign(bq, router.seed_rows)
     else:
-        coarse = hint["coarse"] if hint is not None else _collect_coarse(
-            seeds, coarse_k
-        )
-        if coarse is None:
+        if router.coarse is None:
             return bq, None, _bootstrap_admit(bq)
-        route = _coarse_route_udf(*coarse)
+        route = _coarse_route_udf(*router.coarse)
         v = bq.withColumn("ccell", route("vec_id", "eq"))
-        s = seeds.select(
+        s = data_store.filter(F.col("is_seed") == 1).select(
             "ccell", F.col("vec_id").alias("cell"), F.col("eq").alias("seq")
         )
         assigned_batch = _fine_assign(v, s, fine_salt)
@@ -1892,20 +1759,6 @@ def _judge_batch_against_store(
     return bq, assigned_batch, judged
 
 
-def _release_assignment(assigned_batch: DataFrame) -> None:
-    """Free the batch assignment's eager checkpoint once ``judged`` has
-    been checkpointed from it: nothing reads it after that, and left to
-    ContextCleaner GC it outlives the append (one per streaming
-    micro-batch). Only a bare checkpoint, an analyzed plan that is one
-    ``LogicalRDD``, is released, so a plan reaching the store's own
-    checkpoint is never walked."""
-    from .util import release_local_checkpoints
-
-    plan = assigned_batch._jdf.queryExecution().analyzed()
-    if plan.getClass().getSimpleName() == "LogicalRDD":
-        release_local_checkpoints(assigned_batch)
-
-
 def semantic_dedup_incremental_from_store(
     store: DataFrame,
     batch: DataFrame,
@@ -1979,26 +1832,18 @@ def semantic_dedup_incremental_from_store(
     batch side only (the batch assignment localCheckpoints);
     release via ``release_local_checkpoints``.
     """
-    # stores built in-process carry their build parameters and router
-    # state on the object (zero driver jobs to re-derive them); file-
-    # backed stores fall back to the SESSION ROUTER CACHE (r18 — one
-    # derivation per store version per session), then to the in-band
-    # metadata row + collects
-    hint = _store_hint(store)
-    if hint is None:
-        hint = _cached_router(store)
-    meta = hint["meta"] if hint is not None else read_semdedup_store_meta(store)
-    coarse_k, fine_salt = _resolve_store_params(meta, coarse_k, fine_salt)
+    router = _store_router(store, coarse_k)
+    coarse_k, fine_salt = _resolve_store_params(router.meta, coarse_k, fine_salt)
     _, assigned_batch, judged = _judge_batch_against_store(
         store,
         batch,
+        router,
         tau_e6=tau_e6,
         coarse_k=coarse_k,
         fine_salt=fine_salt,
         broadcast_batch=broadcast_batch,
         prune_store_cells=prune_store_cells,
         prune_cell_cap=prune_cell_cap,
-        hint=hint,
     )
     if assigned_batch is None:
         return judged  # bootstrap decisions
@@ -2066,21 +1911,18 @@ def append_to_semdedup_store(
     would admit everything forever while looking like it dedups —
     build the store from the first corpus slice instead.
     """
-    hint = _store_hint(store)
-    if hint is None:
-        hint = _cached_router(store)
-    meta = hint["meta"] if hint is not None else read_semdedup_store_meta(store)
-    coarse_k, fine_salt = _resolve_store_params(meta, coarse_k, fine_salt)
+    router = _store_router(store, coarse_k)
+    coarse_k, fine_salt = _resolve_store_params(router.meta, coarse_k, fine_salt)
     _, assigned_batch, judged = _judge_batch_against_store(
         store,
         batch,
+        router,
         tau_e6=tau_e6,
         coarse_k=coarse_k,
         fine_salt=fine_salt,
         broadcast_batch=broadcast_batch,
         prune_store_cells=prune_store_cells,
         prune_cell_cap=prune_cell_cap,
-        hint=hint,
     )
     if assigned_batch is None:
         raise ValueError(
@@ -2097,7 +1939,8 @@ def append_to_semdedup_store(
     # an assignment⋈decisions join (and its broadcast job) that every
     # later scan of the extended store re-ran
     judged = judged.localCheckpoint(eager=True)
-    _release_assignment(assigned_batch)
+    # nothing reads the batch assignment's own checkpoint after this
+    release_local_checkpoints(assigned_batch)
     decisions = judged.select("vec_id", "cell", "admitted")
     admitted = judged.filter(F.col("admitted") == 1).select(
         "vec_id",
@@ -2108,17 +1951,9 @@ def append_to_semdedup_store(
         F.lit(None).cast("long").alias("ccell"),
     )
     new_store = store.unionByName(admitted)
-    if hint is not None:
-        # the appended rows are NEVER seeds (frozen build-time cell
-        # structure), so the build's metadata and router state hold
-        # verbatim for the extended store: forward the hint — a SHALLOW
-        # COPY (ADVICE r17: the dict is treated as frozen; copying the
-        # top level means no future mutation of one store's hint can
-        # alias into its siblings'; the coarse/seed_rows values are
-        # shared by reference, bounded O(coarse_k)/O(K) driver state
-        # retained for the store object's lifetime) — and the NEXT
-        # batch's judge pays zero driver collects too
-        setattr(new_store, _SEMDEDUP_HINT_ATTR, dict(hint))
+    # the appended rows are never seeds (frozen build-time cell
+    # structure), so the store's router holds verbatim for new_store
+    _record_router(new_store, router)
     return decisions, new_store
 
 

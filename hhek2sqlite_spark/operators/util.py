@@ -18,6 +18,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import SESSION_MEMO, plan_leaves
+
 
 def spread(df: DataFrame, enabled: bool = True) -> DataFrame:
     """One cheap round-robin shuffle of the raw rows so CPU-heavy map
@@ -141,8 +143,9 @@ def release_local_checkpoints(df: DataFrame) -> int:
     ``LogicalRDD`` leaf of the analyzed plan, so one read of its leaves
     finds them all. This is the one release path for relations an
     operator materializes while building its result; the only state
-    that outlives it is declared serving state (the IVF index behind
-    ``similarity_ivf``).
+    that outlives it is ``session.SESSION_MEMO``'s, where only the IVF
+    index behind ``similarity_ivf`` holds Spark blocks; memo entries
+    keyed on a released RDD go with it.
 
     Why explicit release exists at all: the checkpoint blocks are
     *supposed* to be reclaimed by Spark's ContextCleaner once the caller
@@ -161,13 +164,8 @@ def release_local_checkpoints(df: DataFrame) -> int:
     on any DataFrame: plans without LogicalRDD leaves release nothing,
     and unpersist on a non-persisted RDD is a no-op.
     """
-    try:
-        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-    except Exception:  # Connect / non-classic sessions: nothing to walk
-        return 0
     released: set[int] = set()
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
+    for leaf in plan_leaves(df):
         if leaf.getClass().getSimpleName() != "LogicalRDD":
             continue
         # the same checkpoint relation appears once PER REFERENCE in the
@@ -180,4 +178,6 @@ def release_local_checkpoints(df: DataFrame) -> int:
                 released.add(rdd.id())
         except Exception:  # noqa: BLE001 - best-effort per leaf
             pass
+    if released:
+        SESSION_MEMO.forget(released)
     return len(released)

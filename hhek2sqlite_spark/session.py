@@ -17,7 +17,7 @@ Session start. A fresh driver JVM maps pre-parsed, pre-verified Spark,
 Catalyst, Hadoop and Parquet classes from one JDK 17 dynamic AppCDS
 (class-data sharing) archive instead of loading them from ~290 jars,
 which cuts both the gateway launch and the first job by ~40%. The
-archive is amortized state, like ``_IVF_INDEX``: one file in
+archive is amortized state, like ``SESSION_MEMO``'s entries: one file in
 ``${XDG_CACHE_HOME:-~/.cache}/hhek2sqlite_spark/cds/``, keyed on the
 ``(path, size, mtime)`` of the ``java`` binary, the JDK's ``lib/modules``
 and every ``$SPARK_HOME/jars/*.jar``.
@@ -40,6 +40,16 @@ and every ``$SPARK_HOME/jars/*.jar``.
   templates-only conf dir is swapped for an empty one for the launch),
   or the cache directory raises ``OSError``. ``CDS_STATE`` records the
   case. Deleting the directory is always safe.
+
+Session memo. ``SESSION_MEMO`` is the only derived state that outlives
+a call: the Parquet schemas ``load_table`` infers, the IVF centroids and
+index behind ``similarity_ivf``, and the semdedup store routers. An
+entry is keyed on a kind plus the relation's leaf signature
+(``leaf_signature``), is valid only in the SparkContext that built it,
+and is checked with ``sameResult`` where its value depends on the plan.
+It is bounded (LRU, ``MEMO_BOUND`` entries); an entry for the same
+leaves at another version is replaced, and evicting a Spark-held value
+(the IVF index) unpersists it.
 """
 
 from __future__ import annotations
@@ -49,11 +59,14 @@ import hashlib
 import os
 import re
 import shutil
+import threading
+from collections import Counter, OrderedDict
+from urllib.parse import urlparse
 
 from pyspark import SparkContext
 from pyspark.errors import PySparkRuntimeError
 from pyspark.find_spark_home import _find_spark_home
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -280,3 +293,114 @@ def tune_existing(spark: SparkSession) -> SparkSession:
         except Exception:  # pragma: no cover - conf may be static in some harnesses
             pass
     return spark
+
+
+def plan_leaves(df: DataFrame) -> list:
+    """The leaf nodes of ``df``'s analyzed plan, read over py4j once;
+    empty where there is no JVM plan to read (Connect sessions)."""
+    try:
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    except Exception:  # noqa: BLE001 - no classic JVM plan
+        return []
+    return [leaves.apply(i) for i in range(leaves.size())]
+
+
+def leaf_signature(df: DataFrame) -> tuple | None:
+    """``df``'s content key: one ``(leaf, version)`` pair per plan leaf,
+    ``(root path, sources.parquet._file_signature(root))`` for a local
+    file-source relation and ``(RDD id, None)`` for an RDD leaf such as
+    a local checkpoint. None when a leaf is neither (an in-memory
+    relation, a non-local file system): such a frame is never memoized."""
+    from .sources.parquet import _file_signature
+
+    sig = []
+    for leaf in plan_leaves(df):
+        node = leaf.getClass().getSimpleName()
+        if node == "LogicalRDD":
+            sig.append((leaf.rdd().id(), None))
+            continue
+        if node != "LogicalRelation" or "HadoopFsRelation" not in leaf.relation().getClass().getName():
+            return None
+        for root in leaf.relation().location().rootPaths().mkString("\n").split("\n"):
+            url = urlparse(root)
+            if url.scheme not in ("", "file"):
+                return None
+            sig.append((url.path, _file_signature(url.path)))
+    return tuple(sig) or None
+
+
+# entries SESSION_MEMO keeps; the working set is the ten fixture tables'
+# schemas, the IVF centroids and index, and a few store routers
+MEMO_BOUND = 16
+
+
+class SessionMemo:
+    """Derived state keyed on content: ``(kind, sig)`` -> value, where
+    ``sig`` is a leaf signature (see ``leaf_signature``). ``hits`` and
+    ``misses`` count lookups per kind."""
+
+    def __init__(self) -> None:
+        self.hits: Counter = Counter()
+        self.misses: Counter = Counter()
+        self._entries: OrderedDict = OrderedDict()  # (kind, sig) -> (plan, value)
+        self._sc = None
+        self._lock = threading.Lock()
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    def get(self, spark: SparkSession, kind: str, sig: tuple, build=None, plan=None):
+        """The value recorded under ``(kind, sig)``; with ``plan`` (a JVM
+        analyzed plan) only if the recorded plan has the same result. On
+        a miss, ``build()``'s value is recorded and returned, or None
+        without ``build``."""
+        with self._lock:
+            self._own(spark)
+            entry = self._entries.get((kind, sig))
+            if entry is not None and (plan is None or entry[0].sameResult(plan)):
+                self._entries.move_to_end((kind, sig))
+                self.hits[kind] += 1
+                return entry[1]
+            self.misses[kind] += 1
+        if build is None:
+            return None
+        value = build()
+        self.put(spark, kind, sig, value, plan)
+        return value
+
+    def put(self, spark: SparkSession, kind: str, sig: tuple, value, plan=None) -> None:
+        """Record ``value``; it replaces the kind's entry for the same
+        leaves at any version, then the least recently used entries go."""
+        leaves = [leaf for leaf, _ in sig]
+        with self._lock:
+            self._own(spark)
+            for key in [k for k in self._entries if k[0] == kind and [leaf for leaf, _ in k[1]] == leaves]:
+                self._drop(key)
+            self._entries[(kind, sig)] = (plan, value)
+            while len(self._entries) > MEMO_BOUND:
+                self._drop(next(iter(self._entries)))
+
+    def forget(self, rdd_ids: set) -> None:
+        """Drop the entries whose leaves include a released RDD: nothing
+        can read those relations again."""
+        with self._lock:
+            for key in [k for k in self._entries if any(leaf in rdd_ids for leaf, _ in k[1])]:
+                self._drop(key)
+
+    def clear(self) -> None:
+        with self._lock:
+            for key in list(self._entries):
+                self._drop(key)
+
+    def _own(self, spark: SparkSession) -> None:
+        if self._sc is not spark.sparkContext:
+            self._entries.clear()  # a stopped context freed its Spark-held values
+            self._sc = spark.sparkContext
+
+    def _drop(self, key: tuple) -> None:
+        _, value = self._entries.pop(key)
+        if isinstance(value, DataFrame):
+            value.unpersist()
+
+
+SESSION_MEMO = SessionMemo()

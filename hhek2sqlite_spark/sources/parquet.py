@@ -14,6 +14,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import SESSION_MEMO
+
 # The driver's fixture tables (TESTDATA.md). Order mirrors dependency-ish
 # order the way the reference fixes its ten-table copy order
 # (/root/reference/hhek2sqlite.go:1287-1296).
@@ -31,21 +33,6 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-# Session-scoped parquet SCHEMA cache (round 18, guide §5 — the driver
-# should do almost no data work): a schema-less ``spark.read.parquet``
-# runs a 1-task footer-inference JOB at every DataFrame construction,
-# which the bench pays once per table per query per rep — pure serial
-# driver latency (~0.05-0.1s each) that a production deployment never
-# pays because the metastore/catalog supplies the schema. Caching the
-# inferred StructType per path is the metastore equivalent: METADATA
-# only, in-process only (dies with the interpreter), and every query
-# still computes its RESULT from the parquet bytes on every run.
-# Each entry is path -> (file signature, schema): a table rewritten in
-# the session gets a new signature and so a fresh inference, instead of
-# a stale schema whose by-name column matching would read NULLs.
-_SCHEMA_CACHE: dict = {}
 
 
 def _file_signature(path: str) -> tuple:
@@ -67,13 +54,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    sig = _file_signature(path)
-    cached = _SCHEMA_CACHE.get(path)
-    if cached is not None and cached[0] == sig:
-        schema = cached[1]
-    else:
-        schema = spark.read.parquet(path).schema  # one footer job per path
-        _SCHEMA_CACHE[path] = (sig, schema)
+    # the inferred schema is metadata a catalog would supply: memoized
+    # per file version, so a table is footer-read (one Spark job) once
+    # per session and again only after it is rewritten
+    schema = SESSION_MEMO.get(
+        spark, "parquet.schema", ((path, _file_signature(path)),), lambda: spark.read.parquet(path).schema
+    )
     df = spark.read.schema(schema).parquet(path)
     if name == "events":
         df = _normalize_events(df)

@@ -57,12 +57,10 @@ from ..operators.similarity import (
     ADOPT_FROM_STORE,
     SEMDEDUP_STORE_DDL,
     _judge_batch_against_store,
-    _release_assignment,
+    _record_router,
     _resolve_store_params,
-    _store_hint,
-    carry_store_router,
+    _store_router,
     materialize_semdedup_store,
-    read_semdedup_store_meta,
     store_rows_for_admitted,
 )
 from ..operators.util import release_local_checkpoints
@@ -113,19 +111,20 @@ def open_semdedup_stream_store(
     when N is re-judged. The base stays a cell-partitioned scan inside
     the union, so AUTO cell pruning still applies to it.
 
-    r18 (guide §5, VERDICT r17 #4): the returned relation carries the
-    BASE's router hint (metadata + seed-router state), served from the
-    session router cache — derived with driver jobs once per base
+    r18 (guide §5, VERDICT r17 #4): the BASE's router (metadata +
+    seed-router state) is recorded in the session memo under the
+    returned relation's key — derived with driver jobs once per base
     version and reused by every micro-batch, instead of re-reading the
     metadata row and re-collecting the coarse seeds from the whole
     base+delta union per batch. Exact because deltas written by this
     module are admitted rows only (never seeds, never a metadata row —
-    store_rows_for_admitted pins both), so the union's router state IS
-    the base's; compaction rebuilds base (new file mtimes), which
-    invalidates the cache entry by content signature."""
+    store_rows_for_admitted pins both), so the union's router IS the
+    base's; compaction rebuilds base (new file mtimes), which gives it
+    a new leaf signature and so a fresh derivation."""
     base = spark.read.schema(SEMDEDUP_STORE_DDL).parquet(
         os.path.join(root, "base")
     ).select("vec_id", "cell", "eq", "n", "is_seed", "ccell")
+    router = _store_router(base)
     store = base
     for i in _delta_ids(root):
         if upto_batch_id is not None and i >= upto_batch_id:
@@ -134,7 +133,8 @@ def open_semdedup_stream_store(
             os.path.join(root, "delta", f"ingest_batch={i}")
         )
         store = store.unionByName(delta)
-    return carry_store_router(store, base)
+    _record_router(store, router)
+    return store
 
 
 def judge_semdedup_batch(
@@ -166,21 +166,20 @@ def judge_semdedup_batch(
     keeps the old shape."""
     spark = batch_df.sparkSession
     store = open_semdedup_stream_store(spark, root, upto_batch_id=batch_id)
-    hint = _store_hint(store)
-    meta = hint["meta"] if hint is not None else read_semdedup_store_meta(store)
+    router = _store_router(store)
     coarse_k, fine_salt = _resolve_store_params(
-        meta, ADOPT_FROM_STORE, ADOPT_FROM_STORE
+        router.meta, ADOPT_FROM_STORE, ADOPT_FROM_STORE
     )
     _, assigned_batch, judged = _judge_batch_against_store(
         store,
         batch_df,
+        router,
         tau_e6=tau_e6,
         coarse_k=coarse_k,
         fine_salt=fine_salt,
         broadcast_batch=broadcast_batch,
         prune_store_cells=None,
         prune_cell_cap=10_000,
-        hint=hint,
     )
     if assigned_batch is None:
         # bootstrap: judged is the admit-all decisions (no eq/n) — use
@@ -199,7 +198,7 @@ def judge_semdedup_batch(
     # ONE batch-sized eager checkpoint feeding both writes (they must
     # not re-run the judge — same reuse contract as append_to_semdedup_store)
     judged = judged.localCheckpoint(eager=True)
-    _release_assignment(assigned_batch)
+    release_local_checkpoints(assigned_batch)
     try:
         judged.select("vec_id", "cell", "admitted").write.mode(
             "overwrite"

@@ -75,14 +75,11 @@ ALLOWLIST: dict[tuple[str, str, str], tuple[int, str]] = {
         "_judge_batch_against_store",
         "collect",
     ): (
-        2,
-        "site 1: O(K) store seed rows — one-level tier of the store "
-        "path only (same fenced-K envelope as _assign_one_level); the "
-        "two-level branch collects nothing there (goes through "
-        "_collect_coarse). site 2: O(|batch|) distinct cell ids behind "
-        "the prune_store_cells path (auto on cell-partitioned stores) "
-        "— the broadcast_batch smallness premise made explicit as a "
-        "static partition filter, capped at prune_cell_cap ids",
+        1,
+        "O(|batch|) distinct cell ids behind the prune_store_cells path "
+        "(auto on cell-partitioned stores) — the broadcast_batch "
+        "smallness premise made explicit as a static partition filter, "
+        "capped at prune_cell_cap ids",
     ),
     (
         "operators/similarity.py",
@@ -95,13 +92,12 @@ ALLOWLIST: dict[tuple[str, str, str], tuple[int, str]] = {
         "executeTake's escalating re-scans); the (cell, vec_id) filter "
         "pushes to the scan",
     ),
-    ("operators/similarity.py", "_cached_router", "collect"): (
+    ("operators/similarity.py", "_store_router", "collect"): (
         1,
-        "O(K) seed rows — the one-level tier's session router cache "
-        "(r18), same caller-fenced-K envelope as _assign_one_level and "
-        "the _judge_batch_against_store one-level collect it replaces "
-        "on cache build; the two-level branch goes through "
-        "_collect_coarse (O(coarse_k))",
+        "O(K) seed rows — the one-level tier's store router, derived "
+        "once per store version and memoized per session; same "
+        "caller-fenced-K envelope as _assign_one_level. The two-level "
+        "branch goes through _collect_coarse (O(coarse_k))",
     ),
     ("plans/extensions.py", "q_order_value_ntile", "collect"): (
         1,

@@ -165,15 +165,27 @@ def _store_batch(spark):
     return base, batch
 
 
-def _strip_hint(store):
-    """Same relation, new DataFrame object: the construction-scoped hint
-    attribute does not propagate, so the judge falls back to the in-band
-    metadata row + driver collects (the parquet-roundtrip code path)."""
-    from hhek2sqlite_spark.operators import similarity
+def _cold(judge):
+    """``judge()`` with the session memo cleared: the store's router is
+    derived from the relation (metadata row + driver collects), the
+    path of a store no call has recorded a router for."""
+    from hhek2sqlite_spark.session import SESSION_MEMO
 
-    stripped = store.select(*store.columns)
-    assert similarity._store_hint(stripped) is None
-    return stripped
+    SESSION_MEMO.clear()
+    misses = SESSION_MEMO.misses["semdedup.router"]
+    out = judge()
+    assert SESSION_MEMO.misses["semdedup.router"] == misses + 1
+    return out
+
+
+def _hot(judge):
+    """``judge()`` served by the router a build or append recorded."""
+    from hhek2sqlite_spark.session import SESSION_MEMO
+
+    hits = SESSION_MEMO.hits["semdedup.router"]
+    out = judge()
+    assert SESSION_MEMO.hits["semdedup.router"] == hits + 1
+    return out
 
 
 def _decisions(df):
@@ -185,11 +197,8 @@ def test_store_hint_two_level_matches_cold_path(spark):
 
     base, batch = _store_batch(spark)
     store = similarity.build_semdedup_store(base, seed_stride=8, coarse_k=4)
-    assert similarity._store_hint(store) is not None
-    hot = similarity.semantic_dedup_incremental_from_store(store, batch)
-    cold = similarity.semantic_dedup_incremental_from_store(
-        _strip_hint(store), batch
-    )
+    hot = _hot(lambda: similarity.semantic_dedup_incremental_from_store(store, batch))
+    cold = _cold(lambda: similarity.semantic_dedup_incremental_from_store(store, batch))
     assert _decisions(hot) == _decisions(cold)
 
 
@@ -198,10 +207,8 @@ def test_store_hint_one_level_matches_cold_path(spark):
 
     base, batch = _store_batch(spark)
     store = similarity.build_semdedup_store(base, seed_stride=16, coarse_k=None)
-    hot = similarity.semantic_dedup_incremental_from_store(store, batch)
-    cold = similarity.semantic_dedup_incremental_from_store(
-        _strip_hint(store), batch
-    )
+    hot = _hot(lambda: similarity.semantic_dedup_incremental_from_store(store, batch))
+    cold = _cold(lambda: similarity.semantic_dedup_incremental_from_store(store, batch))
     assert _decisions(hot) == _decisions(cold)
 
 
@@ -213,43 +220,36 @@ def test_append_forwards_hint_and_matches_cold_path(spark):
     batch_b = batch.filter(F.col("vec_id") % 20 != 0)
     store = similarity.build_semdedup_store(base, seed_stride=8, coarse_k=4)
     dec_a, store2 = similarity.append_to_semdedup_store(store, batch_a)
-    # the appended rows are never seeds, so the build hint holds
-    # verbatim — forwarded as a SHALLOW COPY (ADVICE r17: no mutable
-    # dict aliased across sibling stores; the router state inside is
-    # shared by reference, which is fine because the hint is frozen)
-    h0, h2 = similarity._store_hint(store), similarity._store_hint(store2)
-    assert h2 is not None and h2 is not h0
-    assert h2["meta"] == h0["meta"]
-    assert h2["coarse"] is h0["coarse"]
-    assert h2["seed_rows"] is h0["seed_rows"]
-    hot = similarity.semantic_dedup_incremental_from_store(store2, batch_b)
-    cold = similarity.semantic_dedup_incremental_from_store(
-        _strip_hint(store2), batch_b
-    )
+    # the appended rows are never seeds, so the build's router holds
+    # verbatim: the append records the very same (immutable) router
+    # under the extended store's key
+    assert similarity._store_router(store2) is similarity._store_router(store)
+    hot = _hot(lambda: similarity.semantic_dedup_incremental_from_store(store2, batch_b))
+    cold = _cold(lambda: similarity.semantic_dedup_incremental_from_store(store2, batch_b))
     assert _decisions(hot) == _decisions(cold)
-    # and the append path itself accepts a hintless store identically
-    dec_a_cold, _ = similarity.append_to_semdedup_store(
-        _strip_hint(store), batch_a
-    )
+    # and the append path itself derives the router identically
+    dec_a_cold, _ = _cold(lambda: similarity.append_to_semdedup_store(store, batch_a))
     assert _decisions(dec_a) == _decisions(dec_a_cold)
 
 
 def test_store_hint_does_not_survive_parquet_roundtrip(spark, tmp_path):
     """materialize_semdedup_store returns a reopened scan relation: no
-    hint rides along (by design — the hint is construction-scoped), and
-    the judge answers identically through the metadata-row path."""
+    call recorded a router under its key, so its first judge derives
+    one through the metadata-row path and answers identically."""
     from hhek2sqlite_spark.operators import similarity
+    from hhek2sqlite_spark.session import SESSION_MEMO
 
     base, batch = _store_batch(spark)
     store = similarity.build_semdedup_store(base, seed_stride=8, coarse_k=4)
     reopened = similarity.materialize_semdedup_store(
         store, str(tmp_path / "store_pq")
     )
-    assert similarity._store_hint(reopened) is None
-    hot = similarity.semantic_dedup_incremental_from_store(store, batch)
+    hot = _hot(lambda: similarity.semantic_dedup_incremental_from_store(store, batch))
+    misses = SESSION_MEMO.misses["semdedup.router"]
     via_parquet = similarity.semantic_dedup_incremental_from_store(
         reopened, batch
     )
+    assert SESSION_MEMO.misses["semdedup.router"] == misses + 1
     assert _decisions(hot) == _decisions(via_parquet)
 
 

@@ -1,4 +1,4 @@
-"""Round-18 optimization contracts: the session router cache for
+"""Round-18 optimization contracts: the session memo's routers for
 file-backed semdedup stores (correctness + invalidation), the pair
 operators' construction-scoped checkpoints (released with the result,
 or with any frame derived from it: CacheManager and persistent RDDs
@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from hhek2sqlite_spark.operators import similarity
 from hhek2sqlite_spark.operators.util import owned_result
+from hhek2sqlite_spark.session import SESSION_MEMO
 
 BATCH_SCHEMA = "vec_id long, embedding array<double>"
 
@@ -30,37 +31,39 @@ def _decisions(df):
     return sorted((r.vec_id, r.cell, r.admitted) for r in df.collect())
 
 
-def _clear_router_cache():
-    similarity._ROUTER_CACHE.clear()
+def _judge_counting(judge):
+    """``judge()`` -> (result, router memo hits, router memo misses)."""
+    hits, misses = SESSION_MEMO.hits["semdedup.router"], SESSION_MEMO.misses["semdedup.router"]
+    out = judge()
+    return (
+        out,
+        SESSION_MEMO.hits["semdedup.router"] - hits,
+        SESSION_MEMO.misses["semdedup.router"] - misses,
+    )
 
 
-# --- session router cache ----------------------------------------------------
+# --- session memo: routers of file-backed stores --------------------------------
 
 
 def test_router_cache_matches_cold_path_and_hits(spark, tmp_path):
-    """A parquet-backed store judged twice: the second call must hit the
-    session cache (no new entry) and decide identically to a cold
-    (cache-cleared) judge."""
-    _clear_router_cache()
+    """A parquet-backed store judged twice: the first call derives and
+    records the router, the second is a memo hit, and both decide
+    identically to a judge with the memo cleared."""
     base = spark.createDataFrame(_rows(80, 6, seed=5), BATCH_SCHEMA)
     batch = spark.createDataFrame(_rows(12, 6, seed=9, id_offset=1000), BATCH_SCHEMA)
     store = similarity.build_semdedup_store(base, seed_stride=4, coarse_k=4)
     reopened = similarity.materialize_semdedup_store(
         store, str(tmp_path / "store_pq")
     )
-    assert similarity._store_hint(reopened) is None  # parquet drops the hint
-    first = _decisions(
+    judge = lambda: _decisions(  # noqa: E731
         similarity.semantic_dedup_incremental_from_store(reopened, batch)
     )
-    assert len(similarity._ROUTER_CACHE) == 1
-    second = _decisions(
-        similarity.semantic_dedup_incremental_from_store(reopened, batch)
-    )
-    assert len(similarity._ROUTER_CACHE) == 1  # hit, not a second entry
-    _clear_router_cache()
-    cold = _decisions(
-        similarity.semantic_dedup_incremental_from_store(reopened, batch)
-    )
+    first, hits, misses = _judge_counting(judge)
+    assert (hits, misses) == (0, 1)  # nothing recorded under a reopened scan
+    second, hits, misses = _judge_counting(judge)
+    assert (hits, misses) == (1, 0)
+    SESSION_MEMO.clear()
+    cold = judge()
     assert first == second == cold
 
 
@@ -68,7 +71,6 @@ def test_router_cache_invalidates_on_rebuild_at_same_path(spark, tmp_path):
     """Overwriting the store path with a DIFFERENT corpus (same build
     parameters, so the metadata row is byte-identical) must not serve
     the stale router: the file signature (size/mtime_ns) changes."""
-    _clear_router_cache()
     path = str(tmp_path / "store_pq")
     base1 = spark.createDataFrame(_rows(80, 6, seed=5), BATCH_SCHEMA)
     base2 = spark.createDataFrame(_rows(80, 6, seed=77), BATCH_SCHEMA)
@@ -80,8 +82,11 @@ def test_router_cache_invalidates_on_rebuild_at_same_path(spark, tmp_path):
     s2 = similarity.materialize_semdedup_store(
         similarity.build_semdedup_store(base2, seed_stride=4, coarse_k=4), path
     )
-    d2 = _decisions(similarity.semantic_dedup_incremental_from_store(s2, batch))
-    _clear_router_cache()
+    d2, hits, _ = _judge_counting(
+        lambda: _decisions(similarity.semantic_dedup_incremental_from_store(s2, batch))
+    )
+    assert hits == 0
+    SESSION_MEMO.clear()
     d2_cold = _decisions(
         similarity.semantic_dedup_incremental_from_store(s2, batch)
     )
@@ -90,65 +95,57 @@ def test_router_cache_invalidates_on_rebuild_at_same_path(spark, tmp_path):
 
 
 def test_router_cache_hands_out_copies(spark, tmp_path):
-    """Editing a hint _cached_router returned must not reach the session
-    cache: the next call, and the next judge, still get the original."""
-    _clear_router_cache()
+    """A router handed out by the memo cannot be edited: it is an
+    immutable tuple, and every hit returns the recorded object itself,
+    so the next judge still routes with the original."""
     base = spark.createDataFrame(_rows(80, 6, seed=5), BATCH_SCHEMA)
     batch = spark.createDataFrame(_rows(12, 6, seed=9, id_offset=1000), BATCH_SCHEMA)
     reopened = similarity.materialize_semdedup_store(
         similarity.build_semdedup_store(base, seed_stride=4, coarse_k=4),
         str(tmp_path / "store_pq"),
     )
-    def same(hint, want):  # the values are the cached objects themselves
-        return hint.keys() == want.keys() and all(hint[k] is want[k] for k in want)
-
-    built = similarity._cached_router(reopened)
-    original = dict(built)
-    assert original["coarse"] is not None
-    built["coarse"] = None
-    hit = similarity._cached_router(reopened)
-    assert same(hit, original)
-    hit["meta"] = None
-    assert same(similarity._cached_router(reopened), original)
+    built = similarity._store_router(reopened)
+    assert built.coarse is not None
+    with pytest.raises(AttributeError):
+        built.coarse = None
+    assert similarity._store_router(reopened) is built
     judged = _decisions(
         similarity.semantic_dedup_incremental_from_store(reopened, batch)
     )
-    _clear_router_cache()
+    SESSION_MEMO.clear()
     cold = _decisions(
         similarity.semantic_dedup_incremental_from_store(reopened, batch)
     )
     assert judged == cold
-    _clear_router_cache()
 
 
 def test_router_cache_ignores_filtered_store_relations(spark, tmp_path):
     """A RESTRICTED relation over the same files must not hit the full
-    store's cached router (plan identity is part of the key, not just
-    the bytes): judging against store-minus-some-rows must behave as
-    the uncached judge. One-level store — a two-level store cannot be
-    row-filtered at all (the persisted seed ccells would no longer
-    match a router derived from the surviving seeds)."""
-    _clear_router_cache()
+    store's recorded router (the plan is checked with sameResult, not
+    just the bytes): judging against store-minus-some-rows must behave
+    as a judge with the memo cleared. One-level store — a two-level
+    store cannot be row-filtered at all (the persisted seed ccells
+    would no longer match a router derived from the surviving seeds)."""
     base = spark.createDataFrame(_rows(80, 6, seed=5), BATCH_SCHEMA)
     batch = spark.createDataFrame(_rows(12, 6, seed=9, id_offset=1000), BATCH_SCHEMA)
     reopened = similarity.materialize_semdedup_store(
         similarity.build_semdedup_store(base, seed_stride=4, coarse_k=None),
         str(tmp_path / "store_pq"),
     )
-    # warm the cache with the FULL store
+    # record the FULL store's router
     d_full = _decisions(
         similarity.semantic_dedup_incremental_from_store(reopened, batch)
     )
-    assert len(similarity._ROUTER_CACHE) == 1
     # a filtered store keeps only every-8th-id seeds — a DIFFERENT,
     # valid seed set under one-level routing
     restricted = reopened.filter(
         (F.col("vec_id") % 8 == 0) | (F.col("vec_id") < 0)
     )
-    d_restricted = _decisions(
-        similarity.semantic_dedup_incremental_from_store(restricted, batch)
+    d_restricted, hits, _ = _judge_counting(
+        lambda: _decisions(similarity.semantic_dedup_incremental_from_store(restricted, batch))
     )
-    _clear_router_cache()
+    assert hits == 0
+    SESSION_MEMO.clear()
     d_restricted_cold = _decisions(
         similarity.semantic_dedup_incremental_from_store(restricted, batch)
     )
@@ -156,22 +153,21 @@ def test_router_cache_ignores_filtered_store_relations(spark, tmp_path):
     # sanity that the restriction actually matters (different cells for
     # at least one batch vector) — else this test proves nothing
     assert d_restricted != d_full
-    _clear_router_cache()
 
 
 def test_one_level_router_cache_matches_cold_path(spark, tmp_path):
-    _clear_router_cache()
     base = spark.createDataFrame(_rows(60, 6, seed=5), BATCH_SCHEMA)
     batch = spark.createDataFrame(_rows(10, 6, seed=9, id_offset=1000), BATCH_SCHEMA)
     reopened = similarity.materialize_semdedup_store(
         similarity.build_semdedup_store(base, seed_stride=8, coarse_k=None),
         str(tmp_path / "store_1l"),
     )
-    hot = _decisions(
-        similarity.semantic_dedup_incremental_from_store(reopened, batch)
+    similarity.semantic_dedup_incremental_from_store(reopened, batch)
+    hot, hits, _ = _judge_counting(
+        lambda: _decisions(similarity.semantic_dedup_incremental_from_store(reopened, batch))
     )
-    assert len(similarity._ROUTER_CACHE) == 1
-    _clear_router_cache()
+    assert hits == 1
+    SESSION_MEMO.clear()
     cold = _decisions(
         similarity.semantic_dedup_incremental_from_store(reopened, batch)
     )
@@ -204,8 +200,7 @@ def test_store_ccell_only_on_seed_rows_and_matches_route(spark):
     base = spark.createDataFrame(_rows(80, 6, seed=5), BATCH_SCHEMA)
     store = similarity.build_semdedup_store(base, seed_stride=4, coarse_k=4)
     rows = store.filter(F.col("vec_id") >= 0).collect()
-    hint = similarity._store_hint(store)
-    route = similarity._coarse_route_udf(*hint["coarse"])
+    route = similarity._coarse_route_udf(*similarity._store_router(store).coarse)
     # recompute each seed's coarse route independently via the kernel
     seeds = [r for r in rows if r["is_seed"] == 1]
     seed_df = spark.createDataFrame(
