@@ -41,6 +41,21 @@ and every ``$SPARK_HOME/jars/*.jar``.
   or the cache directory raises ``OSError``. ``CDS_STATE`` records the
   case. Deleting the directory is always safe.
 
+Streaming metadata. Without a native ``libhadoop.so``, Hadoop's local
+file system runs a shell command for every ``setPermission``
+(``chmod``) and every symlink-aware status call (``readlink``), ~3.4 ms
+each from the driver JVM. Spark's default checkpoint file manager
+renames through ``FileContext``, whose ``rename`` resolves symlinks with
+``getFileLinkStatus``: ~25 ``readlink`` spawns per micro-batch across
+the offsets, commits and file-source logs. ``_SQL_CONF`` therefore
+names ``FileSystemBasedCheckpointFileManager``, which renames with
+``File.renameTo``. It is as safe: its ``renameTempFile`` checks that the
+target exists, then renames, the same check-then-rename that
+``AbstractFileSystem.rename`` does on the local file system; on HDFS
+``rename`` refuses an existing target, and the manager turns that into
+``FileAlreadyExistsException``. Spark already uses this manager for
+every store without ``FileContext`` support.
+
 Session memo. ``SESSION_MEMO`` is the only derived state that outlives
 a call: the Parquet schemas ``load_table`` infers, the IVF centroids and
 index behind ``similarity_ivf``, and the semdedup store routers. An
@@ -95,6 +110,11 @@ _SQL_CONF = {
     # rejects; read as long and normalize in sources.parquet.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.session.timeZone": "UTC",
+    # streaming metadata logs rename through FileSystem, not FileContext
+    # (no readlink per rename; see "Streaming metadata" above)
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+    ),
 }
 _REGION = re.compile(r"Shared file region \((\w+) *\) +\d+: +(\d+) bytes, .* file offset (0x[0-9a-f]+)")
 

@@ -23,6 +23,14 @@ The reference copies MDB<->SQLite row-at-a-time with string-built INSERTs
   directions therefore hold one hhek database in driver memory; the
   100 TB path is Parquet, and on a cluster with a JDBC SQLite driver
   the same DataFrames go through ``df.write.jdbc`` unchanged.
+- A table read from a single-file container (SQLite or ``.mdb``) is a
+  driver-built local relation, which Spark's scan slices into
+  ``defaultParallelism`` partitions: on 4 cores, 4 part files per table,
+  each with its own task-attempt directories, ``.crc`` files and
+  permission calls (a process spawn each where Hadoop has no native
+  library). ``convert`` therefore writes such a table as one Parquet
+  file (``coalesce(1)``): still one job per table, in source row order.
+  A Parquet source keeps its partitioning.
 - Escaping (the reference's toUtf8 quote-doubling, F2) disappears:
   parameter binding cannot corrupt quotes. Its *semantic* — data with
   quotes/non-ASCII survives — is asserted by roundtrip tests.
@@ -324,7 +332,10 @@ def convert(
 
     Every table's read and Spark job run at once, one thread per table
     (``edge.per_table``); an SQLite destination is still written by the
-    calling thread alone, in copy order.
+    calling thread alone, in copy order. A Parquet destination gets one
+    file per table when the source is SQLite or ``.mdb`` (the table is
+    already one driver-built relation; splitting it only multiplies
+    tasks and file operations) and the source's partitioning otherwise.
 
     Returns the per-table row counts. A Parquet destination's counts come
     from the footers of the files just written, so no Spark job recounts
@@ -362,9 +373,12 @@ def convert(
             spark, names, load, dst, overwrite=True, create_indexes=create_indexes
         )
 
+    one_file = src_kind in ("sqlite", "mdb")  # driver-built local relations
+
     def to_parquet(name: str) -> int:
         path = os.path.join(dst, name)
-        load(name).write.mode("overwrite").parquet(path)
+        df = load(name)
+        (df.coalesce(1) if one_file else df).write.mode("overwrite").parquet(path)
         return sum(pq.read_metadata(f).num_rows for f in _parquet_files(path))
 
     return dict(zip(names, per_table(spark, to_parquet, names)))

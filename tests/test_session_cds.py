@@ -190,6 +190,9 @@ TUNED = {
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.session.timeZone": "UTC",
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+    ),
 }
 
 
@@ -245,6 +248,15 @@ def test_get_spark_and_tune_existing_set_their_confs(monkeypatch):
 
     assert session.tune_existing(Session) is Session
     assert Session.conf.conf == {**TUNED, "spark.sql.shuffle.partitions": "3"}
+
+
+def test_the_session_jvm_loads_the_checkpoint_file_manager(spark):
+    """A Spark upgrade that moves the configured manager fails here, not
+    in the first streaming query."""
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    assert spark.conf.get(key) == TUNED[key]
+    loaded = spark._jvm.java.lang.Class.forName(TUNED[key])
+    assert loaded.getName() == TUNED[key]
 
 
 # the CLI exactly as ``python -m hhek2sqlite_spark``, then the start's case on stderr

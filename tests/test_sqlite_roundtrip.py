@@ -6,6 +6,7 @@ string), Överföringar's NULL Kontrollnr survives, quotes and non-ASCII
 survive without escaping machinery.
 """
 
+import os
 import sqlite3
 import threading
 from decimal import Decimal
@@ -332,6 +333,28 @@ def test_convert_runs_one_job_per_table_each_way(spark, extra_tables, count_jobs
     assert jobs == n  # one parquet write each; no recount
     _, jobs = count_jobs(lambda: sqlite_io.convert(spark, pq, db2))
     assert jobs == n  # one toArrow each; no schema inference
+
+
+def _part_files(path: str) -> list[str]:
+    return [f for f in os.listdir(path) if f.startswith("part-") and f.endswith(".parquet")]
+
+
+def test_convert_writes_one_file_per_driver_resident_table(spark, extra_tables, tmp_path):
+    """A table read from SQLite is one driver-built relation and lands as
+    one Parquet file; a Parquet source keeps its partitioning."""
+    db = str(tmp_path / "src.db")
+    pq = str(tmp_path / "pq")
+    sqlite_io.write_database(extra_tables, db)
+    counts = sqlite_io.convert(spark, db, pq)
+    assert max(counts.values()) >= 2
+    assert {name: len(_part_files(f"{pq}/{name}")) for name in counts} == dict.fromkeys(counts, 1)
+
+    two = str(tmp_path / "two")
+    spark.range(0, 10).selectExpr("id AS `Löpnr`").repartition(2).write.parquet(f"{two}/Personer")
+    assert len(_part_files(f"{two}/Personer")) == 2
+    out = str(tmp_path / "out")
+    assert sqlite_io.convert(spark, two, out) == {"Personer": 10}
+    assert len(_part_files(f"{out}/Personer")) >= 2
 
 
 def _table_order(db: str) -> list[str]:
