@@ -2,7 +2,8 @@
 """Driver benchmark contract: runs every registered query at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) and prints ONE JSON
 line {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}. The full per-query map and any
+"queries": {name: sec}, "sf": ...}. The full per-query map, each timed
+run's count of compiled generated classes ("codegen_compiles") and any
 errors go to $SPARK_GRAFT_DETAIL_OUT (default BENCH_DETAIL.json next to
 this file).
 
@@ -27,7 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from hhek2sqlite_spark.operators.util import owned_result  # noqa: E402
 from hhek2sqlite_spark.plans import QUERIES  # noqa: E402
-from hhek2sqlite_spark.session import get_spark  # noqa: E402
+from hhek2sqlite_spark.session import codegen_compiles, get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -108,6 +109,7 @@ def main(spark) -> None:
     load_start = _loadavg()
     contended = bool(load_start) and load_start[0] >= QUIET_LOAD
     timings: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     errors: dict[str, str] = {}
     for name in BENCH_QUERIES:
         fn = QUERIES[name]
@@ -122,10 +124,11 @@ def main(spark) -> None:
             # (after the timing capture): ContextCleaner reclamation is
             # nondeterministic, and a sweep of every query would
             # otherwise pool orphaned checkpoint blocks in executor memory
-            t0 = time.perf_counter()
+            c0, t0 = codegen_compiles(spark), time.perf_counter()
             with owned_result(fn(spark, SF_DIR)) as timed:
                 timed.write.format("noop").mode("overwrite").save()
                 timings[name] = round(time.perf_counter() - t0, 4)
+            compiles[name] = codegen_compiles(spark) - c0
         except Exception as exc:  # noqa: BLE001
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
     # a partial headline total would look FASTER than a complete one —
@@ -167,7 +170,7 @@ def main(spark) -> None:
         "detail": os.path.basename(detail_path),
     }
     with open(detail_path, "w") as fh:
-        json.dump({**out, "queries": timings, "errors": errors}, fh, indent=1)
+        json.dump({**out, "queries": timings, "codegen_compiles": compiles, "errors": errors}, fh, indent=1)
     print(json.dumps(out))
 
 

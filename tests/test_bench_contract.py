@@ -1,6 +1,6 @@
 """bench.py's driver contract: exactly one JSON line on stdout with a
-fixed set of 16 keys, a detail file at SPARK_GRAFT_DETAIL_OUT, and the
-caller's session left running."""
+fixed set of 16 keys, a detail file at SPARK_GRAFT_DETAIL_OUT (with each
+timed run's compile count), and the caller's session left running."""
 
 import json
 import os
@@ -52,6 +52,8 @@ def test_bench_prints_one_json_line_and_keeps_the_session(
 
     detail = json.loads(detail_path.read_text())
     assert sorted(detail["queries"]) == sorted(names)
+    assert sorted(detail["codegen_compiles"]) == sorted(names)
+    assert all(isinstance(n, int) and n >= 0 for n in detail["codegen_compiles"].values())
     assert detail["errors"] == {}
 
     assert spark.range(3).count() == 3

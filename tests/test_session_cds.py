@@ -238,6 +238,7 @@ def test_get_spark_and_tune_existing_set_their_confs(monkeypatch):
         "spark.driver.memory": "8g",
         "spark.ui.enabled": "false",
         "spark.ui.showConsoleProgress": "false",
+        "spark.sql.codegen.cache.maxEntries": "2048",
     }
 
     class Session:
