@@ -13,8 +13,8 @@ Store layout under one root (all paths deterministic in batch_id):
                                     metadata row included
                                     (materialize_semdedup_store)
     root/delta/ingest_batch=N/      admitted rows of micro-batch N in
-                                    store schema (store_rows_for_admitted
-                                    — never a metadata row)
+                                    store schema (never a seed, never
+                                    a metadata row)
     root/decisions/ingest_batch=N/  the (vec_id, cell, admitted)
                                     decisions of micro-batch N — the
                                     stream's queryable output
@@ -51,17 +51,14 @@ import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.similarity import (
-    ADOPT_FROM_STORE,
     SEMDEDUP_STORE_DDL,
+    _decisions_and_store_rows,
     _judge_batch_against_store,
     _record_router,
-    _resolve_store_params,
     _store_router,
     materialize_semdedup_store,
-    store_rows_for_admitted,
 )
 from ..operators.util import release_local_checkpoints
 
@@ -118,7 +115,7 @@ def open_semdedup_stream_store(
     metadata row and re-collecting the coarse seeds from the whole
     base+delta union per batch. Exact because deltas written by this
     module are admitted rows only (never seeds, never a metadata row —
-    store_rows_for_admitted pins both), so the union's router IS the
+    ``_decisions_and_store_rows`` pins both), so the union's router IS the
     base's; compaction rebuilds base (new file mtimes), which gives it
     a new leaf signature and so a fresh derivation."""
     base = spark.read.schema(SEMDEDUP_STORE_DDL).parquet(
@@ -153,68 +150,29 @@ def judge_semdedup_batch(
     ADOPTED from the base store's metadata row — a stream cannot drift
     from its store's cell structure.
 
-    r18 (guide §5, VERDICT r17 #3/#4): the handler drives the judge
-    CORE directly so both per-batch writes are projections of ONE
-    batch-grain materialization — the ``judged`` relation already
-    carries the admitted rows' quantized vectors (eq/n), so the old
-    ``store_rows_for_admitted`` re-quantize + decisions join (and its
-    broadcast job) is gone from the per-batch chain. Decision and
-    delta contents are bit-identical to the old path (same quantize
-    expressions, same admitted filter — pinned by the replay and
-    drain tests). The bootstrap branch (no store seeds — only
-    reachable on a hand-assembled root, init refuses seedless bases)
-    keeps the old shape."""
+    The handler runs the store-path judge and splits its result the
+    way ``append_to_semdedup_store`` does
+    (``_decisions_and_store_rows``): both per-batch writes are
+    projections of ONE batch-grain materialization that already
+    carries the admitted rows' quantized vectors (eq/n). A root whose
+    base has no seeds (only reachable when assembled by hand — init
+    refuses seedless bases) takes the same path: every batch vector
+    is admitted with cell NULL and persisted with its eq/n."""
     spark = batch_df.sparkSession
     store = open_semdedup_stream_store(spark, root, upto_batch_id=batch_id)
-    router = _store_router(store)
-    coarse_k, fine_salt = _resolve_store_params(
-        router.meta, ADOPT_FROM_STORE, ADOPT_FROM_STORE
+    judged, assigned, _ = _judge_batch_against_store(
+        store, batch_df, tau_e6=tau_e6, broadcast_batch=broadcast_batch
     )
-    _, assigned_batch, judged = _judge_batch_against_store(
-        store,
-        batch_df,
-        router,
-        tau_e6=tau_e6,
-        coarse_k=coarse_k,
-        fine_salt=fine_salt,
-        broadcast_batch=broadcast_batch,
-        prune_store_cells=None,
-        prune_cell_cap=10_000,
-    )
-    if assigned_batch is None:
-        # bootstrap: judged is the admit-all decisions (no eq/n) — use
-        # the legacy extraction path for the delta rows
-        decisions = judged.localCheckpoint(eager=True)
-        try:
-            decisions.write.mode("overwrite").parquet(
-                os.path.join(root, "decisions", f"ingest_batch={batch_id}")
-            )
-            store_rows_for_admitted(batch_df, decisions).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(root, "delta", f"ingest_batch={batch_id}"))
-        finally:
-            release_local_checkpoints(decisions)
-        return
-    # ONE batch-sized eager checkpoint feeding both writes (they must
-    # not re-run the judge — same reuse contract as append_to_semdedup_store)
-    judged = judged.localCheckpoint(eager=True)
-    release_local_checkpoints(assigned_batch)
+    decisions, rows = _decisions_and_store_rows(judged, assigned)
     try:
-        judged.select("vec_id", "cell", "admitted").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(root, "decisions", f"ingest_batch={batch_id}"))
-        judged.filter(F.col("admitted") == 1).select(
-            "vec_id",
-            "cell",
-            "eq",
-            "n",
-            F.lit(0).cast("int").alias("is_seed"),
-            F.lit(None).cast("long").alias("ccell"),
-        ).write.mode("overwrite").parquet(
+        decisions.write.mode("overwrite").parquet(
+            os.path.join(root, "decisions", f"ingest_batch={batch_id}")
+        )
+        rows.write.mode("overwrite").parquet(
             os.path.join(root, "delta", f"ingest_batch={batch_id}")
         )
     finally:
-        release_local_checkpoints(judged)
+        release_local_checkpoints(decisions)
 
 
 def compact_semdedup_stream_store(spark: SparkSession, root: str) -> int:

@@ -58,17 +58,14 @@ ALLOWLIST: dict[tuple[str, str, str], tuple[int, str]] = {
         "O(n_cells x dim): the centroid model per Lloyd round — "
         "caller-fixed K, model state not data",
     ),
-    ("operators/similarity.py", "_assign_one_level", "collect"): (
+    ("operators/similarity.py", "_derive_router", "collect"): (
         1,
-        "O(K) seed rows — the LEGACY one-level tier, valid only under a "
-        "caller-fenced seed set (semantic_dedup asymptotics note); the "
-        "default two-level tier replaces it",
-    ),
-    ("operators/similarity.py", "_collect_coarse", "collect"): (
-        1,
-        "O(coarse_k) rows via distributed top-k LIMIT — N-independent "
-        "(the r14 weak-flag fix; pinned by the collect-spy test in "
-        "test_round15_ops)",
+        "the one seed-router collect of the SemDeDup family (in-corpus "
+        "assignment and store router alike): two-level, O(coarse_k) rows "
+        "via distributed top-k LIMIT — N-independent (the r14 weak-flag "
+        "fix; pinned by the collect-spy test in test_round15_ops); "
+        "one-level, O(K) seed rows — the LEGACY tier, valid only under a "
+        "caller-fenced seed set (semantic_dedup asymptotics note)",
     ),
     (
         "operators/similarity.py",
@@ -91,13 +88,6 @@ ALLOWLIST: dict[tuple[str, str, str], tuple[int, str]] = {
         "single-pass groupBy().agg (r18 — the old LIMIT 2 paid "
         "executeTake's escalating re-scans); the (cell, vec_id) filter "
         "pushes to the scan",
-    ),
-    ("operators/similarity.py", "_store_router", "collect"): (
-        1,
-        "O(K) seed rows — the one-level tier's store router, derived "
-        "once per store version and memoized per session; same "
-        "caller-fenced-K envelope as _assign_one_level. The two-level "
-        "branch goes through _collect_coarse (O(coarse_k))",
     ),
     ("plans/extensions.py", "q_order_value_ntile", "collect"): (
         1,

@@ -360,7 +360,7 @@ def test_semantic_dedup_two_level_plan_contract(spark):
     nested-loop expansion, and the assignment is a FlatMapCoGroups
     Arrow node in the pre-checkpoint lineage."""
     from hhek2sqlite_spark.operators.similarity import (
-        _assign_two_level,
+        _assign,
         _QUANT_SCALE,
     )
     from hhek2sqlite_spark.plans.extensions import q_semantic_dedup
@@ -381,20 +381,7 @@ def test_semantic_dedup_two_level_plan_contract(spark):
             lambda x: F.round(x * _QUANT_SCALE).cast("long"),
         ).alias("eq"),
     ).withColumn("n", F.sqrt(F.lit(1.0)))
-    # intercept the checkpoints (the concrete classic class — see the
-    # collect-spy note) so the lazy pre-checkpoint plans are inspectable
-    cls = type(q)
-    captured: list[str] = []
-    orig = cls.localCheckpoint
-
-    def grab(self, eager=True):
-        captured.append(_plan_text(self))
-        return orig(self, eager=eager)
-
-    try:
-        cls.localCheckpoint = grab
-        _assign_two_level(q, F.col("vec_id") % 2 == 0, 2, 2)
-    finally:
-        cls.localCheckpoint = orig
-    # last checkpoint = the assigned relation; its lineage is the cogroup
-    assert captured and "FlatMapCoGroupsInPandas" in captured[-1], captured
+    # the assignment is lazy (its callers checkpoint it), so its own
+    # plan shows the cogroup
+    assigned, _ = _assign(q, q.filter(F.col("vec_id") % 2 == 0), 2, 2)
+    assert "FlatMapCoGroupsInPandas" in _plan_text(assigned)
