@@ -33,12 +33,18 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hhek2sqlite_spark.operators.text import fingerprint, let_once, normalized, tokens
-from hhek2sqlite_spark.operators.util import release_local_checkpoints
-from hhek2sqlite_spark.operators.util import spread as _spread_impl
+from hhek2sqlite_spark.operators.text import (
+    char_ngrams,
+    fingerprint,
+    let_once,
+    normalized,
+    tokens,
+    word_ngrams,
+)
+from hhek2sqlite_spark.operators.util import release_local_checkpoints, spread
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -128,19 +134,8 @@ def shingles(documents: DataFrame, n: int = 8, id_col: str = "doc_id") -> DataFr
     The normalized form is let-bound so the normalization regex runs
     once per document, not once per shingle position (text.let_once;
     measured 1.53s -> 0.22s for the shingle scan at sf0.1)."""
-
-    def grams_of(norm: Column) -> Column:
-        return F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(F.length(norm) - (n - 1), F.lit(0))),
-                lambda i: norm.substr(i, F.lit(n)),
-            )
-        )
-
-    grams = let_once(normalized("text"), grams_of)
-    return documents.select(F.col(id_col), F.explode(grams).alias("shingle")).filter(
-        F.length("shingle") == n
-    )
+    grams = let_once(normalized("text"), lambda t: F.array_distinct(char_ngrams(t, n)))
+    return documents.select(F.col(id_col), F.explode(grams).alias("shingle"))
 
 
 def rare_shingle_buckets(
@@ -287,17 +282,12 @@ def _perm_params(k: int, seed: int = 42) -> list[tuple[int, int]]:
     return params
 
 
-def _spread(df: DataFrame, spread: bool) -> DataFrame:
-    return _spread_impl(df, spread)
-
-
 def minhash_signatures(
     documents: DataFrame,
     *,
     k: int = 64,
     n: int = 8,
     id_col: str = "doc_id",
-    spread: bool = True,
     kernel: bool = True,
 ) -> DataFrame:
     """k-wide MinHash signature per document: shingle -> 32-bit hash,
@@ -312,7 +302,7 @@ def minhash_signatures(
     string (``F.expr``) — a py4j-composed tree of 64 pmod chains costs
     seconds of driver time per plan build; a parsed string is
     milliseconds. The modulus is a bitmask (Mersenne 2^61-1), one AND vs
-    pmod's two 64-bit mods per row. ``_spread`` first: the partial
+    pmod's two 64-bit mods per row. ``spread`` first: the partial
     aggregates run map-side inside whatever tasks the scan produced, so
     the input must be spread across cores BEFORE the explode. Each doc's
     shingles stay in one task, so partial agg already yields one row per
@@ -363,7 +353,7 @@ def minhash_signatures(
     skips the dedup. Docs whose normalized text is shorter than n have
     no shingles and therefore NO signature row in either form."""
     if not kernel:
-        sh = shingles(_spread(documents, spread), n, id_col)
+        sh = shingles(spread(documents), n, id_col)
         h = sh.select(
             id_col,
             F.expr(shingle_hash32_sql("shingle", n, char_fn="ascii")).alias("h"),
@@ -405,7 +395,7 @@ def minhash_signatures(
     # The None guard inside the kernel is kept as a belt (unreachable
     # through this path).
     return (
-        _spread(documents, spread)
+        spread(documents)
         .filter(F.length(normalized("text")) >= n)
         .select(F.col(id_col), _sig_kernel(normalized("text")).alias("signature"))
     )
@@ -593,7 +583,10 @@ def _closed_neighborhood(pairs: DataFrame):
     stub, VERDICT r17 #2; see `git show
     4035b00:scripts/explain_loop_r18.py`): the cached raw edge list,
     the cached CLOSED-neighborhood symmetric+self-edge relation
-    hash-laid-out on the neighbor key, and the cached round-1
+    (repartitioned on the neighbor key before caching, but with AQE on
+    and ``canChangeCachedPlanOutputPartitioning=true`` a cached plan's
+    layout is not visible to the plans that read it, so each round
+    re-exchanges it — see ``_lp_round``), and the cached round-1
     labels (label_0(v) = v, so min over the closed neighborhood's
     labels == min over the neighbor ids — a plain groupBy, no join).
     Caller owns all three caches."""
@@ -618,10 +611,14 @@ def _closed_neighborhood(pairs: DataFrame):
 
 def _lp_round(symp: DataFrame, labels: DataFrame) -> DataFrame:
     """ONE min-label-propagation round over the cached closed-
-    neighborhood edges: one shuffle-hash join (labels move to symp's
-    layout, the cached edges never re-shuffle) + one map-combined
-    groupBy — 2 exchanges/round, of which only the groupBy carries
-    edge-grain rows (the r17 re-plan, guide §2.4)."""
+    neighborhood edges: one shuffle-hash join on the neighbor key + one
+    map-combined groupBy. The executed plan of a round (sf0.001, Spark
+    4.1.2, AQE on, ``canChangeCachedPlanOutputPartitioning=true``)
+    holds 3 shuffle exchanges: ``hashpartitioning(id_b)`` over the
+    cached edges' InMemoryTableScan, ``hashpartitioning(id_b)`` over the
+    cached labels, and ``hashpartitioning(id_a)`` for the groupBy — so
+    two of them carry edge-grain rows; the repartition before caching
+    does not survive into the round's plan."""
     return (
         symp.join(
             labels.hint("shuffle_hash").withColumnRenamed("id", "id_b"),
@@ -642,7 +639,7 @@ def neardup_clusters(pairs: DataFrame, *, max_iter: int = 25) -> DataFrame:
     cluster_id = the component's minimum doc id.
 
     Algorithm: iterative min-label propagation — each round every node
-    takes min(own label, neighbor labels), one keyed shuffle per round,
+    takes min(own label, neighbor labels), one join + groupBy per round,
     converging in O(component diameter) rounds. Near-dup components are
     short-diameter (dup groups are near-cliques thanks to LSH banding's
     OR-construction), so this terminates in a handful of rounds; the
@@ -675,12 +672,12 @@ def neardup_clusters(pairs: DataFrame, *, max_iter: int = 25) -> DataFrame:
     least(own, nbr)). Appending one SELF-EDGE (id, id) per node to the
     symmetric edge list makes min-over-CLOSED-neighborhood a single
     join + groupBy — the own label arrives through the self-edge, so
-    the join-back (and its exchange) disappears. The augmented edge
-    relation is hash-partitioned on the neighbor key ONCE and cached;
-    each round then moves only the label relation (shuffle_hash — the
-    cached edges never re-shuffle) plus the map-combined groupBy: 2
-    exchanges/round, of which only the groupBy carries edge-grain rows.
-    Round 1 needs no join at all: labels are the identity, so
+    the join-back disappears. The augmented edge relation is cached, but
+    each round's plan still re-exchanges it on the neighbor key (the
+    cached layout is not visible under AQE with
+    ``canChangeCachedPlanOutputPartitioning=true``): 3 exchanges/round,
+    the cached edges, the labels and the map-combined groupBy (see
+    ``_lp_round``). Round 1 needs no join at all: labels are the identity, so
     min-over-closed-neighborhood of ids == groupBy(min) straight over
     the augmented edges. Per-round labels are IDENTICAL to the old
     formulation (min over the same closed neighborhood), so round
@@ -731,9 +728,7 @@ _SIMHASH_CHUNK_BITS = SIMHASH_BITS // _SIMHASH_CHUNKS
 TOKEN_HASH60_SPARK = "cast(conv(substring(md5(tok), 1, 15), 16, 10) AS bigint)"
 
 
-def simhash_fingerprints(
-    documents: DataFrame, id_col: str = "doc_id", *, spread: bool = True
-) -> DataFrame:
+def simhash_fingerprints(documents: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """60-bit SimHash per document: every distinct token votes +-1 on each
     bit of its 60-bit md5-derived hash; fingerprint bit i is 1 iff the
     vote sum is positive (2*count_of_set_bits > n_tokens).
@@ -746,10 +741,10 @@ def simhash_fingerprints(
     chained bitwiseORs), half interpreted higher-order eval. This form
     is ~1.1s: one parse, whole-stage codegen end-to-end, and the groupBy
     partial aggregates combine map-side so the shuffle moves one row per
-    (doc, 61 longs). ``_spread`` decouples the explode from the scan's
+    (doc, 61 longs). ``spread`` decouples the explode from the scan's
     split count (single-row-group fixture files -> one task otherwise)."""
     ex = (
-        _spread(documents, spread)
+        spread(documents)
         .select(F.col(id_col), F.explode(F.array_distinct(tokens("text"))).alias("tok"))
         .select(F.col(id_col), F.expr(TOKEN_HASH60_SPARK).alias("h"))
     )
@@ -900,16 +895,12 @@ def span_dedup(
     full x2.1 per x4 data) — the steep early curve is per-stage floor
     amortization ending, not a hot stage.
     """
-    toks = tokens(text_col)
-    spans_expr = (
-        f"CASE WHEN size(_toks) >= {window} THEN "
-        f"transform(sequence(1, size(_toks) - {window} + 1), "
-        f"i -> md5(concat_ws(' ', slice(_toks, i, {window})))) "
-        f"ELSE array() END"
-    )
     occs = (
-        documents.select(F.col(id_col), toks.alias("_toks"))
-        .select(F.col(id_col), F.posexplode(F.expr(spans_expr)))
+        documents.select(F.col(id_col), tokens(text_col).alias("_toks"))
+        .select(
+            F.col(id_col),
+            F.posexplode(F.transform(word_ngrams(F.col("_toks"), window), F.md5)),
+        )
         .select(
             F.col(id_col),
             F.col("col").alias("fp"),

@@ -16,9 +16,12 @@ Design rules (100 TB):
 - The edge list is hash-laid-out on the source key ONCE before the loop
   and annotates its out-degree with a window over that same layout (no
   separate degree aggregation or join — r17, guide §2.4); each
-  iteration is then one join (ranks x edges on src) + one groupBy(dst)
-  — the cached edges never move again, only the (tiny) rank relation
-  shuffles. Round 1 is folded into the edge relation: rank_0 is the
+  iteration is then one join (ranks x edges on src) + one groupBy(dst).
+  The cached edges do move again: with AQE on and
+  ``canChangeCachedPlanOutputPartitioning=true`` the cached layout is
+  not visible to the round's plan, so every round re-exchanges them on
+  the source key (2 edge-grain exchanges per round, see
+  ``_rank_round``). Round 1 is folded into the edge relation: rank_0 is the
   constant RANK_SCALE, so the first round's contributions are a pure
   function of the edges and need no join at all.
 - Fixed iteration count, not convergence polling: no collect() in the
@@ -62,9 +65,10 @@ def pagerank(
     edge relation is built with ONE exchange — repartition on the
     source key, then ``count(*) over (partition by src)`` reuses that
     exact layout (the old form paid a groupBy exchange for the degree
-    plus a join and a second repartition to attach it). It is cached in
-    that layout because every round reads it. Parallel edges are
-    counted per-row, same as the old groupBy(src).count().
+    plus a join and a second repartition to attach it). It is cached
+    because every round reads it; the rounds still re-exchange it (see
+    ``_rank_round``). Parallel edges are counted per-row, same as the
+    old groupBy(src).count().
     """
     base = ((damping_den - damping_num) * RANK_SCALE) // damping_den
     ed = _degree_edges(edges, src, dst).persist()
@@ -137,7 +141,13 @@ def _rank_round(
     edges. shuffle-hash, not broadcast: measured ~20% faster here (no
     per-round driver collect/broadcast barrier), and it is the only
     shape that still works when the rank table outgrows the broadcast
-    threshold — ranks shuffle to ed's layout, ed never moves."""
+    threshold. The executed plan of a round (sf0.001, Spark 4.1.2, AQE
+    on, ``canChangeCachedPlanOutputPartitioning=true``) re-exchanges
+    the cached ``ed`` with ``hashpartitioning(e_src)`` over its
+    InMemoryTableScan and exchanges the contributions on ``node`` for
+    the groupBy: 2 edge-grain exchanges per round. The ranks need none
+    when they come from the previous round's groupBy (already
+    partitioned on ``node``)."""
     contrib = ed.join(
         ranks.hint("shuffle_hash"), ed.e_src == ranks.node
     ).select(

@@ -17,8 +17,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hhek2sqlite_spark.operators.dedup import bucket_pairs, rare_shingle_buckets, shingles
-from hhek2sqlite_spark.operators.text import normalized
-from hhek2sqlite_spark.operators.util import spread as _spread
+from hhek2sqlite_spark.operators.text import char_ngrams, let_once, normalized
+from hhek2sqlite_spark.operators.util import spread
 
 # ---------------------------------------------------------------------------
 # Edit-distance (Levenshtein) near-dup
@@ -32,7 +32,6 @@ def edit_distance_pairs(
     n: int = 8,
     max_df: int = 20,
     id_col: str = "doc_id",
-    spread: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs by exact edit distance over the normalized
     text, for the tier where token/shingle overlap is too coarse (small
@@ -49,8 +48,9 @@ def edit_distance_pairs(
 
     ``spread`` decouples the CPU-heavy shingle stage from the scan's
     split count (measured 4.7s -> 2.1s at sf0.1 on the
-    single-row-group fixture); pass False at cluster scale where the
-    input already has >= cores splits. The text-attach sides read the
+    single-row-group fixture; ``SPARK_GRAFT_SPREAD=0`` turns it off at
+    cluster scale, where the input already has >= cores splits). The
+    text-attach sides read the
     UNSPREAD scan (r17, guide §2.3): their rows meet the candidate
     pairs in broadcast joins, so the two extra RoundRobin exchanges
     bought nothing — the levenshtein verify runs at PAIR grain
@@ -59,9 +59,7 @@ def edit_distance_pairs(
     either way.
     """
     cand = bucket_pairs(
-        rare_shingle_buckets(
-            _spread(documents, spread), n=n, max_df=max_df, id_col=id_col
-        )
+        rare_shingle_buckets(spread(documents), n=n, max_df=max_df, id_col=id_col)
     ).distinct()
     norm = documents.select(F.col(id_col), normalized("text").alias("t"))
     ta = norm.select(
@@ -118,6 +116,21 @@ def dataset_split(documents: DataFrame, id_col: str = "doc_id") -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _last_chunk(ln: Column, size: int, overlap: int) -> tuple[Column, Column]:
+    """(index, length) of the last ``size``-char chunk of a text of
+    length ``ln`` at stride ``size - overlap``: every chunk before it is
+    exactly ``size`` chars, so these two fix every chunk's extent. A
+    text no longer than ``size`` (empty included) is one chunk."""
+    stride = size - overlap
+    if stride <= 0:
+        raise ValueError("overlap must be smaller than size")
+    # n_chunks-1 = ceil((ln-size)/stride) via integer-exact floor
+    idx = F.when(ln <= size, F.lit(0).cast("long")).otherwise(
+        F.floor((ln - size + (stride - 1)) / F.lit(stride)).cast("long")
+    )
+    return idx, F.least(F.lit(size).cast("long"), ln - idx * stride)
+
+
 def doc_chunks(
     documents: DataFrame,
     *,
@@ -125,7 +138,6 @@ def doc_chunks(
     overlap: int = 40,
     id_col: str = "doc_id",
     norm_col: str | None = None,
-    with_fp: bool = True,
 ) -> DataFrame:
     """Split each normalized document into ``size``-char windows with
     ``overlap``-char overlap (stride = size - overlap) — the standard
@@ -139,54 +151,13 @@ def doc_chunks(
     pipelines that computed the normal form upstream (corpus curation)
     pass it so the normalization regex is not re-run; references to a
     real column are slot reads, so no let-binding is needed either.
-
-    ``with_fp=False`` drops chunk_fp and derives chunk_len
-    ARITHMETICALLY (least(size, len - i*stride)) — consumers that only
-    need offsets/lengths (sequence packing) then never materialize a
-    single chunk string; Catalyst prunes the fp column either way, but
-    it cannot prune the substr feeding length(chunk)."""
+    Packing needs only the chunk extents: ``pack_doc_chunks`` derives
+    them from the length and never cuts a chunk string."""
     stride = size - overlap
-    if stride <= 0:
-        raise ValueError("overlap must be smaller than size")
-
-    def _last_idx(ln: Column) -> Column:
-        # n_chunks-1 = ceil((ln-size)/stride) via integer-exact floor
-        return F.when(ln <= size, F.lit(0)).otherwise(
-            F.floor((ln - size + (stride - 1)) / F.lit(stride)).cast("long")
-        )
-
-    from hhek2sqlite_spark.operators.text import let_once
-
-    if not with_fp:
-
-        def lens_of(ln: Column) -> Column:
-            # every chunk but the last is exactly `size` chars; the last
-            # is the remainder ln - i*stride — identical to
-            # length(substr(...)) without cutting the string
-            return F.transform(
-                F.sequence(F.lit(0).cast("long"), _last_idx(ln)),
-                lambda i: F.struct(
-                    i.alias("chunk_idx"),
-                    F.least(F.lit(size).cast("long"), ln - i * stride).alias(
-                        "chunk_len"
-                    ),
-                ),
-            )
-
-        lens = (
-            lens_of(F.length(F.col(norm_col)).cast("long"))
-            if norm_col is not None
-            else let_once(F.length(normalized("text")).cast("long"), lens_of)
-        )
-        return documents.select(F.col(id_col), F.explode(lens).alias("c")).select(
-            id_col,
-            F.col("c.chunk_idx").alias("chunk_idx"),
-            F.col("c.chunk_len").cast("long").alias("chunk_len"),
-        )
 
     def chunks_of(t: Column) -> Column:
         return F.transform(
-            F.sequence(F.lit(0).cast("long"), _last_idx(F.length(t))),
+            F.sequence(F.lit(0).cast("long"), _last_chunk(F.length(t), size, overlap)[0]),
             lambda i: F.struct(
                 i.alias("chunk_idx"),
                 t.substr((i * stride + 1).cast("int"), F.lit(size)).alias("chunk"),
@@ -402,21 +373,11 @@ def pack_doc_chunks(
     sort-bound. Adopted anyway for the scale shape: window sort state is
     per-document (~size/stride x fewer rows than per-chunk), which is
     what survives when shards carry billions of chunks."""
-    stride = size - overlap
-    if stride <= 0:
-        raise ValueError("overlap must be smaller than size")
     from pyspark.sql.window import Window
 
-    ln = F.length(norm_col).cast("long")
-    last = F.when(ln <= size, F.lit(0).cast("long")).otherwise(
-        F.floor((ln - size + (stride - 1)) / F.lit(stride)).cast("long")
-    )
+    last, last_len = _last_chunk(F.length(norm_col).cast("long"), size, overlap)
     d = (
-        documents.select(F.col(id_col), last.alias("_last"), ln.alias("_ln"))
-        .withColumn(
-            "_lastlen",
-            F.least(F.lit(size).cast("long"), F.col("_ln") - F.col("_last") * stride),
-        )
+        documents.select(F.col(id_col), last.alias("_last"), last_len.alias("_lastlen"))
         .withColumn("_total", F.col("_last") * size + F.col("_lastlen"))
         .withColumn("shard", F.col(id_col) % n_shards)
     )
@@ -467,17 +428,11 @@ def repetition_profile(
     c = F.col(id_col)
 
     def counts_of(norm: Column) -> Column:
-        grams = F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(norm) - (n - 1), F.lit(0))),
-            lambda i: norm.substr(i, F.lit(n)),
-        )
-        valid = F.filter(grams, lambda g: F.length(g) == n)
+        grams = char_ngrams(norm, n)
         return F.struct(
-            F.size(valid).alias("t"),
-            F.size(F.array_distinct(valid)).alias("d"),
+            F.size(grams).alias("t"),
+            F.size(F.array_distinct(grams)).alias("d"),
         )
-
-    from hhek2sqlite_spark.operators.text import let_once
 
     staged = documents.select(
         c, let_once(normalized("text"), counts_of).alias("_c")
@@ -501,6 +456,52 @@ def repetition_profile(
 # ---------------------------------------------------------------------------
 # Deterministic stratified sampling
 # ---------------------------------------------------------------------------
+
+
+def _hash_prefilter(
+    staged: DataFrame,
+    stratum_col: str,
+    counts: dict,
+    targets: dict,
+    oversample: float,
+    id_col: str,
+) -> DataFrame:
+    """The two-pass samplers' survivor prefilter over ``staged`` (id,
+    stratum, sample_key): keep the rows whose 60-bit key prefix falls
+    under a per-stratum threshold ~ oversample*target/count of the key
+    space, recount the survivors, and give any under-filled stratum
+    (survivors < min(target, count)) its full row set back. The
+    ``target`` smallest keys of a stratum therefore always survive, so
+    ranking the survivors keeps exactly what ranking ``staged`` keeps."""
+    import math
+
+    key_space = 1 << 60  # first 15 hex chars -> non-negative long
+    key60 = F.conv(F.substring("sample_key", 1, 15), 16, 10).cast("long")
+    thr_rows = [
+        (
+            s,
+            key_space
+            if oversample * targets[s] >= n
+            else math.ceil(key_space * oversample * targets[s] / n),
+        )
+        for s, n in counts.items()
+    ]
+    thr = F.broadcast(
+        staged.sparkSession.createDataFrame(thr_rows, f"{stratum_col} string, _thr long")
+    )
+    survivors = staged.join(thr, stratum_col).filter(key60 < F.col("_thr")).drop("_thr")
+    kept = {
+        r[0]: r[1]
+        for r in survivors.groupBy(stratum_col).agg(F.count(F.lit(1))).collect()
+    }
+    under = [s for s, n in counts.items() if kept.get(s, 0) < min(targets[s], n)]
+    if under:  # exactness guard: rank the full stratum instead
+        survivors = survivors.filter(~F.col(stratum_col).isin(under)).unionByName(
+            staged.filter(F.col(stratum_col).isin(under))
+        )
+    # the equi-join reordered columns (join key first) — restore the
+    # staged projection order so both forms are column-identical
+    return survivors.select(id_col, stratum_col, "sample_key")
 
 
 def stratified_sample(
@@ -545,44 +546,12 @@ def stratified_sample(
         F.md5(normalized("text")).alias("sample_key"),
     )
     if two_pass:
-        import math
-
-        key_bits = 60  # first 15 hex chars -> non-negative long
-        key60 = F.conv(F.substring("sample_key", 1, 15), 16, 10).cast("long")
         counts = {
             r[0]: r[1]
             for r in staged.groupBy(stratum_col).agg(F.count(F.lit(1))).collect()
         }
-        spark = documents.sparkSession
-        thr_rows = [
-            (
-                s,
-                (1 << key_bits)
-                if oversample * n_per_stratum >= n
-                else math.ceil((1 << key_bits) * oversample * n_per_stratum / n),
-            )
-            for s, n in counts.items()
-        ]
-        thr = F.broadcast(
-            spark.createDataFrame(thr_rows, f"{stratum_col} string, _thr long")
-        )
-        survivors = (
-            staged.join(thr, stratum_col).filter(key60 < F.col("_thr")).drop("_thr")
-        )
-        kept = {
-            r[0]: r[1]
-            for r in survivors.groupBy(stratum_col).agg(F.count(F.lit(1))).collect()
-        }
-        under = [
-            s for s, n in counts.items() if kept.get(s, 0) < min(n_per_stratum, n)
-        ]
-        if under:  # exactness guard: rank the full stratum instead
-            survivors = survivors.filter(~F.col(stratum_col).isin(under)).unionByName(
-                staged.filter(F.col(stratum_col).isin(under))
-            )
-        # the equi-join reordered columns (join key first) — restore the
-        # one-pass projection order so both forms are column-identical
-        staged = survivors.select(id_col, stratum_col, "sample_key")
+        targets = dict.fromkeys(counts, n_per_stratum)
+        staged = _hash_prefilter(staged, stratum_col, counts, targets, oversample, id_col)
     w = Window.partitionBy(stratum_col).orderBy(
         F.col("sample_key").asc(), F.col(id_col).asc()
     )
@@ -630,7 +599,6 @@ def contamination_pairs(
     n: int = 8,
     min_shared: int = 5,
     id_col: str = "doc_id",
-    spread: bool = True,
 ) -> DataFrame:
     """Corpus documents sharing >= min_shared distinct character
     n-grams with any document of the eval set (here: id < eval_max_id
@@ -650,9 +618,7 @@ def contamination_pairs(
     ev = shingles(
         documents.filter(F.col(id_col) < eval_max_id), n, id_col
     ).select(F.col(id_col).alias("eval_id"), "shingle")
-    corpus = shingles(
-        _spread(documents.filter(F.col(id_col) >= eval_max_id), spread), n, id_col
-    )
+    corpus = shingles(spread(documents.filter(F.col(id_col) >= eval_max_id)), n, id_col)
     return (
         corpus.join(F.broadcast(ev), "shingle")
         .groupBy(id_col, "eval_id")
@@ -712,37 +678,7 @@ def temperature_sample(
         lang: min(f, math.ceil(math.sqrt(boost * f))) for lang, f in counts.items()
     }
     if two_pass:
-        key_bits = 60
-        key60 = F.conv(F.substring("sample_key", 1, 15), 16, 10).cast("long")
-        thr_rows = [
-            (
-                lang,
-                (1 << key_bits)
-                if oversample * targets[lang] >= f
-                else math.ceil((1 << key_bits) * oversample * targets[lang] / f),
-            )
-            for lang, f in counts.items()
-        ]
-        thr = F.broadcast(
-            spark.createDataFrame(thr_rows, f"{lang_col} string, _thr long")
-        )
-        survivors = (
-            staged.join(thr, lang_col).filter(key60 < F.col("_thr")).drop("_thr")
-        )
-        kept = {
-            r[0]: r[1]
-            for r in survivors.groupBy(lang_col).agg(F.count(F.lit(1))).collect()
-        }
-        under = [
-            lang
-            for lang, f in counts.items()
-            if kept.get(lang, 0) < min(targets[lang], f)
-        ]
-        if under:
-            survivors = survivors.filter(
-                ~F.col(lang_col).isin(under)
-            ).unionByName(staged.filter(F.col(lang_col).isin(under)))
-        staged = survivors.select(id_col, lang_col, "sample_key")
+        staged = _hash_prefilter(staged, lang_col, counts, targets, oversample, id_col)
     tgt = F.broadcast(
         spark.createDataFrame(
             list(targets.items()), f"{lang_col} string, _n_keep long"

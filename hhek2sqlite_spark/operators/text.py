@@ -42,6 +42,42 @@ def token_count(text: Column | str) -> Column:
     return F.size(tokens(text))
 
 
+def word_ngrams(toks: Column, n: int) -> Column:
+    """The space-joined word ``n``-grams of a token array, in position
+    order: one per start position, so ``posexplode`` positions are the
+    1-based start minus one. Empty below ``n`` tokens, NULL on a NULL
+    array. The slice length is clamped at 0, so any array size is safe
+    (a negative ``slice`` length raises). ``toks`` is referenced inside
+    the lambda: pass a column or a lambda variable, not a computed
+    expression (see ``let_once``)."""
+    return F.transform(
+        F.slice(toks, 1, F.greatest(F.size(toks) - (n - 1), F.lit(0))),
+        lambda _, i: F.array_join(F.slice(toks, i + 1, n), " "),
+    )
+
+
+def char_ngrams(norm: Column, n: int) -> Column:
+    """The ``n``-character substrings of a string, one per start
+    position (duplicates kept). Spark's ``sequence(1, 0)`` counts down,
+    so below ``n`` characters the positions yield short substrings that
+    the length filter drops: the result is empty then, and on NULL."""
+    grams = F.transform(
+        F.sequence(F.lit(1), F.greatest(F.length(norm) - (n - 1), F.lit(0))),
+        lambda i: norm.substr(i, F.lit(n)),
+    )
+    return F.filter(grams, lambda g: F.length(g) == n)
+
+
+def ratio_e6(num: Column | str, den: Column | str) -> Column:
+    """``round(1e6 * num / den)`` as BIGINT — the exact integer-ratio
+    encoding of the ranked and fractional outputs: for integer operands
+    the product is an exact integer < 2^53 and the one division is IEEE
+    correctly rounded, so the value is bit-identical in any engine."""
+    num = F.col(num) if isinstance(num, str) else num
+    den = F.col(den) if isinstance(den, str) else den
+    return F.round(F.lit(1000000.0) * num / den).cast("long")
+
+
 PUNCT_CHARS = ".,;:!?'\"()[]{}-"
 
 
@@ -368,9 +404,7 @@ def tfidf_topk(
         "token",
         "tf",
         "df",
-        F.round(F.lit(1000000.0) * F.col("tf") / F.col("df"))
-        .cast("long")
-        .alias("score_e6"),
+        ratio_e6("tf", "df").alias("score_e6"),
     )
     w = Window.partitionBy(id_col).orderBy(
         F.col("score_e6").desc(), F.col("token").asc()
@@ -453,23 +487,14 @@ def ngram_lm_counts(
     partial aggregation collapses them before the wire. ``min_count``
     drops the singleton tail that dominates the raw table (Zipf) and is
     useless for smoothing anyway. Returns (n, gram, cnt)."""
-    toks = tokens("text")
-
     def grams_for(arr: Column, n: int) -> Column:
-        cnt = F.size(arr) - (n - 1)
-        g = F.transform(
-            # guard: Spark's sequence(1, stop) runs DESCENDING for
-            # stop < 1, so clamp and swap in a typed empty array below
-            F.sequence(F.lit(1), F.greatest(cnt, F.lit(1))),
-            lambda i: F.struct(
-                F.lit(n).cast("int").alias("n"),
-                F.array_join(F.slice(arr, i, n), " ").alias("gram"),
-            ),
+        return F.transform(
+            word_ngrams(arr, n),
+            lambda g: F.struct(F.lit(n).cast("int").alias("n"), g.alias("gram")),
         )
-        return F.when(cnt >= 1, g).otherwise(F.slice(g, 1, 0))
 
     all_grams = let_once(
-        toks,
+        tokens("text"),
         lambda arr: F.flatten(F.array(*[grams_for(arr, k) for k in range(1, n_max + 1)])),
     )
     return (
@@ -522,20 +547,8 @@ def bigram_repetition(
     exchange — the window form shuffled and SORTED the whole
     (doc, bigram) count grain twice (sum-over-partition + row_number)
     to keep one row per doc."""
-    toks = tokens("text")
-    base = documents.select(F.col(id_col), toks.alias("toks")).filter(
-        F.size("toks") >= 2
-    )
-    bigrams = base.select(
-        id_col,
-        F.explode(
-            F.transform(
-                F.slice("toks", 1, F.size("toks") - 1),
-                lambda x, i: F.concat_ws(
-                    " ", x, F.element_at(F.col("toks"), i + F.lit(2))
-                ),
-            )
-        ).alias("bigram"),
+    bigrams = documents.select(F.col(id_col), tokens("text").alias("toks")).select(
+        id_col, F.explode(word_ngrams(F.col("toks"), 2)).alias("bigram")
     )
     counts = bigrams.groupBy(id_col, "bigram").agg(
         F.count(F.lit(1)).alias("cnt")
@@ -553,11 +566,7 @@ def bigram_repetition(
         "n_bigrams",
         F.col("top.bigram").alias("top_bigram"),
         (-F.col("top.neg_cnt")).cast("int").alias("top_count"),
-        F.round(
-            F.lit(1000000.0) * (-F.col("top.neg_cnt")) / F.col("n_bigrams")
-        )
-        .cast("long")
-        .alias("rep_frac_e6"),
+        ratio_e6(-F.col("top.neg_cnt"), "n_bigrams").alias("rep_frac_e6"),
     )
 
 
@@ -583,28 +592,9 @@ def boilerplate_shingles(
     hot template shingles, and the join-back is AQE-skew-splittable —
     the same skew argument written out at tfidf_topk. The final
     rollup keys on the document."""
-    toks = tokens("text")
-    base = documents.select(F.col(id_col), toks.alias("toks")).filter(
-        F.size("toks") >= shingle_n
-    )
     grams = (
-        base.select(
-            id_col,
-            F.explode(
-                F.transform(
-                    F.slice("toks", 1, F.size("toks") - (shingle_n - 1)),
-                    lambda x, i: F.concat_ws(
-                        " ",
-                        F.array(
-                            *[
-                                F.element_at(F.col("toks"), i + F.lit(k + 1))
-                                for k in range(shingle_n)
-                            ]
-                        ),
-                    ),
-                )
-            ).alias("shingle"),
-        )
+        documents.select(F.col(id_col), tokens("text").alias("toks"))
+        .select(id_col, F.explode(word_ngrams(F.col("toks"), shingle_n)).alias("shingle"))
         .distinct()
         # shared by the df aggregate AND the join probe: checkpoint so
         # the scan+shingle+distinct subtree runs ONCE (the same
@@ -628,11 +618,7 @@ def boilerplate_shingles(
             id_col,
             "n_shingles",
             "n_boilerplate",
-            F.round(
-                F.lit(1000000.0) * F.col("n_boilerplate") / F.col("n_shingles")
-            )
-            .cast("long")
-            .alias("bp_frac_e6"),
+            ratio_e6("n_boilerplate", "n_shingles").alias("bp_frac_e6"),
         )
     )
 
@@ -758,11 +744,7 @@ def dice_collocations(
             F.col("c_bg").cast("int").alias("c_bg"),
             F.col("c1").cast("int").alias("c1"),
             F.col("c2").cast("int").alias("c2"),
-            F.round(
-                F.lit(1000000.0) * 2 * F.col("c_bg") / (F.col("c1") + F.col("c2"))
-            )
-            .cast("long")
-            .alias("dice_e6"),
+            ratio_e6(2 * F.col("c_bg"), F.col("c1") + F.col("c2")).alias("dice_e6"),
         )
         .orderBy(F.col("dice_e6").desc(), F.col("bigram").asc())
         .limit(k)
@@ -785,27 +767,11 @@ def ngram_novelty(
     corpus-first table is a map-side-combined min over the gram key;
     the join-back is AQE-skew-splittable (same argument as
     boilerplate_shingles); final rollup keys on the document."""
-    toks = tokens("text")
-    base = documents.select(F.col(id_col), toks.alias("toks")).filter(
-        F.size("toks") >= n
+    grams = (
+        documents.select(F.col(id_col), tokens("text").alias("toks"))
+        .select(id_col, F.explode(word_ngrams(F.col("toks"), n)).alias("g"))
+        .distinct()
     )
-    grams = base.select(
-        id_col,
-        F.explode(
-            F.transform(
-                F.slice("toks", 1, F.size("toks") - (n - 1)),
-                lambda x, i: F.concat_ws(
-                    " ",
-                    F.array(
-                        *[
-                            F.element_at(F.col("toks"), i + F.lit(j + 1))
-                            for j in range(n)
-                        ]
-                    ),
-                ),
-            )
-        ).alias("g"),
-    ).distinct()
     firsts = grams.groupBy("g").agg(F.min(id_col).alias("first_doc"))
     return (
         grams.join(firsts, "g")
@@ -820,9 +786,7 @@ def ngram_novelty(
             id_col,
             "n_grams",
             "n_novel",
-            F.round(F.lit(1000000.0) * F.col("n_novel") / F.col("n_grams"))
-            .cast("long")
-            .alias("novelty_e6"),
+            ratio_e6("n_novel", "n_grams").alias("novelty_e6"),
         )
     )
 
@@ -870,13 +834,9 @@ def source_vocab_overlap(documents: DataFrame) -> DataFrame:
         "source_a",
         "source_b",
         F.col("inter").cast("int").alias("inter"),
-        F.round(
-            F.lit(1000000.0)
-            * F.col("inter")
-            / (F.col("va") + F.col("vb") - F.col("inter"))
-        )
-        .cast("long")
-        .alias("jaccard_e6"),
+        ratio_e6("inter", F.col("va") + F.col("vb") - F.col("inter")).alias(
+            "jaccard_e6"
+        ),
     )
 
 

@@ -21,18 +21,17 @@ from pyspark.sql import functions as F
 from ..session import SESSION_MEMO, plan_leaves
 
 
-def spread(df: DataFrame, enabled: bool = True) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """One cheap round-robin shuffle of the raw rows so CPU-heavy map
     stages are not glued to the scan's split count (a single-row-group
-    parquet file scans as ONE task no matter how many cores exist). At
-    cluster scale the input already has >= cores splits — pass
-    enabled=False and this is a no-op. ``SPARK_GRAFT_SPREAD=0`` disables
-    it globally: the multi-row-group fixture run sets it because that
-    layout IS the >=cores-splits case, and paying the extra shuffle
-    there would mis-measure the cluster-layout plans."""
+    parquet file scans as ONE task no matter how many cores exist).
+    ``SPARK_GRAFT_SPREAD=0`` makes it a no-op: at cluster scale, and in
+    the multi-row-group fixture run, the input already has >= cores
+    splits, and paying the extra shuffle there would mis-measure the
+    cluster-layout plans."""
     import os
 
-    if not enabled or os.environ.get("SPARK_GRAFT_SPREAD", "1") == "0":
+    if os.environ.get("SPARK_GRAFT_SPREAD", "1") == "0":
         return df
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 

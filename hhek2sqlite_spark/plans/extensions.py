@@ -2488,16 +2488,18 @@ _PACK_SHARDS = 16
 
 
 def q_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # packing reads only (id, idx, len) — with_fp=False derives lengths
-    # arithmetically, so no chunk string is ever cut
-    chunks = pipeline.doc_chunks(
-        spread(load_table(spark, sf_dir, "documents")),
+    # the fused pack, row-identical to pack_chunks(doc_chunks(...)) (the
+    # oracle's composed form): chunk extents come from the normalized
+    # length, so no chunk string is ever cut
+    from hhek2sqlite_spark.operators.text import normalized
+
+    docs = spread(load_table(spark, sf_dir, "documents"))
+    return pipeline.pack_doc_chunks(
+        docs.select("doc_id", normalized("text").alias("_norm")),
         size=_CHUNK_SIZE,
         overlap=_CHUNK_OVERLAP,
-        with_fp=False,
-    )
-    return pipeline.pack_chunks(
-        chunks, budget=_PACK_BUDGET, n_shards=_PACK_SHARDS
+        budget=_PACK_BUDGET,
+        n_shards=_PACK_SHARDS,
     )
 
 

@@ -44,13 +44,18 @@ ALLOWLIST: dict[tuple[str, str, str], tuple[int, str]] = {
         "O(1): one scalar label-sum per propagation round (monotone "
         "convergence check), never label rows",
     ),
+    ("operators/pipeline.py", "_hash_prefilter", "collect"): (
+        1,
+        "O(#strata): the two-pass samplers' per-stratum survivor recount; "
+        "strata are a categorical dimension, not data rows",
+    ),
     ("operators/pipeline.py", "stratified_sample", "collect"): (
-        2,
+        1,
         "O(#strata): per-stratum counts for exact rate planning; strata "
         "are a categorical dimension, not data rows",
     ),
     ("operators/pipeline.py", "temperature_sample", "collect"): (
-        2,
+        1,
         "O(#languages): per-language counts for the temperature weights",
     ),
     ("operators/similarity.py", "train_ivf_centroids._means", "collect"): (

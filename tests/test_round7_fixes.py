@@ -403,9 +403,7 @@ def test_pack_doc_chunks_equals_composed_operators(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, _norm string")
     composed = pipeline.pack_chunks(
-        pipeline.doc_chunks(
-            docs, size=200, overlap=40, norm_col="_norm", with_fp=False
-        ),
+        pipeline.doc_chunks(docs, size=200, overlap=40, norm_col="_norm"),
         budget=2000,
         n_shards=4,
     )

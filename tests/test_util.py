@@ -68,4 +68,3 @@ def test_spread_env_disable(spark, monkeypatch):
     assert spread(df) is df
     monkeypatch.setenv("SPARK_GRAFT_SPREAD", "1")
     assert spread(df) is not df
-    assert spread(df, enabled=False) is df
