@@ -2,15 +2,22 @@
 columns with typed metadata, processed by Arrow-batched Pandas
 iterators (``mapInPandas``).
 
-Decode tiers (round 6): REAL stdlib codecs for BMP 24-bit, PPM P6, PNG
-8-bit RGB (zlib, all five scanline filters) and 16-bit PCM WAV — see
-the codec section below and the oracle-paired image_pixel_stats /
-audio_sample_stats queries. Formats that genuinely need external
-libraries (JPEG, MP3, video containers) keep the honest contract:
-``decoder='stub'`` raises NotImplementedError at evaluation time,
-``decoder='fake'`` runs a deterministic byte-level feature extractor
-through the exact same Spark plumbing — schema, partitioning, Arrow
-batch shape all real; only that codec is fake.
+Decode tiers: REAL stdlib codecs for BMP 24-bit, PPM P6, PNG 8-bit RGB
+(zlib, all five scanline filters), 16-bit PCM WAV and uncompressed AVI
+— see the codec sections below and the oracle-paired image_pixel_stats
+/ audio_sample_stats / video_frame_stats queries. Formats that
+genuinely need external libraries (JPEG, MP3, compressed video) keep
+the honest contract: ``decoder='stub'`` raises NotImplementedError at
+evaluation time, ``decoder='fake'`` runs a deterministic byte-level
+feature extractor through the exact same Spark plumbing — schema,
+partitioning, Arrow batch shape all real; only that codec is fake.
+
+Every Python stage is one ``_map_rows`` call (one output-row generator
+per input row) and every ``decoder=`` argument goes through
+``_decode_with``. The encoders and decoders of each container are kept
+apart on purpose: they share code only among themselves (``_dib_pack``
+for the encoders, ``_dib_unpack`` / ``_dib_stride`` for the decoders),
+so an encoder bug and a decoder bug cannot cancel out.
 
 Scale notes: binary payloads ride in the same parquet row groups as
 their metadata (no small-file problem, no side channel); mapInPandas
@@ -22,6 +29,8 @@ pushdown still happen on the scan.
 
 from __future__ import annotations
 
+import struct
+import zlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -57,6 +66,46 @@ def binary_metadata(documents: DataFrame) -> DataFrame:
     return with_binary_payload(documents).select("doc_id", "byte_len", "content_sha256")
 
 
+def _map_rows(
+    frame: DataFrame, schema: StructType, per_row, cols=("doc_id", "payload")
+) -> DataFrame:
+    """The Arrow kernel of every Python stage here: ``mapInPandas`` over
+    ``frame``'s ``cols``, calling ``per_row(*values)`` for each row of
+    each pandas batch. ``per_row`` yields output tuples in ``schema``'s
+    field order (none, one or many per input row); each batch's tuples
+    become one pandas frame."""
+    names = schema.fieldNames()
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                out for args in zip(*(pdf[c] for c in cols)) for out in per_row(*args)
+            ]
+            yield pd.DataFrame(rows, columns=names)
+
+    return frame.select(*cols).mapInPandas(run, schema)
+
+
+def _decode_with(
+    multimodal: DataFrame, schema: StructType, decoder: str, arms: dict, stub: str
+) -> DataFrame:
+    """The ``decoder=`` switch: ``arms`` maps each decoder name to its
+    ``_map_rows`` row function. ``'stub'`` raises NotImplementedError
+    with the ``stub`` message when the plan is evaluated (on every
+    partition, an empty one too); any other name outside ``arms`` raises
+    ValueError at call time."""
+    if decoder == "stub":
+
+        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            raise NotImplementedError(stub)
+            yield  # pragma: no cover
+
+        return multimodal.select("doc_id", "payload").mapInPandas(run, schema)
+    if decoder not in arms:
+        raise ValueError(f"unknown decoder {decoder!r}")
+    return _map_rows(multimodal, schema, arms[decoder])
+
+
 # features ride as DOUBLE, not FLOAT: f0 carries n_bytes, and float32 is
 # only integer-exact to 2^24 — a >16 MiB payload would round while the
 # DuckDB oracle stays exact. double is integer-exact to 2^53.
@@ -69,36 +118,25 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def _fake_decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+def _fake_decode_row(doc_id, b):
     """Deterministic byte-level 'decoder': 8 features derived from the
     payload (length, first/last bytes, simple moments). Stands in for a
     real image/audio decode with the same batch shape."""
-    feats = []
-    for b in pdf["payload"]:
-        data = bytes(b or b"")
-        n = len(data)
-        head = data[0] if n else 0
-        tail = data[-1] if n else 0
-        s = sum(data[:256])
-        feats.append(
-            [
-                float(n),
-                float(head),
-                float(tail),
-                float(s % 997),
-                float(n % 256),
-                float((head + tail) % 256),
-                float(s % 256),
-                float(min(n, 255)),
-            ]
-        )
-    return pd.DataFrame(
-        {
-            "doc_id": pdf["doc_id"],
-            "n_bytes": [len(bytes(b or b"")) for b in pdf["payload"]],
-            "features": feats,
-        }
-    )
+    data = bytes(b or b"")
+    n = len(data)
+    head = data[0] if n else 0
+    tail = data[-1] if n else 0
+    s = sum(data[:256])
+    yield doc_id, n, [
+        float(n),
+        float(head),
+        float(tail),
+        float(s % 997),
+        float(n % 256),
+        float((head + tail) % 256),
+        float(s % 256),
+        float(min(n, 255)),
+    ]
 
 
 def decode_features(multimodal: DataFrame, *, decoder: str = "stub") -> DataFrame:
@@ -108,26 +146,14 @@ def decode_features(multimodal: DataFrame, *, decoder: str = "stub") -> DataFram
                        in this container; plug pillow/librosa here).
     decoder='fake'  -> deterministic byte-level features, same plumbing.
     """
-
-    if decoder == "stub":
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            raise NotImplementedError(
-                "media decode requires image/audio libraries not present in "
-                "this container; use decoder='fake' for the plumbing path"
-            )
-            yield  # pragma: no cover
-
-    elif decoder == "fake":
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                yield _fake_decode_batch(pdf)
-
-    else:
-        raise ValueError(f"unknown decoder {decoder!r}")
-
-    return multimodal.select("doc_id", "payload").mapInPandas(run, FEATURE_SCHEMA)
+    return _decode_with(
+        multimodal,
+        FEATURE_SCHEMA,
+        decoder,
+        {"fake": _fake_decode_row},
+        "media decode requires image/audio libraries not present in "
+        "this container; use decoder='fake' for the plumbing path",
+    )
 
 
 RESIZE_SCHEMA = StructType(
@@ -148,44 +174,27 @@ def resize_images(
     container — plug Image.open(...).resize((w,h)) there); 'fake'
     nearest-neighbor-samples the raw payload bytes to w*h
     deterministically, exercising the identical batch shape."""
+    n_out = width * height
 
-    if decoder == "stub":
+    def fake(doc_id, b):
+        data = bytes(b or b"")
+        if not data:
+            yield doc_id, width, height, bytes(n_out)
+            return
+        # nearest-neighbor byte sampling = a real resize's access
+        # pattern without a codec
+        step = len(data) / n_out
+        yield doc_id, width, height, bytes(
+            data[int(i * step) % len(data)] for i in range(n_out)
+        )
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            raise NotImplementedError(
-                "image decode requires pillow; use decoder='fake' for the "
-                "plumbing path"
-            )
-            yield  # pragma: no cover
-
-    elif decoder == "fake":
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            n_out = width * height
-            for pdf in batches:
-                out = []
-                for b in pdf["payload"]:
-                    data = bytes(b or b"")
-                    if not data:
-                        out.append(bytes(n_out))
-                        continue
-                    # nearest-neighbor byte sampling = a real resize's
-                    # access pattern without a codec
-                    step = len(data) / n_out
-                    out.append(bytes(data[int(i * step) % len(data)] for i in range(n_out)))
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "width": width,
-                        "height": height,
-                        "pixels": out,
-                    }
-                )
-
-    else:
-        raise ValueError(f"unknown decoder {decoder!r}")
-
-    return multimodal.select("doc_id", "payload").mapInPandas(run, RESIZE_SCHEMA)
+    return _decode_with(
+        multimodal,
+        RESIZE_SCHEMA,
+        decoder,
+        {"fake": fake},
+        "image decode requires pillow; use decoder='fake' for the plumbing path",
+    )
 
 
 FRAME_SCHEMA = StructType(
@@ -207,84 +216,82 @@ def sample_frames(
     """Frame-sampling plumbing: one-to-MANY mapInPandas fan-out (each
     payload yields every_nth-th 'frame').
 
-    decoder='avi' (round 7) demuxes REAL uncompressed-AVI container
-    bytes via the independent RIFF walker (avi_decode below) — each
-    emitted frame is the raw '00db' DIB chunk. decoder='fake' remains
-    the fixed-width splitter for payloads that are NOT real containers;
-    'stub' raises honestly for formats needing absent codec libraries
-    (compressed video: av/ffmpeg)."""
+    decoder='avi' demuxes REAL uncompressed-AVI container bytes via the
+    independent RIFF walker (avi_decode below) — each emitted frame is
+    the raw '00db' DIB chunk. decoder='fake' is the fixed-width splitter
+    for payloads that are NOT real containers; 'stub' raises honestly
+    for formats needing absent codec libraries (compressed video:
+    av/ffmpeg)."""
 
-    if decoder == "stub":
+    def avi(doc_id, b):
+        # skip NULL / non-AVI / corrupt payloads instead of killing the
+        # job: the shared multimodal source mixes image/audio/video
+        # blobs and a real crawl stores truncated files; a demuxer that
+        # crashes the whole query on the first bad row is useless at
+        # corpus scale. The walker itself is bounds-clamped, so
+        # ValueError (magic) is the only expected escape — but catch
+        # struct.error too for defense in depth.
+        try:
+            chunks = _avi_frame_chunks(bytes(b or b""))
+        except (ValueError, struct.error):
+            return
+        for k in range(0, len(chunks), every_nth):
+            yield doc_id, k, chunks[k]
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            raise NotImplementedError(
-                "compressed-video demux requires av/ffmpeg; use "
-                "decoder='avi' for real uncompressed AVI payloads or "
-                "decoder='fake' for the plumbing path"
-            )
-            yield  # pragma: no cover
+    def fake(doc_id, b):
+        data = bytes(b or b"")
+        for k in range(0, len(data) // frame_bytes, every_nth):
+            yield doc_id, k, data[k * frame_bytes : (k + 1) * frame_bytes]
 
-    elif decoder == "avi":
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                ids, idxs, frames = [], [], []
-                for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                    data = bytes(b or b"")
-                    # skip NULL / non-AVI / corrupt payloads instead of
-                    # killing the job: the shared multimodal source
-                    # mixes image/audio/video blobs and a real crawl
-                    # stores truncated files; a demuxer that crashes
-                    # the whole query on the first bad row is useless
-                    # at corpus scale (review findings). The walker
-                    # itself is bounds-clamped, so ValueError (magic)
-                    # is the only expected escape — but catch
-                    # struct.error too for defense in depth.
-                    try:
-                        chunks = _avi_frame_chunks(data)
-                    except (ValueError, struct.error):
-                        continue
-                    for k in range(0, len(chunks), every_nth):
-                        ids.append(doc_id)
-                        idxs.append(k)
-                        frames.append(chunks[k])
-                yield pd.DataFrame(
-                    {"doc_id": ids, "frame_idx": idxs, "frame": frames}
-                )
-
-    elif decoder == "fake":
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                ids, idxs, frames = [], [], []
-                for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                    data = bytes(b or b"")
-                    n_frames = len(data) // frame_bytes
-                    for k in range(0, n_frames, every_nth):
-                        ids.append(doc_id)
-                        idxs.append(k)
-                        frames.append(data[k * frame_bytes : (k + 1) * frame_bytes])
-                yield pd.DataFrame(
-                    {"doc_id": ids, "frame_idx": idxs, "frame": frames}
-                )
-
-    else:
-        raise ValueError(f"unknown decoder {decoder!r}")
-
-    return multimodal.select("doc_id", "payload").mapInPandas(run, FRAME_SCHEMA)
+    return _decode_with(
+        multimodal,
+        FRAME_SCHEMA,
+        decoder,
+        {"avi": avi, "fake": fake},
+        "compressed-video demux requires av/ffmpeg; use decoder='avi' for "
+        "real uncompressed AVI payloads or decoder='fake' for the plumbing path",
+    )
 
 
 # ---------------------------------------------------------------------------
-# REAL stdlib codecs (round 6): BMP 24-bit, PPM P6, and PNG 8-bit RGB with
-# all five scanline filters via zlib. No third-party library — struct +
-# zlib only — so the decode path is genuinely exercising container
-# parsing (header fields, stride padding, bottom-up row order, filter
-# reconstruction), not a fake. Formats outside these three still raise
-# through decoder='stub'.
+# REAL stdlib codecs: BMP 24-bit, PPM P6, and PNG 8-bit RGB with all five
+# scanline filters via zlib. No third-party library — struct + zlib only —
+# so the decode path is genuinely exercising container parsing (header
+# fields, stride padding, bottom-up row order, filter reconstruction),
+# not a fake. Formats outside these three still raise through
+# decoder='stub'.
 # ---------------------------------------------------------------------------
 
-import struct
-import zlib
+
+def _dib_pack(rows: list[list[tuple[int, int, int]]]) -> bytes:
+    """Encoder half of the DIB row layout that BMP files and AVI frames
+    share: ``rows[y][x] = (b, g, r)`` with y=0 the TOP row, stored
+    bottom-up, each line zero-padded to a multiple of 4 bytes."""
+    body = bytearray()
+    for row in reversed(rows):  # bottom-up
+        line = bytearray()
+        for b, g, r in row:
+            line += bytes((b, g, r))
+        body += line + bytes(-len(line) % 4)
+    return bytes(body)
+
+
+def _dib_stride(w: int) -> int:
+    """Bytes per stored DIB line of ``w`` 24-bit pixels (decoder side)."""
+    return (w * 3 + 3) & ~3
+
+
+def _dib_unpack(
+    buf: bytes, off: int, w: int, h: int, bottom_up: bool = True
+) -> list[list[tuple[int, int, int]]]:
+    """Decoder half of the DIB row layout: ``h`` stored lines of ``w``
+    (b, g, r) pixels at ``buf[off:]`` back to top-down rows."""
+    stride = _dib_stride(w)
+    rows = []
+    for yy in range(h):
+        base = off + ((h - 1 - yy) if bottom_up else yy) * stride
+        rows.append([tuple(buf[base + 3 * x : base + 3 * x + 3]) for x in range(w)])
+    return rows
 
 
 def bmp_encode(rows: list[list[tuple[int, int, int]]]) -> bytes:
@@ -293,19 +300,12 @@ def bmp_encode(rows: list[list[tuple[int, int, int]]]) -> bytes:
     padding — exactly the two details a sloppy decoder gets wrong."""
     h = len(rows)
     w = len(rows[0]) if h else 0
-    stride = (w * 3 + 3) & ~3
-    body = bytearray()
-    for y in range(h - 1, -1, -1):  # bottom-up
-        line = bytearray()
-        for b, g, r in rows[y]:
-            line += bytes((b, g, r))
-        line += bytes(stride - len(line))
-        body += line
+    body = _dib_pack(rows)
     off = 14 + 40
     return (
         struct.pack("<2sIHHI", b"BM", off + len(body), 0, 0, off)
         + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0)
-        + bytes(body)
+        + body
     )
 
 
@@ -319,17 +319,7 @@ def bmp_decode(data: bytes) -> tuple[int, int, list[list[tuple[int, int, int]]]]
     (compression,) = struct.unpack_from("<I", data, 30)
     if bpp != 24 or compression != 0:
         raise ValueError(f"unsupported BMP: bpp={bpp} compression={compression}")
-    bottom_up = h > 0
-    h = abs(h)
-    stride = (w * 3 + 3) & ~3
-    rows = []
-    for yy in range(h):
-        src_y = (h - 1 - yy) if bottom_up else yy
-        base = off + src_y * stride
-        rows.append(
-            [tuple(data[base + 3 * x : base + 3 * x + 3]) for x in range(w)]
-        )
-    return w, h, rows
+    return w, abs(h), _dib_unpack(data, off, w, abs(h), bottom_up=h > 0)
 
 
 def ppm_encode(rows: list[list[tuple[int, int, int]]]) -> bytes:
@@ -491,30 +481,44 @@ def decode_any(data: bytes) -> tuple[int, int, list[list[tuple[int, int, int]]]]
     )
 
 
-def _synth_pixel_rows(doc_id: int) -> list[list[tuple[int, int, int]]]:
-    """The analytic test-pattern: dims and channel values are pure
-    integer functions of doc_id, so an SQL oracle can compute every
-    decoded-pixel statistic WITHOUT parsing containers — any decoder
-    bug (stride, row order, filter math) then shows up as a parity
-    mismatch."""
-    w = 4 + doc_id % 4
-    h = 3 + doc_id % 3
+def _synth_frame(doc_id: int, f: int, w: int, h: int) -> list[list[tuple[int, int, int]]]:
+    """The analytic test pattern of frame ``f`` (an image is frame 0):
+    every channel value is an integer function of (doc_id, f, x, y), so
+    an SQL oracle can compute every decoded-pixel statistic WITHOUT
+    parsing containers — any decoder bug (stride, row order, filter
+    math, frame order) then shows up as a parity mismatch."""
     rows = []
     for y in range(h):
         row = []
         for x in range(w):
-            gray = (doc_id * 31 + x * 7 + y * 13) % 256
-            row.append((gray, (gray + 85) % 256, (gray + 170) % 256))
+            v = (doc_id * 31 + f * 19 + x * 7 + y * 13) % 256
+            row.append((v, (v + 85) % 256, (v + 170) % 256))
         rows.append(row)
     return rows
 
 
+def _synth_pixel_rows(doc_id: int) -> list[list[tuple[int, int, int]]]:
+    """One image per doc_id: the analytic pattern at 4..7 x 3..5 px."""
+    return _synth_frame(doc_id, 0, 4 + doc_id % 4, 3 + doc_id % 3)
+
+
+# the (doc_id, payload) output of all three synthesizers
 IMAGE_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
         StructField("payload", BinaryType()),
     ]
 )
+
+
+def _synthesize(documents: DataFrame, encode) -> DataFrame:
+    """One ``encode(doc_id)`` container per document, as (doc_id, payload)."""
+
+    def synth(doc_id):
+        yield doc_id, encode(int(doc_id))
+
+    return _map_rows(documents, IMAGE_SCHEMA, synth, cols=("doc_id",))
+
 
 STATS_SCHEMA = StructType(
     [
@@ -535,20 +539,15 @@ def synthesize_images(documents: DataFrame) -> DataFrame:
     scanline filters by doc_id), the rest PPMs — so one table carries
     three container formats, like a real crawl dump."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                rows = _synth_pixel_rows(int(doc_id))
-                if doc_id % 2 == 0:
-                    payloads.append(bmp_encode(rows))
-                elif doc_id % 4 == 1:
-                    payloads.append(png_encode(rows, filter_type=1 + int(doc_id) // 4 % 4))
-                else:
-                    payloads.append(ppm_encode(rows))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def encode(doc_id: int) -> bytes:
+        rows = _synth_pixel_rows(doc_id)
+        if doc_id % 2 == 0:
+            return bmp_encode(rows)
+        if doc_id % 4 == 1:
+            return png_encode(rows, filter_type=1 + doc_id // 4 % 4)
+        return ppm_encode(rows)
 
-    return documents.select("doc_id").mapInPandas(run, IMAGE_SCHEMA)
+    return _synthesize(documents, encode)
 
 
 def image_pixel_stats(images: DataFrame) -> DataFrame:
@@ -558,31 +557,29 @@ def image_pixel_stats(images: DataFrame) -> DataFrame:
     extrema alone cannot distinguish a correctly-decoded image from one
     read bottom-up or with a wrong stride, the moment can."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "width", "height", "px_sum", "px_min", "px_max", "px_moment")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, rows = decode_any(bytes(payload))
-                vals = [v for row in rows for px in row for v in px]
-                moment = sum(
-                    (y * w + x) * rows[y][x][0] for y in range(h) for x in range(w)
-                )
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["px_sum"].append(sum(vals))
-                out["px_min"].append(min(vals) if vals else 0)
-                out["px_max"].append(max(vals) if vals else 0)
-                out["px_moment"].append(moment)
-            yield pd.DataFrame(out)
+    def stats(doc_id, payload):
+        w, h, rows = decode_any(bytes(payload))
+        vals = [v for row in rows for px in row for v in px]
+        moment = sum(
+            (y * w + x) * rows[y][x][0] for y in range(h) for x in range(w)
+        )
+        yield (
+            doc_id,
+            w,
+            h,
+            sum(vals),
+            min(vals) if vals else 0,
+            max(vals) if vals else 0,
+            moment,
+        )
 
-    return images.mapInPandas(run, STATS_SCHEMA)
+    return _map_rows(images, STATS_SCHEMA, stats)
 
 
 # ---------------------------------------------------------------------------
-# REAL audio container (round 6): 16-bit PCM WAV. Synthesis goes through
-# the stdlib `wave` module; decoding is a hand-rolled RIFF chunk parser
-# (fmt + data, chunk-order agnostic, odd-size padding) — two independent
+# REAL audio container: 16-bit PCM WAV. Synthesis goes through the stdlib
+# `wave` module; decoding is a hand-rolled RIFF chunk parser (fmt + data,
+# chunk-order agnostic, odd-size padding) — two independent
 # implementations of the container, so a parse bug cannot cancel out.
 # ---------------------------------------------------------------------------
 
@@ -671,15 +668,11 @@ def synthesize_audio(documents: DataFrame) -> DataFrame:
     """One real 16-bit PCM WAV per document (mono/stereo and sample
     rate varying by doc_id)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                rate, frames = _synth_audio(int(doc_id))
-                payloads.append(wav_encode(frames, sample_rate=rate))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def encode(doc_id: int) -> bytes:
+        rate, frames = _synth_audio(doc_id)
+        return wav_encode(frames, sample_rate=rate)
 
-    return documents.select("doc_id").mapInPandas(run, IMAGE_SCHEMA)
+    return _synthesize(documents, encode)
 
 
 def audio_sample_stats(audio: DataFrame) -> DataFrame:
@@ -688,43 +681,38 @@ def audio_sample_stats(audio: DataFrame) -> DataFrame:
     sample ORDER, so frame interleaving or endianness bugs cannot hide
     behind the order-invariant aggregates."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "n_frames", "n_channels", "sample_rate",
-                "s_sum", "s_min", "s_max", "zero_crossings",
-            )}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                nch, rate, frames = wav_decode(bytes(payload))
-                flat = [s for fr in frames for s in fr]
-                ch0 = [fr[0] for fr in frames]
-                zc = sum(
-                    1
-                    for i in range(1, len(ch0))
-                    if (ch0[i - 1] < 0) != (ch0[i] < 0)
-                )
-                out["doc_id"].append(doc_id)
-                out["n_frames"].append(len(frames))
-                out["n_channels"].append(nch)
-                out["sample_rate"].append(rate)
-                out["s_sum"].append(sum(flat))
-                out["s_min"].append(min(flat) if flat else 0)
-                out["s_max"].append(max(flat) if flat else 0)
-                out["zero_crossings"].append(zc)
-            yield pd.DataFrame(out)
+    def stats(doc_id, payload):
+        nch, rate, frames = wav_decode(bytes(payload))
+        flat = [s for fr in frames for s in fr]
+        ch0 = [fr[0] for fr in frames]
+        zc = sum(
+            1
+            for i in range(1, len(ch0))
+            if (ch0[i - 1] < 0) != (ch0[i] < 0)
+        )
+        yield (
+            doc_id,
+            len(frames),
+            nch,
+            rate,
+            sum(flat),
+            min(flat) if flat else 0,
+            max(flat) if flat else 0,
+            zc,
+        )
 
-    return audio.mapInPandas(run, AUDIO_STATS_SCHEMA)
+    return _map_rows(audio, AUDIO_STATS_SCHEMA, stats)
 
 
 # ---------------------------------------------------------------------------
-# REAL video container (round 7): uncompressed AVI (RIFF, like WAV)
-# carrying raw 24-bit BGR 'DIB ' frames — completing the image/audio/
-# video triad with the same independent-implementations trick: the
-# encoder composes the RIFF tree forward with explicit struct fields;
-# the decoder is a generic RIFF chunk walker that shares no code with
-# it, so a container bug cannot cancel out. Frames are stored exactly
-# as Video-for-Windows stores uncompressed DIBs: bottom-up rows with
-# 4-byte stride padding (the same two traps as BMP).
+# REAL video container: uncompressed AVI (RIFF, like WAV) carrying raw
+# 24-bit BGR 'DIB ' frames — completing the image/audio/video triad with
+# the same independent-implementations trick: the encoder composes the
+# RIFF tree forward with explicit struct fields; the decoder is a generic
+# RIFF chunk walker that shares no code with it, so a container bug
+# cannot cancel out. Frames are stored exactly as Video-for-Windows
+# stores uncompressed DIBs: bottom-up rows with 4-byte stride padding
+# (the same two traps as BMP, and the same _dib_pack / _dib_unpack).
 # ---------------------------------------------------------------------------
 
 
@@ -738,8 +726,8 @@ def avi_encode(
     n = len(frames)
     h = len(frames[0]) if n else 0
     w = len(frames[0][0]) if h else 0
-    stride = (w * 3 + 3) & ~3
-    frame_sz = stride * h
+    frame_blobs = [_dib_pack(fr) for fr in frames]
+    frame_sz = len(frame_blobs[0]) if n else 0
 
     def chunk(tag: bytes, payload: bytes) -> bytes:
         return tag + struct.pack("<I", len(payload)) + payload + (
@@ -748,17 +736,6 @@ def avi_encode(
 
     def lst(kind: bytes, payload: bytes) -> bytes:
         return chunk(b"LIST", kind + payload)
-
-    frame_blobs = []
-    for fr in frames:
-        body = bytearray()
-        for y in range(h - 1, -1, -1):  # bottom-up, like BMP
-            line = bytearray()
-            for b, g, r in fr[y]:
-                line += bytes((b, g, r))
-            line += bytes(stride - len(line))
-            body += line
-        frame_blobs.append(bytes(body))
 
     avih = struct.pack(
         "<IIIIIIIIII4I",
@@ -793,14 +770,14 @@ def _riff_walk(buf: bytes, pos: int, end: int):
     (tag, payload_start, payload_end) for every chunk; LIST chunks
     yield their kind tag and then their children before the following
     sibling, so overall order is the stream order (a naive LIFO of
-    sibling ranges reverses them — the round-7 'rec ' list bug).
+    sibling ranges reverses them, which flips frame order whenever
+    frames sit inside 'rec ' wrapper lists).
 
     Iterative with an explicit continuation stack and CLAMPED bounds:
     corrupt blobs pass magic checks too (truncated files whose declared
     chunk lengths run past the buffer, or ~1000-deep nested LISTs) and
-    must neither raise struct.error nor blow the recursion limit
-    (review findings, repro'd) — at corpus scale the walker sees
-    whatever bytes the crawl stored."""
+    must neither raise struct.error nor blow the recursion limit — at
+    corpus scale the walker sees whatever bytes the crawl stored."""
     end = min(end, len(buf))
     stack = [(pos, end)]
     while stack:
@@ -835,7 +812,7 @@ def _avi_parse(data: bytes) -> tuple[int, int, list[bytes]]:
         # the walker CLAMPS declared chunk lengths to the buffer, so a
         # truncated file can hand us an avih/strf payload shorter than
         # the fields we read — bounds-check first so callers see the
-        # documented ValueError, never a struct.error (round-8 ADVICE)
+        # documented ValueError, never a struct.error
         if tag == b"avih":
             if end - start < 40:
                 raise ValueError("truncated avih header")
@@ -855,9 +832,8 @@ def _avi_parse(data: bytes) -> tuple[int, int, list[bytes]]:
             f"unsupported AVI: bitcount={bitcount} compression={compression} "
             "(only uncompressed 24-bit DIB streams)"
         )
-    stride = (w * 3 + 3) & ~3
     for fb in frame_bytes:
-        if len(fb) < stride * h:
+        if len(fb) < _dib_stride(w) * h:
             raise ValueError("short frame chunk")
     return w, h, frame_bytes
 
@@ -870,53 +846,26 @@ def avi_decode(
     returns (width, height, frames) with frames[f][y][x] = (b, g, r),
     y=0 top. Raises on any other AVI flavor."""
     w, h, frame_bytes = _avi_parse(data)
-    stride = (w * 3 + 3) & ~3
-    frames = []
-    for fb in frame_bytes:
-        rows = []
-        for y in range(h - 1, -1, -1):  # stored bottom-up
-            base = y * stride
-            rows.append(
-                [tuple(fb[base + 3 * x : base + 3 * x + 3]) for x in range(w)]
-            )
-        frames.append(rows)
-    return w, h, frames
+    return w, h, [_dib_unpack(fb, 0, w, h) for fb in frame_bytes]
 
 
 def _avi_frame_chunks(data: bytes) -> list[bytes]:
     """Raw frame chunks in stream order (for the sample_frames fan-out,
-    which wants bytes, not decoded pixels). Routed through _avi_parse
-    (round-8 ADVICE fix): the previous standalone walk skipped the
-    strf bitcount/compression validation, so a COMPRESSED AVI silently
-    yielded codec bitstream bytes as 'frames' — now any stream that is
-    not uncompressed 24-bit DIB raises the same ValueError avi_decode
+    which wants bytes, not decoded pixels). Routed through _avi_parse so
+    its strf bitcount/compression validation applies: a COMPRESSED AVI
+    must not yield codec bitstream bytes as 'frames', so any stream that
+    is not uncompressed 24-bit DIB raises the same ValueError avi_decode
     raises, and sample_frames skips it like every other unsupported
-    format. Stream order is the order-preserving walker's — a previous
-    LIFO-stack version reversed sibling LIST order, which flipped
-    frame order whenever frames sat inside 'rec ' wrapper lists
-    (round-7 review finding, regression-tested)."""
+    format."""
     return _avi_parse(data)[2]
 
 
 def _synth_video_frames(doc_id: int) -> list[list[list[tuple[int, int, int]]]]:
-    """Analytic frame pattern (triad twin of _synth_pixel_rows /
-    _synth_audio): every channel value is an integer function of
-    (doc_id, frame, x, y), so the SQL oracle computes decoded-frame
-    statistics without parsing RIFF."""
+    """One video per doc_id: 2..4 frames of the analytic pattern
+    (_synth_frame) at 4..6 x 2..3 px."""
     w = 4 + doc_id % 3
     h = 2 + doc_id % 2
-    n = 2 + doc_id % 3
-    frames = []
-    for f in range(n):
-        rows = []
-        for y in range(h):
-            row = []
-            for x in range(w):
-                b = (doc_id * 31 + f * 19 + x * 7 + y * 13) % 256
-                row.append((b, (b + 85) % 256, (b + 170) % 256))
-            rows.append(row)
-        frames.append(rows)
-    return frames
+    return [_synth_frame(doc_id, f, w, h) for f in range(2 + doc_id % 3)]
 
 
 VIDEO_STATS_SCHEMA = StructType(
@@ -935,16 +884,7 @@ VIDEO_STATS_SCHEMA = StructType(
 def synthesize_videos(documents: DataFrame) -> DataFrame:
     """One real uncompressed AVI per document (dims and frame count
     varying by doc_id)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                avi_encode(_synth_video_frames(int(doc_id)))
-                for doc_id in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return documents.select("doc_id").mapInPandas(run, IMAGE_SCHEMA)
+    return _synthesize(documents, lambda doc_id: avi_encode(_synth_video_frames(doc_id)))
 
 
 def video_frame_stats(videos: DataFrame, *, every_nth: int = 2) -> DataFrame:
@@ -958,41 +898,35 @@ def video_frame_stats(videos: DataFrame, *, every_nth: int = 2) -> DataFrame:
 
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "frame_idx", "width", "height", "n_frames",
-                "px_sum", "px_moment",
-            )}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                # vectorized stats kernel: parse headers + raw chunks,
-                # then compute per-frame sums from a numpy view — no
-                # per-pixel Python objects. Interleaved A/B vs the
-                # tuple-building avi_decode path at sf0.1: EQUAL
-                # (0.60-0.68 vs 0.62-0.74) because fixture frames are
-                # <=30 px and numpy setup costs what the tiny loop
-                # costs; kept because real frames are 1e5-1e6 px where
-                # the per-pixel path is the 100x-slower one. avi_decode
-                # remains the reference decoder; a test pins both paths
-                # to identical stats. Exact: uint8 values, h*w < 2^20,
-                # so every sum fits int64 with no rounding anywhere.
-                w, h, frame_bytes = _avi_parse(bytes(payload))
-                stride = (w * 3 + 3) & ~3
-                # y*w + x moment weights for TOP-DOWN rows
-                weights = np.arange(h * w, dtype=np.int64).reshape(h, w)
-                for f in range(0, len(frame_bytes), every_nth):
-                    raw = np.frombuffer(
-                        frame_bytes[f], dtype=np.uint8, count=stride * h
-                    ).reshape(h, stride)
-                    px = raw[::-1, : w * 3]  # bottom-up -> top-down, unpad
-                    blue = px[:, 0::3].astype(np.int64)
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(f)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["n_frames"].append(len(frame_bytes))
-                    out["px_sum"].append(int(px.sum(dtype=np.int64)))
-                    out["px_moment"].append(int((weights * blue).sum()))
-            yield pd.DataFrame(out)
+    def stats(doc_id, payload):
+        # vectorized stats kernel: parse headers + raw chunks, then
+        # compute per-frame sums from a numpy view — no per-pixel Python
+        # objects. Interleaved A/B vs the tuple-building avi_decode path
+        # at sf0.1: EQUAL (0.60-0.68 vs 0.62-0.74) because fixture
+        # frames are <=30 px and numpy setup costs what the tiny loop
+        # costs; kept because real frames are 1e5-1e6 px where the
+        # per-pixel path is the 100x-slower one. avi_decode remains the
+        # reference decoder; a test pins both paths to identical stats.
+        # Exact: uint8 values, h*w < 2^20, so every sum fits int64 with
+        # no rounding anywhere.
+        w, h, frame_bytes = _avi_parse(bytes(payload))
+        stride = _dib_stride(w)
+        # y*w + x moment weights for TOP-DOWN rows
+        weights = np.arange(h * w, dtype=np.int64).reshape(h, w)
+        for f in range(0, len(frame_bytes), every_nth):
+            raw = np.frombuffer(
+                frame_bytes[f], dtype=np.uint8, count=stride * h
+            ).reshape(h, stride)
+            px = raw[::-1, : w * 3]  # bottom-up -> top-down, unpad
+            blue = px[:, 0::3].astype(np.int64)
+            yield (
+                doc_id,
+                f,
+                w,
+                h,
+                len(frame_bytes),
+                int(px.sum(dtype=np.int64)),
+                int((weights * blue).sum()),
+            )
 
-    return videos.mapInPandas(run, VIDEO_STATS_SCHEMA)
+    return _map_rows(videos, VIDEO_STATS_SCHEMA, stats)

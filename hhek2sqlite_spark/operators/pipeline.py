@@ -428,10 +428,14 @@ def repetition_profile(
     c = F.col(id_col)
 
     def counts_of(norm: Column) -> Column:
-        grams = char_ngrams(norm, n)
-        return F.struct(
-            F.size(grams).alias("t"),
-            F.size(F.array_distinct(grams)).alias("d"),
+        # the shingle array is used twice, so it is let-bound too: each
+        # reference would otherwise rebuild it over every character
+        return let_once(
+            char_ngrams(norm, n),
+            lambda grams: F.struct(
+                F.size(grams).alias("t"),
+                F.size(F.array_distinct(grams)).alias("d"),
+            ),
         )
 
     staged = documents.select(

@@ -1975,7 +1975,7 @@ FROM px GROUP BY doc_id
 """
 
 
-# DuckDB twin of _fake_decode_batch (operators/multimodal.py): byte values
+# DuckDB twin of _fake_decode_row (operators/multimodal.py): byte values
 # recovered from hex(encode(text)) nibble pairs; s = sum of first 256 bytes.
 _HEXPOS = "strpos('0123456789ABCDEF', substr(h, CAST({j} AS INTEGER), 1)) - 1"
 _BYTE_AT = f"(16 * ({_HEXPOS.format(j='2*{i} - 1')}) + ({_HEXPOS.format(j='2*{i}')}))"

@@ -29,9 +29,11 @@ def test_bmp_round_trip_and_header():
 
 @pytest.mark.parametrize("w,h", [(1, 1), (3, 2), (4, 3), (5, 7)])
 def test_bmp_stride_padding_all_widths(w, h):
-    # w=3 -> 9-byte rows padded to 12; w=4 -> no padding; both must work
+    # w=3 -> 9-byte rows padded to 12; w=4 -> no padding; both must work,
+    # in BMP files and in AVI frames (the same DIB row layout)
     rows = _pattern(w, h)
     assert m.bmp_decode(m.bmp_encode(rows)) == (w, h, rows)
+    assert m.avi_decode(m.avi_encode([rows])) == (w, h, [rows])
 
 
 @pytest.mark.parametrize("ft", [0, 1, 2, 3, 4])

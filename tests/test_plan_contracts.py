@@ -120,6 +120,15 @@ def test_repetition_profile_zero_exchange(spark, sf_dir):
     assert not hash_exchanges, p
 
 
+def test_repetition_profile_builds_shingles_once(spark, sf_dir):
+    # the shingle array feeds both size() and size(array_distinct()); it
+    # must be let-bound, so the optimized plan builds the per-position
+    # transform over sequence(...) once per document, not once per use
+    df = QUERIES["repetition_profile"](spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("sequence(") == 1, plan
+
+
 def test_pack_chunks_single_hash_exchange_on_shard(spark, sf_dir):
     # the packing window must shuffle exactly once, keyed by the shard —
     # a global (unpartitioned) window would be a scale bug
